@@ -49,10 +49,11 @@ final class BenchQueryListener extends SparkListener {
     windowStages.add(e.stageInfo.stageId)
     // stageInfo.name's callsite is often a thread-pool frame (broadcast
     // exchanges submit from withThreadLocalCaptured); the first graft.*
-    // frame in the long-form callstack names the actual operator
+    // frame outside the timing harness (Bench, Inspect) in the long-form
+    // callstack names the actual operator
     val graftFrame = e.stageInfo.details.linesIterator
       .find(l => l.contains("graft.") && !l.contains("graft.Bench") &&
-        !l.contains("BenchQueryListener"))
+        !l.contains("BenchQueryListener") && !l.contains("graft.tools.Inspect"))
       .map(_.trim)
     stageName.put(e.stageInfo.stageId,
       graftFrame.getOrElse(e.stageInfo.name))
@@ -142,6 +143,17 @@ final class BenchQueryListener extends SparkListener {
     stageCpuMs.asScala.values.map(_.get()).sum
   }
 
+  /** This window's stages, heaviest summed executor run time first:
+    * (stage id, run ms, CPU ms, callsite). */
+  def stageTimes: Seq[(Int, Long, Long, String)] = {
+    import scala.jdk.CollectionConverters._
+    stageRunMs.asScala.toSeq
+      .map { case (sid, run) =>
+        (sid, run.get(), Option(stageCpuMs.get(sid)).fold(0L)(_.get()),
+          Option(stageName.get(sid)).getOrElse("?")) }
+      .sortBy { case (sid, run, _, _) => (-run, sid) }
+  }
+
   /** The query's top-3 stages by summed executor run time, with their
     * callsites — the stage-attributed profile that lets a cross-host
     * CPU divergence (round-8's a24/a23/q46 cluster: 2.5–10.6× CPU on
@@ -149,15 +161,10 @@ final class BenchQueryListener extends SparkListener {
     * host's own artifact instead of a local replay that may not
     * reproduce it. */
   def topStages(n: Int = 3): String = {
-    import scala.jdk.CollectionConverters._
     def esc(s: String): String =
       s.replace("\\", "\\\\").replace("\"", "\\\"")
         .replaceAll("[\\x00-\\x1f]", " ")
-    stageRunMs.asScala.toSeq
-      .map { case (sid, run) =>
-        (sid, run.get(), Option(stageCpuMs.get(sid)).fold(0L)(_.get()),
-          Option(stageName.get(sid)).getOrElse("?")) }
-      .sortBy { case (sid, run, _, _) => (-run, sid) }.take(n)
+    stageTimes.take(n)
       .map { case (sid, run, cpu, nm) =>
         s"""{"stage":$sid,"run_ms":$run,"cpu_ms":$cpu,"name":"${esc(nm)}"}"""
       }.mkString("[", ",", "]")

@@ -1334,7 +1334,7 @@ object Dedup {
     *
     * Scale posture: the signature is one array row per doc (no lane
     * shuffle at all — the aggregated lane-row form cost 12 s of
-    * persist alone at sf0.1, see ProfileD19); each plan's candidate
+    * persist alone at sf0.1); each plan's candidate
     * join is the usual LSH bucket self-join (hot-bucket quadratic
     * edge — callers at scale would add the minHashLshPairs maxBucketDf
     * guard; the sweep reports the volume that motivates it).

@@ -200,10 +200,6 @@ object IndexStore {
                         (train: => ProductQuantizer.IvfPqModel)
       : ProductQuantizer.IvfPqModel = {
     requireLocalPath(path)
-    requireLocalPath(path)
-    requireLocalPath(path)
-    requireLocalPath(path)
-    requireLocalPath(path)
     val p = java.nio.file.Paths.get(path)
     // A load failure must only DELETE the shared artifact when the
     // artifact itself is bad (corrupt/partial/version-skewed tree) —

@@ -76,8 +76,7 @@ object Sq8 {
     * (higher-order functions are CodegenFallback), measured as 124 s
     * of the 129 s a25 bench cost at sf0.1. Element-aligned zip_with
     * has no per-element array indexing to inline: one linear pass per
-    * row wherever the optimizer splices it (0.7 s after the rewrite,
-    * ProfileSq8 pins the stage timings). */
+    * row wherever the optimizer splices it (0.7 s after the rewrite). */
   private def r255FromVec(vecCol: String, model: Model): Column = {
     val mn = model.minQ.mkString("array(", ", ", ")")
     val mx = model.maxQ.mkString("array(", ", ", ")")

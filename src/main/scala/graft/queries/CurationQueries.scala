@@ -1199,9 +1199,9 @@ object CurationQueries {
 
   /** Planted line structure for the boilerplate queries: a per-source
     * nav header, the document's words in 10-word body lines, and a
-    * per-source footer, '\n'-joined. ONE definition — t20, p18, and the
-    * profiling harness must stay in sync with the DuckDB oracles that
-    * replay this construction. */
+    * per-source footer, '\n'-joined. ONE definition — t20, p18, and
+    * perfbench's stage-by-stage p18 (`--trace 1`) must stay in sync
+    * with the DuckDB oracles that replay this construction. */
   def withPlantedLines(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("source"),
       expr("""array_join(concat(

@@ -1,13 +1,13 @@
 package graft.sinks
 
-import java.net.URI
-import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.net.http.HttpClient
 import java.time.Duration
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.util.LongAccumulator
 
 import graft.pipeline.VectorRecord
+import graft.sinks.VectorDbSinks.q
 
 /** Vector sinks (SURVEY.md §2.6). The vector-DB uploads (Pinecone /
   * Qdrant / Weaviate, K1-K3) and the raw-embeddings webhook (K4) all
@@ -46,27 +46,10 @@ object Sinks {
       it.grouped(batchSize).foreach { batch =>
         val body = batch.map { r =>
           val vec = r.vector.mkString("[", ",", "]")
-          s"""{"id":"${r.id}","source_text":${quote(r.source_text)},"source_document":${quote(r.source_document)},"vector":$vec}"""
-        }.mkString("""{"Embeddings":[""", ",", s"""],"DocumentID":"","JobID":${quote(jobId)}}""")
-        var attempt = 0
-        var ok = false
-        while (!ok && attempt < attempts) {
-          try {
-            val req = HttpRequest.newBuilder(URI.create(url))
-              .timeout(Duration.ofSeconds(30))
-              .header("Content-Type", "application/json")
-              .header("X-Embeddings-Webhook-Key", key)
-              .POST(HttpRequest.BodyPublishers.ofString(body))
-              .build()
-            val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
-            ok = resp.statusCode() == 200
-          } catch { case _: java.io.IOException => }
-          if (!ok) {
-            attempt += 1
-            if (attempt < attempts && baseDelayMs > 0)
-              Thread.sleep(baseDelayMs * (1L << (attempt - 1)))
-          }
-        }
+          s"""{"id":"${r.id}","source_text":${q(r.source_text)},"source_document":${q(r.source_document)},"vector":$vec}"""
+        }.mkString("""{"Embeddings":[""", ",", s"""],"DocumentID":"","JobID":${q(jobId)}}""")
+        val ok = VectorDbSinks.postWithRetry(client, url,
+          ("X-Embeddings-Webhook-Key", key), body, attempts, baseDelayMs)
         if (ok) { if (sent != null) sent.add(batch.length.toLong) }
         else if (failed != null) failed.add(batch.length.toLong)
       }
@@ -86,20 +69,5 @@ object Sinks {
     ds.mapPartitions { it =>
       it.grouped(batchSize).flatMap(b => validate(b.toSeq))
     }
-  }
-
-  private def quote(s: String): String = {
-    val b = new StringBuilder(s.length + 8)
-    b.append('"')
-    s.foreach {
-      case '"' => b.append("\\\"")
-      case '\\' => b.append("\\\\")
-      case '\n' => b.append("\\n")
-      case '\r' => b.append("\\r")
-      case '\t' => b.append("\\t")
-      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
-      case c => b.append(c)
-    }
-    b.append('"').result()
   }
 }

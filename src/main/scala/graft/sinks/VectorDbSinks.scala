@@ -86,8 +86,9 @@ object VectorDbSinks {
 
   /** POST `body` to `url` with `attempts` tries and exponential backoff
     * starting at `baseDelayMs`; returns success. Shared transport for
-    * the foreachPartition sink and the DataSourceV2 writer — a protocol
-    * fix (status handling, retry policy) lands in exactly one place. */
+    * the foreachPartition sink, the DataSourceV2 writer and the webhook
+    * — a protocol fix (status handling, retry policy) lands in exactly
+    * one place. */
   private[sinks] def postWithRetry(client: HttpClient, url: String,
                                    auth: (String, String), body: String,
                                    attempts: Int, baseDelayMs: Long): Boolean = {
@@ -137,7 +138,8 @@ object VectorDbSinks {
     }
   }
 
-  private def q(s: String): String = {
+  /** `s` as a JSON string literal. */
+  private[sinks] def q(s: String): String = {
     val b = new StringBuilder(s.length + 8).append('"')
     s.foreach {
       case '"' => b.append("\\\"")

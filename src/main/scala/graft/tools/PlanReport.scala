@@ -815,7 +815,7 @@ object PlanReport {
         |sketch-building scan; the silhouette's fan-out is |vectors|·k
         |against broadcast centroids.
         |
-        |TextTiling's 10×, stage-attributed (graft.tools.ProfileT43,
+        |TextTiling's 10×, stage-attributed (a one-off stage profiler,
         |parquet-staged inputs at both scales so the cells are
         |comparable): the dominant stage at 10× is the (doc, block,
         |word-hash) COUNT BUILD — the corpus scan + md5 hashing + the

@@ -262,4 +262,20 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!p.contains("SortMergeJoin"),
       s"the medians join must not shuffle the events:\n$p")
   }
+
+  test("d03: the MinHash signature is computed once, never inlined into the band lambda") {
+    // ProjectCollapse can splice a computed array column into a
+    // per-element lambda body, re-evaluating it once per element (the
+    // a25 failure mode); the optimized plan shows it as a second copy.
+    // The persisted candidate-pair relation that holds the signature
+    // prints its plan under each of its references, so the check counts
+    // distinct minhash_words expressions, not printed lines.
+    val p = SparkEntry.queries("d03_dedup_minhash")(spark, dir)
+      .queryExecution.optimizedPlan.toString
+    val sigs = "minhash_words.*".r.findAllIn(p).toSet
+    assert(sigs.size == 1,
+      s"minhash_words must appear once in the optimized plan:\n${sigs.mkString("\n")}\n$p")
+    assert(!p.contains("hash(slice(minhash_words"),
+      s"the signature was inlined into the band lambda:\n$p")
+  }
 }

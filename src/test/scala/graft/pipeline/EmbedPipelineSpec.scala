@@ -87,9 +87,17 @@ class EmbedPipelineSpec extends AnyFunSuite {
         respond(ex, 200, s"""{"data":[$data]}""")
       }
     })
+    // the first webhook POST is refused with a 503 and must be retried;
+    // every request, refused or not, must carry the key header
+    val hookFailFirst = new AtomicInteger(1)
+    val hookRequests, hookKeyed = new AtomicInteger(0)
     server.createContext("/webhook", (ex: HttpExchange) => {
-      received.add(new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8))
-      respond(ex, 200, "ok")
+      val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+      hookRequests.incrementAndGet()
+      if (ex.getRequestHeaders.getFirst("X-Embeddings-Webhook-Key") == "secret")
+        hookKeyed.incrementAndGet()
+      if (hookFailFirst.getAndDecrement() > 0) respond(ex, 503, "busy")
+      else { received.add(body); respond(ex, 200, "ok") }
     })
     server.start()
     val port = server.getAddress.getPort
@@ -106,11 +114,20 @@ class EmbedPipelineSpec extends AnyFunSuite {
         val i = r.source_text.stripPrefix("text").toInt
         assert(r.vector.toSeq == Seq(i.toFloat, 1f), s"index tag broken for $i")
       }
-      // webhook sink: 10 records, batch size 4 -> 3 POSTs
+      // webhook sink: 10 records, batch size 4 -> 3 batches, the first
+      // refused once -> 4 POSTs, every batch delivered exactly once
+      val sent = spark.sparkContext.longAccumulator("webhook-sent")
+      val failed = spark.sparkContext.longAccumulator("webhook-failed")
       Sinks.webhook(EmbedPipeline.embedStage(chunks, embedder),
-        s"http://127.0.0.1:$port/webhook", "secret", "job-1", batchSize = 4, baseDelayMs = 1L)
+        s"http://127.0.0.1:$port/webhook", "secret", "job-1", batchSize = 4,
+        baseDelayMs = 1L, sent = sent, failed = failed)
+      assert(hookRequests.get() == 4, "the 503 was not retried")
+      assert(hookKeyed.get() == 4, "a request went out without the key header")
       assert(received.size() == 3)
       assert(received.asScala.forall(_.contains("\"JobID\":\"job-1\"")))
+      val ids = received.asScala.toSeq.flatMap("\"id\":\"([^\"]*)\"".r.findAllMatchIn(_).map(_.group(1)))
+      assert(ids.sorted == out.map(_.id).toSeq.sorted, "a record was lost or delivered twice")
+      assert(sent.value == 10L && failed.value == 0L)
     } finally server.stop(0)
   }
 

@@ -1,0 +1,42 @@
+package graft.tools
+
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.SparkSession
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Smoke test for [[Inspect]]'s entry function: plan dump, timings and
+  * the unknown-name failure. */
+class InspectSpec extends AnyFunSuite {
+
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4, 2]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  // the sf0.001 tables behind the registry's smoke query
+  private lazy val sfDir = new org.apache.hadoop.fs.Path(
+    graft.SparkEntry.entry(spark).inputFiles.head).getParent.toString
+
+  test("p08: the plan dump is formatted explain output and warm runs are timed") {
+    val out = Files.createTempDirectory("inspect")
+    val dump = out.resolve("p08_embed_pipeline.txt")
+    try {
+      val r = Inspect.inspect(spark, "p08_embed_pipeline", sfDir, out)
+      val plan = new String(Files.readAllBytes(dump), StandardCharsets.UTF_8)
+      assert(plan.startsWith("== Physical Plan =="), plan.take(200))
+      assert(r.rows > 0)
+      assert(r.warmSec.length == Inspect.WarmRuns && r.warmSec.forall(_ > 0))
+      assert(r.stages.nonEmpty, "no stage was attributed")
+      assert(Inspect.render(r).contains(f"median ${r.medianSec}%.3f s"))
+    } finally { Files.deleteIfExists(dump); Files.delete(out) }
+  }
+
+  test("an unknown query name fails with a message naming it") {
+    val e = intercept[IllegalArgumentException](
+      Inspect.inspect(spark, "no_such_query", sfDir, Paths.get("unused")))
+    assert(e.getMessage.contains("no_such_query"))
+  }
+}
