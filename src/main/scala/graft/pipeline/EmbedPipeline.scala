@@ -49,22 +49,25 @@ object EmbedPipeline {
   def embedStage(chunks: Dataset[ChunkRow], embedder: Embedder): Dataset[VectorRecord] = {
     val spark = chunks.sparkSession
     import spark.implicits._
-    chunks.mapPartitions { it =>
-      it.grouped(embedder.maxBatchSize).flatMap { group =>
-        val vecs = embedder.embedBatch(group.map(_.chunk_text).toIndexedSeq)
-        require(vecs.length == group.length,
-          s"embedder returned ${vecs.length} vectors for ${group.length} texts — refusing to zip-drop chunks silently")
-        group.iterator.zip(vecs.iterator).map { case (c, v) =>
-          // sink id carries document context (like the reference's
-          // uuid5(batch_id, job_id, i), vector_uploader.py:59) — chunk_id
-          // alone is uuid5(text, pos, label) and collides across
-          // documents that share a window
-          VectorRecord(Uuid5.ofParts(c.doc_id, c.chunk_seq, c.chunk_text),
-            c.chunk_text, c.source, v)
-        }
-      }
+    chunks.mapPartitions(_.grouped(embedder.maxBatchSize).flatMap(embedGroup(embedder, _)))
+  }
+
+  /** One group through the embedder, each chunk paired with its vector;
+    * a short answer fails the group rather than dropping chunks. */
+  private def embedGroup(embedder: Embedder, group: Seq[ChunkRow]): Iterator[VectorRecord] = {
+    val vecs = embedder.embedBatch(group.map(_.chunk_text).toIndexedSeq)
+    require(vecs.length == group.length,
+      s"embedder returned ${vecs.length} vectors for ${group.length} texts — refusing to zip-drop chunks silently")
+    group.iterator.zip(vecs.iterator).map { case (c, v) =>
+      VectorRecord(sinkId(c), c.chunk_text, c.source, v)
     }
   }
+
+  /** The sink id carries document context (like the reference's
+    * uuid5(batch_id, job_id, i), vector_uploader.py:59) — chunk_id alone
+    * is uuid5(text, pos, label) and collides across documents that share
+    * a window. */
+  private def sinkId(c: ChunkRow): String = Uuid5.ofParts(c.doc_id, c.chunk_seq, c.chunk_text)
 
   /** Full ingestion: the `/jobs` lifecycle as one DataFrame program. */
   def run(docs: DataFrame, strategy: ChunkStrategy = ChunkStrategy.ExactByCharacters,
@@ -87,26 +90,15 @@ object EmbedPipeline {
   def embedStageWithStatus(chunks: Dataset[ChunkRow], embedder: Embedder): Dataset[StatusRecord] = {
     val spark = chunks.sparkSession
     import spark.implicits._
-    chunks.mapPartitions { it =>
-      it.grouped(embedder.maxBatchSize).flatMap { group =>
-        try {
-          val vecs = embedder.embedBatch(group.map(_.chunk_text).toIndexedSeq)
-          require(vecs.length == group.length,
-            s"embedder returned ${vecs.length} vectors for ${group.length} texts")
-          group.iterator.zip(vecs.iterator).map { case (c, v) =>
-            StatusRecord(Uuid5.ofParts(c.doc_id, c.chunk_seq, c.chunk_text),
-              c.chunk_text, c.source, v, ok = true, error = "")
-          }
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            group.iterator.map { c =>
-              StatusRecord(Uuid5.ofParts(c.doc_id, c.chunk_seq, c.chunk_text),
-                c.chunk_text, c.source, Array.empty[Float], ok = false,
-                error = String.valueOf(e.getMessage))
-            }
-        }
+    chunks.mapPartitions(_.grouped(embedder.maxBatchSize).flatMap { group =>
+      try embedGroup(embedder, group).map(r =>
+        StatusRecord(r.id, r.source_text, r.source_document, r.vector, ok = true, error = ""))
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          group.iterator.map(c => StatusRecord(sinkId(c), c.chunk_text, c.source,
+            Array.empty[Float], ok = false, error = String.valueOf(e.getMessage)))
       }
-    }
+    })
   }
 
   /** A1 ledger over status records: COMPLETED when every batch

@@ -1,13 +1,12 @@
 package graft.pipeline
 
-import java.net.URI
-import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 import java.time.Duration
-import java.util.concurrent.{Executors, TimeUnit}
-import scala.jdk.CollectionConverters._
-import scala.util.control.NonFatal
+import java.util.concurrent.Executors
+
+import graft.sinks.VectorDbSinks
+import graft.sinks.VectorDbSinks.q
 
 /** Text → vector embedding stage (the reference pipeline's hot operator,
   * SURVEY.md §2.5).
@@ -96,60 +95,58 @@ final class Md5Embedder(override val dim: Int = 64) extends Embedder {
   }
 }
 
-/** Retry/backoff wrapper: `attempts` tries with exponential backoff
-  * `baseDelayMs * 2^i` (reference get_openai_embedding: 5 attempts,
-  * 2^i s backoff, src/worker/worker.py:77-90). */
-final class RetryingEmbedder(inner: Embedder, attempts: Int = 5,
-                             baseDelayMs: Long = 1000L) extends Embedder {
-  override def dim: Int = inner.dim
-  override def maxBatchSize: Int = inner.maxBatchSize
+/** The HTTP embedders' one body. A group of texts splits into
+  * `subBatchSize`-text sub-calls, fanned out over at most `concurrency`
+  * threads inside the Spark task. Each sub-call is one
+  * [[graft.sinks.VectorDbSinks.postWithRetry]] of 5 tries with a 2^i s
+  * backoff (reference get_openai_embedding, worker.py:77-90), so a
+  * transient failure resends only its own sub-batch; a sub-call that
+  * fails its last try fails the whole group (worker.py:92-113). Each
+  * sub-call's vectors keep its position, so response order cannot
+  * scramble the zip. Subclasses give only the wire format. */
+sealed abstract class HttpEmbedder(url: String, subBatchSize: Int, concurrency: Int)
+    extends Embedder {
+  override def maxBatchSize: Int = subBatchSize * concurrency
+
+  protected def headers: Seq[(String, String)]
+  protected def requestBody(texts: IndexedSeq[String]): String
+  private[pipeline] def parseResponse(body: String, n: Int): IndexedSeq[Array[Float]]
+
+  @transient private lazy val client = VectorDbSinks.httpClient()
+
+  private def call(texts: IndexedSeq[String]): IndexedSeq[Array[Float]] =
+    VectorDbSinks.postWithRetry(client, url, headers, requestBody(texts),
+        attempts = 5, baseDelayMs = 1000L, timeout = Duration.ofSeconds(60))
+      .fold(e => throw new java.io.IOException(s"embedding call to $url failed: $e"),
+        parseResponse(_, texts.length))
+
   override def embedBatch(texts: IndexedSeq[String]): IndexedSeq[Array[Float]] = {
-    var i = 0
-    var last: Throwable = null
-    while (i < attempts) {
-      try return inner.embedBatch(texts)
-      catch {
-        case NonFatal(e) =>
-          last = e
-          if (i < attempts - 1 && baseDelayMs > 0)
-            Thread.sleep(baseDelayMs * (1L << i))
-      }
-      i += 1
+    val subBatches = texts.grouped(subBatchSize).toIndexedSeq
+    if (concurrency <= 1 || subBatches.lengthCompare(1) <= 0) subBatches.flatMap(call)
+    else {
+      val pool = Executors.newFixedThreadPool(math.min(concurrency, subBatches.length))
+      try subBatches.map(b => pool.submit(() => call(b))).flatMap(_.get())
+      finally pool.shutdownNow()
     }
-    throw last
   }
 }
 
-/** OpenAI-compatible `/v1/embeddings` HTTP embedder over `java.net.http`.
+/** OpenAI-compatible `/v1/embeddings` HTTP embedder.
   *
   * Matches the reference's designed throughput envelope: ≤2048 texts per
-  * call (worker.py:96) fanned out over `concurrency` parallel calls per
-  * partition (MAX_THREADS_OPENAI=20, worker.py:100-102). Each sub-call is
-  * index-tagged so response order cannot scramble the zip. Intended for
-  * real deployments; tests exercise it against a local stub server. */
+  * call (worker.py:96) fanned out over 20 parallel calls per partition
+  * (MAX_THREADS_OPENAI=20, worker.py:100-102). The response's `index`
+  * tags place each vector. Intended for real deployments; tests exercise
+  * it against a local stub server. */
 final class OpenAiHttpEmbedder(baseUrl: String, model: String,
-                               apiKey: String, override val dim: Int,
-                               concurrency: Int = 20,
-                               subBatchSize: Int = 2048,
-                               timeout: Duration = Duration.ofSeconds(60)) extends Embedder {
-  override def maxBatchSize: Int = subBatchSize * concurrency
+                               apiKey: String, override val dim: Int)
+    extends HttpEmbedder(s"$baseUrl/v1/embeddings", subBatchSize = 2048, concurrency = 20) {
 
-  @transient private lazy val client: HttpClient =
-    HttpClient.newBuilder().connectTimeout(timeout).build()
+  override protected def headers: Seq[(String, String)] =
+    Seq("Authorization" -> s"Bearer $apiKey")
 
-  private def jsonEscape(s: String): String = {
-    val b = new StringBuilder(s.length + 8)
-    s.foreach {
-      case '"' => b.append("\\\"")
-      case '\\' => b.append("\\\\")
-      case '\n' => b.append("\\n")
-      case '\r' => b.append("\\r")
-      case '\t' => b.append("\\t")
-      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
-      case c => b.append(c)
-    }
-    b.result()
-  }
+  override protected def requestBody(texts: IndexedSeq[String]): String =
+    s"""{"model":${q(model)},"input":${texts.map(q).mkString("[", ",", "]")}}"""
 
   /** Minimal parser for `{"data":[{"index":i,"embedding":[...]},...]}` —
     * avoids a JSON dependency; tolerant of field order. */
@@ -167,37 +164,6 @@ final class OpenAiHttpEmbedder(baseUrl: String, model: String,
     require(out.forall(_ != null), "embedding response missing indices")
     out.toIndexedSeq
   }
-
-  private def callOnce(texts: IndexedSeq[String]): IndexedSeq[Array[Float]] = {
-    val input = texts.map(t => "\"" + jsonEscape(t) + "\"").mkString("[", ",", "]")
-    val payload = s"""{"model":"${jsonEscape(model)}","input":$input}"""
-    val req = HttpRequest.newBuilder(URI.create(s"$baseUrl/v1/embeddings"))
-      .timeout(timeout)
-      .header("Content-Type", "application/json")
-      .header("Authorization", s"Bearer $apiKey")
-      .POST(HttpRequest.BodyPublishers.ofString(payload))
-      .build()
-    val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
-    require(resp.statusCode() == 200, s"embeddings call failed: HTTP ${resp.statusCode()} ${resp.body().take(200)}")
-    parseResponse(resp.body(), texts.length)
-  }
-
-  override def embedBatch(texts: IndexedSeq[String]): IndexedSeq[Array[Float]] = {
-    val subBatches = texts.grouped(subBatchSize).toIndexedSeq
-    if (subBatches.lengthCompare(1) <= 0) subBatches.headOption.map(callOnce).getOrElse(IndexedSeq.empty)
-    else {
-      // bounded fan-out inside the Spark task, like the reference's
-      // 20-thread pool per worker
-      val pool = Executors.newFixedThreadPool(math.min(concurrency, subBatches.length))
-      try {
-        val futures = subBatches.map(b => pool.submit(() => callOnce(b)))
-        futures.flatMap(_.get())
-      } finally {
-        pool.shutdown()
-        pool.awaitTermination(timeout.toSeconds * 2, TimeUnit.SECONDS)
-      }
-    }
-  }
 }
 
 /** HUGGING_FACE local-HTTP embedder — the dispatch leg the reference
@@ -211,36 +177,19 @@ final class OpenAiHttpEmbedder(baseUrl: String, model: String,
   * Speaks the public text-embeddings-inference convention: POST
   * `$baseUrl/embed` with `{"inputs":[...]}`, response a top-level
   * array of float arrays in request order. Sub-batches of 32 per the
-  * reference's constant, sequential by default (the reference's HF
+  * reference's constant, sent one at a time (the reference's HF
   * consumer is a single local model server fed one queue message at a
   * time — fanning 20 concurrent calls at one local GPU would just
-  * queue there); `concurrency` is pluggable for a replicated serving
-  * tier. Retry/backoff comes from the same [[RetryingEmbedder]]
-  * envelope as the OPEN_AI leg (Routing wires it). */
+  * queue there). */
 final class HuggingFaceHttpEmbedder(baseUrl: String, modelName: String,
-                                    override val dim: Int,
-                                    concurrency: Int = 1,
-                                    subBatchSize: Int = 32,
-                                    timeout: Duration = Duration.ofSeconds(60)) extends Embedder {
+                                    override val dim: Int)
+    extends HttpEmbedder(s"$baseUrl/embed", subBatchSize = 32, concurrency = 1) {
   require(modelName.nonEmpty, "hugging_face_model_name required")
-  override def maxBatchSize: Int = subBatchSize * math.max(1, concurrency)
 
-  @transient private lazy val client: HttpClient =
-    HttpClient.newBuilder().connectTimeout(timeout).build()
+  override protected def headers: Seq[(String, String)] = Nil
 
-  private def jsonEscape(s: String): String = {
-    val b = new StringBuilder(s.length + 8)
-    s.foreach {
-      case '"' => b.append("\\\"")
-      case '\\' => b.append("\\\\")
-      case '\n' => b.append("\\n")
-      case '\r' => b.append("\\r")
-      case '\t' => b.append("\\t")
-      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
-      case c => b.append(c)
-    }
-    b.result()
-  }
+  override protected def requestBody(texts: IndexedSeq[String]): String =
+    s"""{"inputs":${texts.map(q).mkString("[", ",", "]")}}"""
 
   /** `[[0.1,0.2],[...],...]` — no nesting inside an embedding, so each
     * innermost bracket group is one vector, in request order. */
@@ -256,35 +205,5 @@ final class HuggingFaceHttpEmbedder(baseUrl: String, modelName: String,
     require(count == n,
       s"hugging-face response carried $count embeddings for $n inputs")
     out.result()
-  }
-
-  private def callOnce(texts: IndexedSeq[String]): IndexedSeq[Array[Float]] = {
-    val inputs = texts.map(t => "\"" + jsonEscape(t) + "\"").mkString("[", ",", "]")
-    val payload = s"""{"inputs":$inputs}"""
-    val req = HttpRequest.newBuilder(URI.create(s"$baseUrl/embed"))
-      .timeout(timeout)
-      .header("Content-Type", "application/json")
-      .POST(HttpRequest.BodyPublishers.ofString(payload))
-      .build()
-    val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
-    require(resp.statusCode() == 200,
-      s"hugging-face embed call failed: HTTP ${resp.statusCode()} ${resp.body().take(200)}")
-    parseResponse(resp.body(), texts.length)
-  }
-
-  override def embedBatch(texts: IndexedSeq[String]): IndexedSeq[Array[Float]] = {
-    val subBatches = texts.grouped(subBatchSize).toIndexedSeq
-    if (concurrency <= 1 || subBatches.lengthCompare(1) <= 0)
-      subBatches.flatMap(callOnce)
-    else {
-      val pool = Executors.newFixedThreadPool(math.min(concurrency, subBatches.length))
-      try {
-        val futures = subBatches.map(b => pool.submit(() => callOnce(b)))
-        futures.flatMap(_.get())
-      } finally {
-        pool.shutdown()
-        pool.awaitTermination(timeout.toSeconds * 2, TimeUnit.SECONDS)
-      }
-    }
   }
 }

@@ -3,7 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.core.{IngestRequest, VectorDbConfig}
-import graft.sinks.{Sinks, VectorDbSinks}
+import graft.sinks.VectorDbDataSource.CommitStats
+import graft.sinks.VectorDbSinks
 
 /** Embedding-type dispatch (E3) and sink routing (K5) — the worker's
   * two dispatch points restated over the typed config.
@@ -18,21 +19,19 @@ object Routing {
     * .yaml:27-29, worker config.py:6) and requires the model name,
     * failing with the validator's reserved message otherwise; any
     * other declared type is a permanent failure (`bypass_retries=True`
-    * — no retry wrapper). Both HTTP legs share the 5-attempt
-    * exponential-backoff envelope. The deterministic local embedder is
-    * reachable as LOCAL for tests/benchmarks. */
+    * — no retry). Both HTTP legs retry each sub-call 5 times with
+    * exponential backoff ([[HttpEmbedder]]). The deterministic local
+    * embedder is reachable as LOCAL for tests/benchmarks. */
   def embedderFor(embeddingsType: String, baseUrl: String = "https://api.openai.com",
                   apiKey: String = "", model: String = "text-embedding-ada-002",
                   dim: Int = 1536,
                   huggingFaceModelName: Option[String] = None): Either[String, Embedder] =
     embeddingsType.toUpperCase match {
       case "OPEN_AI" =>
-        Right(new RetryingEmbedder(
-          new OpenAiHttpEmbedder(baseUrl, model, apiKey, dim), attempts = 5))
+        Right(new OpenAiHttpEmbedder(baseUrl, model, apiKey, dim))
       case "HUGGING_FACE" =>
         huggingFaceModelName.filter(_.nonEmpty) match {
-          case Some(name) => Right(new RetryingEmbedder(
-            new HuggingFaceHttpEmbedder(baseUrl, name, dim), attempts = 5))
+          case Some(name) => Right(new HuggingFaceHttpEmbedder(baseUrl, name, dim))
           case None => Left("Hugging face embeddings models require a " +
             "\"hugging_face_model_name\" in the \"embeddings_metadata\"")
         }
@@ -42,17 +41,19 @@ object Routing {
 
   /** K5 (reference worker.py:57-62): a job with webhook URL + key sends
     * raw embeddings to the webhook; otherwise it upserts to the
-    * configured vector DB. */
+    * configured vector DB. Both go through the one sink writer; the
+    * result is its commit stats (failed batches counted, a partition
+    * whose every batch failed fails the write). */
   def writeRecords(records: Dataset[VectorRecord], request: IngestRequest,
-                   jobId: String, vectorDbBaseUrl: String = ""): Unit =
+                   jobId: String, vectorDbBaseUrl: String = ""): CommitStats =
     (request.webhookUrl, request.webhookKey) match {
       case (Some(url), Some(key)) =>
-        Sinks.webhook(records, url, key, jobId)
+        VectorDbSinks.write(records, url, key, VectorDbSinks.Webhook, jobId)
       case _ =>
         val db: VectorDbConfig = request.vectorDb.getOrElse(
           throw new IllegalArgumentException("no webhook and no vector DB configured"))
-        VectorDbSinks.upsert(records, vectorDbBaseUrl,
-          request.vectorDbKey.getOrElse(""), VectorDbSinks.shapeFor(db.vectorDbType), jobId)
+        VectorDbSinks.write(records, vectorDbBaseUrl, request.vectorDbKey.getOrElse(""),
+          VectorDbSinks.shapeFor(db.vectorDbType), jobId)
     }
 
   /** S7: object-store access — executors read `s3a://` URIs directly

@@ -9,8 +9,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** DataSourceV2 writer for the vector-DB sinks (SURVEY §4's optional v2
-  * step beyond `foreachPartition`): commit-coordinated upserts with
+/** DataSourceV2 writer — the one sink path of the ingest pipeline: the
+  * vector-DB upserts (K1-K3) and the raw-embeddings webhook (K4), in
+  * batch and streaming (`foreachBatch`) jobs alike, with commit-coordinated
   * driver-side accounting.
   *
   * ```
@@ -21,12 +22,20 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   .mode("append").save()
   * ```
   *
+  * `shape` is a [[VectorDbSinks.PayloadShape]] name: PINECONE, QDRANT,
+  * WEAVIATE, or WEBHOOK (`url` is then the webhook URL itself and
+  * `apiKey` its key).
+  *
   * Semantics:
   *  - every task buffers `batchSize` (default 128) rows per POST, the
-  *    reference's micro-batch size;
+  *    reference's micro-batch size, each POST retried with backoff;
   *  - record ids are uuid5(jobId, partitionId, i) — identical on task
   *    RETRY, so a re-executed task overwrites its own rows (upsert
-  *    idempotency is the abort story: aborted tasks need no undo);
+  *    idempotency is the abort story: aborted tasks need no undo); the
+  *    webhook ships each row's own id;
+  *  - a batch that fails every try is counted, not fatal (the
+  *    reference's PARTIALLY_COMPLETED job, job_service.py:32-51), but a
+  *    task whose every batch failed throws so that Spark retries it;
   *  - each task's commit message carries (uploaded, failed) counts;
   *    `BatchWrite.commit` aggregates them into
   *    [[VectorDbDataSource.lastCommitStats]] for the driver (the
@@ -70,10 +79,10 @@ private[sinks] class VectorDbTable extends Table with SupportsWrite {
       apiKey = opts.getOrDefault("apiKey", ""),
       shapeName = require(opts, "shape"),
       jobId = opts.getOrDefault("jobId", "job"),
-      batchSize = opts.getOrDefault("batchSize", "128").toInt,
+      batchSize = opts.getOrDefault("batchSize", Sinks.UpsertBatchSize.toString).toInt,
       attempts = opts.getOrDefault("attempts", "3").toInt)
     // fail fast on an unknown shape at planning time, not mid-task
-    VectorDbSinks.shapeFor(conf.shapeName)
+    VectorDbSinks.formatShape(conf.shapeName)
     val schema = info.schema()
     new WriteBuilder {
       override def build(): Write = new Write {
@@ -125,9 +134,9 @@ private[sinks] class VdbDataWriter(conf: VdbWriteConf, schema: StructType,
                                    partitionId: Int)
     extends DataWriter[InternalRow] {
 
-  private val shape = VectorDbSinks.shapeFor(conf.shapeName)
-  private val client = java.net.http.HttpClient.newBuilder()
-    .connectTimeout(java.time.Duration.ofSeconds(30)).build()
+  private val shape = VectorDbSinks.formatShape(conf.shapeName)
+  private val client = VectorDbSinks.httpClient()
+  private val idxId = schema.fieldIndex("id")
   private val idxText = schema.fieldIndex("source_text")
   private val idxDoc = schema.fieldIndex("source_document")
   private val idxVec = schema.fieldIndex("vector")
@@ -137,17 +146,13 @@ private[sinks] class VdbDataWriter(conf: VdbWriteConf, schema: StructType,
   private var failed = 0L
 
   override def write(row: InternalRow): Unit = {
-    // null-safe: a poison row (null text/doc/vector) must not kill the
+    // null-safe: a poison row (null id/text/doc/vector) must not kill the
     // task — ship empties instead (uuid5 ids stay deterministic)
     val vec = if (row.isNullAt(idxVec)) Array.empty[Float]
               else row.getArray(idxVec).toFloatArray()
     def str(i: Int): String =
       if (row.isNullAt(i)) "" else row.getUTF8String(i).toString
-    buf += graft.pipeline.VectorRecord(
-      id = "", // id assigned by shape.entry from (jobId, partitionId, i)
-      source_text = str(idxText),
-      source_document = str(idxDoc),
-      vector = vec)
+    buf += graft.pipeline.VectorRecord(str(idxId), str(idxText), str(idxDoc), vec)
     if (buf.length >= conf.batchSize) flush()
   }
 
@@ -156,10 +161,10 @@ private[sinks] class VdbDataWriter(conf: VdbWriteConf, schema: StructType,
       val entries = buf.map { r =>
         val e = shape.entry(r, conf.jobId, partitionId.toLong, i); i += 1; e
       }
-      val ok = VectorDbSinks.postWithRetry(client, s"${conf.url}${shape.path}",
-        shape.authHeader(conf.apiKey), shape.body(entries.toSeq),
+      val sent = VectorDbSinks.postWithRetry(client, s"${conf.url}${shape.path}",
+        Seq(shape.authHeader(conf.apiKey)), shape.body(entries.toSeq, conf.jobId),
         conf.attempts, baseDelayMs = 200L)
-      if (ok) uploaded += buf.length else failed += buf.length
+      if (sent.isRight) uploaded += buf.length else failed += buf.length
       buf.clear()
     }
   }

@@ -5,16 +5,16 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.util.LongAccumulator
 
 import graft.core.Uuid5
 import graft.pipeline.VectorRecord
 
-/** Vector-database upsert sinks (SURVEY §2.6 K1-K3). Each builds the
-  * exact upsert payload shape of the reference uploader and POSTs it in
-  * micro-batches of 128 via `foreachPartition`; deterministic
-  * uuid5(job, batch, i) record ids make retried tasks idempotent
-  * upserts — the reference's own design (README.md:210).
+/** Vector-database upsert payloads (SURVEY §2.6 K1-K4) and the one HTTP
+  * retry loop of the ingest pipeline's remote legs. Each shape builds the
+  * exact payload of the reference uploader; [[VectorDbDataSource]] POSTs
+  * them in micro-batches of 128, and deterministic uuid5(job, batch, i)
+  * record ids make retried tasks idempotent upserts — the reference's own
+  * design (README.md:210).
   *
   * Payload shapes (reference src/worker/vector_uploader.py):
   *  - Pinecone (:55-61): `{id, values, metadata:{source_text, source_document}}`
@@ -23,6 +23,8 @@ import graft.pipeline.VectorRecord
   *    source_document}, vector}` — `vectoflow_id` [sic] replicates the
   *    reference's typo (SURVEY §7 quirk 6) for drop-in parity with data
   *    written by the reference.
+  *  - Webhook (src/shared/utils.py:15-32): the raw records wrapped as
+  *    `{"Embeddings":[…],"DocumentID":"","JobID":…}`.
   */
 object VectorDbSinks {
 
@@ -32,7 +34,7 @@ object VectorDbSinks {
   sealed trait PayloadShape {
     def entry(r: VectorRecord, jobId: String, batchId: Long, i: Int): String
     /** Wrap a micro-batch of entries into the POST body. */
-    def body(entries: Seq[String]): String
+    def body(entries: Seq[String], jobId: String): String
     def path: String
     /** Auth header (name, value) for this store: Pinecone and Qdrant
       * take an `Api-Key` header, Weaviate expects a Bearer token. */
@@ -45,7 +47,7 @@ object VectorDbSinks {
     override def entry(r: VectorRecord, jobId: String, batchId: Long, i: Int): String =
       s"""{"id":"${Uuid5.ofParts(jobId, batchId, i)}","values":${vec(r)},""" +
         s""""metadata":{"source_text":${q(r.source_text)},"source_document":${q(r.source_document)}}}"""
-    override def body(entries: Seq[String]): String =
+    override def body(entries: Seq[String], jobId: String): String =
       entries.mkString("""{"vectors":[""", ",", "]}")
     override val path = "/vectors/upsert"
   }
@@ -54,7 +56,7 @@ object VectorDbSinks {
     override def entry(r: VectorRecord, jobId: String, batchId: Long, i: Int): String =
       s"""{"id":"${Uuid5.ofParts(jobId, batchId, i)}","vector":${vec(r)},""" +
         s""""payload":{"source_text":${q(r.source_text)},"source_document":${q(r.source_document)}}}"""
-    override def body(entries: Seq[String]): String =
+    override def body(entries: Seq[String], jobId: String): String =
       entries.mkString("""{"points":[""", ",", "]}")
     override val path = "/points"
   }
@@ -67,13 +69,28 @@ object VectorDbSinks {
         // "vectorflow_id" — replicated for data-level parity
         s""""vectoflow_id":"${Uuid5.ofParts(jobId, batchId, i)}",""" +
         s""""source_document":${q(r.source_document)}},"vector":${vec(r)}}"""
-    override def body(entries: Seq[String]): String =
+    override def body(entries: Seq[String], jobId: String): String =
       entries.mkString("""{"objects":[""", ",", "]}")
     override val path = "/v1/batch/objects"
     override def authHeader(apiKey: String): (String, String) =
       ("Authorization", s"Bearer $apiKey")
   }
 
+  /** K4: the raw-embeddings webhook. Entries keep the record's own id,
+    * the URL is used as given, and the key travels in the reference's
+    * `X-Embeddings-Webhook-Key` header. */
+  case object Webhook extends PayloadShape {
+    override def entry(r: VectorRecord, jobId: String, batchId: Long, i: Int): String =
+      s"""{"id":${q(r.id)},"source_text":${q(r.source_text)},""" +
+        s""""source_document":${q(r.source_document)},"vector":${vec(r)}}"""
+    override def body(entries: Seq[String], jobId: String): String =
+      entries.mkString("""{"Embeddings":[""", ",", s"""],"DocumentID":"","JobID":${q(jobId)}}""")
+    override val path = ""
+    override def authHeader(apiKey: String): (String, String) =
+      ("X-Embeddings-Webhook-Key", apiKey)
+  }
+
+  /** The store for a request's `vector_db_type`. */
   def shapeFor(vectorDbType: String): PayloadShape = vectorDbType.toUpperCase match {
     case "PINECONE" => Pinecone
     case "QDRANT"   => Qdrant
@@ -84,62 +101,54 @@ object VectorDbSinks {
       s"Unsupported vector DB type: $other (implemented: PINECONE, QDRANT, WEAVIATE)")
   }
 
-  /** POST `body` to `url` with `attempts` tries and exponential backoff
-    * starting at `baseDelayMs`; returns success. Shared transport for
-    * the foreachPartition sink, the DataSourceV2 writer and the webhook
-    * — a protocol fix (status handling, retry policy) lands in exactly
-    * one place. */
-  private[sinks] def postWithRetry(client: HttpClient, url: String,
-                                   auth: (String, String), body: String,
-                                   attempts: Int, baseDelayMs: Long): Boolean = {
-    var attempt = 0
-    var ok = false
-    while (!ok && attempt < attempts) {
-      try {
-        val req = HttpRequest.newBuilder(URI.create(url))
-          .timeout(Duration.ofSeconds(30))
-          .header("Content-Type", "application/json")
-          .header(auth._1, auth._2)
-          .POST(HttpRequest.BodyPublishers.ofString(body))
-          .build()
-        ok = client.send(req, HttpResponse.BodyHandlers.ofString()).statusCode() == 200
-      } catch { case _: java.io.IOException => }
-      if (!ok) {
-        attempt += 1
-        if (attempt < attempts && baseDelayMs > 0)
-          Thread.sleep(baseDelayMs * (1L << (attempt - 1)))
-      }
-    }
-    ok
+  /** The writer's `shape` option: a vector-DB type or `WEBHOOK`. */
+  private[sinks] def formatShape(name: String): PayloadShape =
+    if (name.equalsIgnoreCase(Webhook.toString)) Webhook else shapeFor(name)
+
+  /** Write `records` to `url` in `shape` through [[VectorDbDataSource]]
+    * and return that write's commit stats. */
+  def write(records: Dataset[VectorRecord], url: String, apiKey: String,
+            shape: PayloadShape, jobId: String): VectorDbDataSource.CommitStats = {
+    records.toDF().write.format("graft.sinks.VectorDbDataSource")
+      .option("url", url).option("apiKey", apiKey)
+      .option("shape", shape.toString).option("jobId", jobId)
+      .mode("append").save()
+    VectorDbDataSource.lastCommitStats.get
   }
 
-  /** Upsert `records` to an endpoint speaking `shape`, 128 per POST,
-    * `attempts` tries with exponential backoff. Partition-local batch
-    * indices feed the uuid5 ids (partitionId → batchId, like the
-    * reference's DB-assigned batch ids). */
-  def upsert(records: Dataset[VectorRecord], baseUrl: String, apiKey: String,
-             shape: PayloadShape, jobId: String,
-             batchSize: Int = Sinks.UpsertBatchSize, attempts: Int = 3,
-             baseDelayMs: Long = 200L,
-             uploaded: LongAccumulator = null, failed: LongAccumulator = null): Unit = {
-    records.foreachPartition { (it: Iterator[VectorRecord]) =>
-      val partitionId = org.apache.spark.TaskContext.getPartitionId().toLong
-      val client = HttpClient.newBuilder().connectTimeout(Duration.ofSeconds(30)).build()
-      var i = 0
-      it.grouped(batchSize).foreach { batch =>
-        val entries = batch.map { r =>
-          val e = shape.entry(r, jobId, partitionId, i); i += 1; e
-        }
-        val ok = postWithRetry(client, s"$baseUrl${shape.path}",
-          shape.authHeader(apiKey), shape.body(entries), attempts, baseDelayMs)
-        if (ok) { if (uploaded != null) uploaded.add(batch.length.toLong) }
-        else if (failed != null) failed.add(batch.length.toLong)
-      }
+  /** The client every remote leg sends through. */
+  private[graft] def httpClient(): HttpClient =
+    HttpClient.newBuilder().connectTimeout(Duration.ofSeconds(30)).build()
+
+  /** POST `body` to `url` with `attempts` tries and exponential backoff
+    * starting at `baseDelayMs`: Right(response body) on the first 200,
+    * else Left(the last failure). The one retry loop of the remote legs —
+    * every sink batch and every embedding sub-call is one such call, so a
+    * protocol fix (status handling, retry policy) lands in one place. */
+  private[graft] def postWithRetry(client: HttpClient, url: String,
+                                   headers: Seq[(String, String)], body: String,
+                                   attempts: Int, baseDelayMs: Long,
+                                   timeout: Duration = Duration.ofSeconds(30)): Either[String, String] = {
+    var failure = "no attempt made"
+    var attempt = 0
+    while (attempt < attempts) {
+      if (attempt > 0 && baseDelayMs > 0) Thread.sleep(baseDelayMs << (attempt - 1))
+      try {
+        val req = headers.foldLeft(HttpRequest.newBuilder(URI.create(url)).timeout(timeout)
+            .header("Content-Type", "application/json")) { case (b, (k, v)) => b.header(k, v) }
+          .POST(HttpRequest.BodyPublishers.ofString(body))
+          .build()
+        val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
+        if (resp.statusCode() == 200) return Right(resp.body())
+        failure = s"HTTP ${resp.statusCode()} ${resp.body().take(200)}"
+      } catch { case e: java.io.IOException => failure = e.toString }
+      attempt += 1
     }
+    Left(failure)
   }
 
   /** `s` as a JSON string literal. */
-  private[sinks] def q(s: String): String = {
+  private[graft] def q(s: String): String = {
     val b = new StringBuilder(s.length + 8).append('"')
     s.foreach {
       case '"' => b.append("\\\"")

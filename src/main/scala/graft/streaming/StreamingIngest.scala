@@ -71,7 +71,7 @@ object StreamingIngest {
       .start()
 
   /** Streaming vector-DB upsert (K1-K3 in streaming mode): each
-    * micro-batch flows through [[graft.sinks.VectorDbSinks.upsert]] with
+    * micro-batch flows through [[graft.sinks.VectorDbSinks.write]] with
     * the batchId as the uuid5 jobId component — re-delivered batches
     * re-send the SAME record ids, so the store's upsert semantics make
     * checkpoint + foreachBatch effectively exactly-once end to end
@@ -85,8 +85,7 @@ object StreamingIngest {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[VectorRecord], batchId: Long) =>
-        graft.sinks.VectorDbSinks.upsert(batch, baseUrl, apiKey, shape,
-          jobId = s"$jobId-$batchId")
+        graft.sinks.VectorDbSinks.write(batch, baseUrl, apiKey, shape, s"$jobId-$batchId")
         ()
       }
       .start()

@@ -8,7 +8,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sinks.Sinks
+import graft.sinks.{Sinks, VectorDbDataSource, VectorDbSinks}
 
 /** End-to-end pipeline tests, including the HTTP embedder and webhook
   * sink driven against a local in-JVM stub server (zero egress). */
@@ -103,9 +103,7 @@ class EmbedPipelineSpec extends AnyFunSuite {
     val port = server.getAddress.getPort
     try {
       import spark.implicits._
-      val embedder = new RetryingEmbedder(
-        new OpenAiHttpEmbedder(s"http://127.0.0.1:$port", "test-model", "k", dim = 2),
-        attempts = 5, baseDelayMs = 1L)
+      val embedder = new OpenAiHttpEmbedder(s"http://127.0.0.1:$port", "test-model", "k", dim = 2)
       val chunks = (0 until 10).map(i => ChunkRow(i.toLong, "doc", i, s"id$i", s"text$i")).toDS().coalesce(1)
       val out = EmbedPipeline.embedStage(chunks, embedder).collect().sortBy(_.id)
       assert(out.length == 10)
@@ -116,18 +114,58 @@ class EmbedPipelineSpec extends AnyFunSuite {
       }
       // webhook sink: 10 records, batch size 4 -> 3 batches, the first
       // refused once -> 4 POSTs, every batch delivered exactly once
-      val sent = spark.sparkContext.longAccumulator("webhook-sent")
-      val failed = spark.sparkContext.longAccumulator("webhook-failed")
-      Sinks.webhook(EmbedPipeline.embedStage(chunks, embedder),
-        s"http://127.0.0.1:$port/webhook", "secret", "job-1", batchSize = 4,
-        baseDelayMs = 1L, sent = sent, failed = failed)
+      EmbedPipeline.embedStage(chunks, embedder).toDF()
+        .write.format("graft.sinks.VectorDbDataSource")
+        .option("url", s"http://127.0.0.1:$port/webhook").option("apiKey", "secret")
+        .option("shape", "WEBHOOK").option("jobId", "job-1").option("batchSize", "4")
+        .mode("append").save()
       assert(hookRequests.get() == 4, "the 503 was not retried")
       assert(hookKeyed.get() == 4, "a request went out without the key header")
       assert(received.size() == 3)
       assert(received.asScala.forall(_.contains("\"JobID\":\"job-1\"")))
       val ids = received.asScala.toSeq.flatMap("\"id\":\"([^\"]*)\"".r.findAllMatchIn(_).map(_.group(1)))
       assert(ids.sorted == out.map(_.id).toSeq.sorted, "a record was lost or delivered twice")
-      assert(sent.value == 10L && failed.value == 0L)
+      assert(VectorDbDataSource.lastCommitStats.contains(VectorDbDataSource.CommitStats(10L, 0L, 1)))
+    } finally server.stop(0)
+  }
+
+  test("wire bytes: OpenAI, TEI and webhook bodies match their golden captures") {
+    // bodies captured from the pre-refactor embedders and webhook sink;
+    // the texts cover every escape the JSON quoter emits plus non-ASCII
+    val texts = IndexedSeq("plain text", "quote \" back\\slash",
+      "nl\nrt\rtab\tctl\u0001\u001f", "unicode \u00e9 \u20ac \ud83d\ude00 </script>")
+    val bodies = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    def capture(path: String, reply: String): Unit =
+      server.createContext(path, (ex: HttpExchange) => {
+        bodies.put(path, new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8))
+        respond(ex, 200, reply)
+      })
+    capture("/v1/embeddings", texts.indices
+      .map(i => s"""{"index":$i,"embedding":[$i.0,1.0]}""").mkString("""{"data":[""", ",", "]}"))
+    capture("/embed", texts.indices.map(i => s"[$i.0,1.0]").mkString("[", ",", "]"))
+    capture("/hook", "ok")
+    server.start()
+    val base = s"http://127.0.0.1:${server.getAddress.getPort}"
+    def golden(name: String): String = {
+      val in = getClass.getResourceAsStream(s"/golden/$name.json")
+      try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+    }
+    try {
+      new OpenAiHttpEmbedder(base, "text-embedding-ada-002", "k", dim = 2).embedBatch(texts)
+      assert(bodies.get("/v1/embeddings") == golden("openai"))
+      new HuggingFaceHttpEmbedder(base, "BAAI/bge-small-en", dim = 2).embedBatch(texts)
+      assert(bodies.get("/embed") == golden("tei"))
+      import spark.implicits._
+      val records = Seq(
+        VectorRecord("0b0e8c47-6c3e-5d0e-9a4b-7f3c2a1d9e01", texts(1), "doc \"a\".txt",
+          Array(0.5f, -1.25f, 3.0e-8f)),
+        VectorRecord("5f1d2e3c-4b5a-5968-8776-a5b4c3d2e1f0", texts(2), "b.md",
+          Array(1.0f, 0f, 1234567.9f)),
+        VectorRecord("9a8b7c6d-5e4f-5a3b-9c2d-1e0f9a8b7c6d", texts(3), "c.html",
+          Array.empty[Float])).toDS().coalesce(1)
+      VectorDbSinks.write(records, s"$base/hook", "secret", VectorDbSinks.Webhook, "job-\"golden\"")
+      assert(bodies.get("/hook") == golden("webhook"))
     } finally server.stop(0)
   }
 

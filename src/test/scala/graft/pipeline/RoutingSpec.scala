@@ -8,6 +8,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{IngestRequest, VectorDbConfig}
+import graft.sinks.VectorDbDataSource.CommitStats
 
 class RoutingSpec extends AnyFunSuite {
 
@@ -54,17 +55,14 @@ class RoutingSpec extends AnyFunSuite {
       val emb = Routing.embedderFor("HUGGING_FACE", baseUrl = base, dim = 2,
         huggingFaceModelName = Some("BAAI/bge-small-en"))
         .fold(e => fail(e), identity)
-      // retry wrapper retries the WHOLE embedBatch, so keep the flaky
-      // call to the first sub-batch window: 65 texts = 3 sub-batches
-      // (32 + 32 + 1 per HUGGING_FACE_BATCH_SIZE, worker config.py:6)
-      val out = new RetryingEmbedder(new HuggingFaceHttpEmbedder(
-        base, "BAAI/bge-small-en", dim = 2), attempts = 5, baseDelayMs = 0)
-        .embedBatch((0 until 65).map(i => s"text $i"))
+      // 65 texts = 3 sub-batches (32 + 32 + 1 per HUGGING_FACE_BATCH_SIZE,
+      // worker config.py:6)
+      val out = emb.embedBatch((0 until 65).map(i => s"text $i"))
       assert(out.length == 65)
       assert(out.forall(_.length == 2))
       assert(maxBatchSeen.get() == 32, "sub-batch must cap at 32")
-      // 1 failed + retry replays all 3 sub-batches = 4 POSTs so far;
-      // then the embedderFor-built envelope embeds 10 texts in 1 call
+      // 3 sub-batches + 1 resend of the 500'd one alone = 4 POSTs; then
+      // 10 texts fit 1 call
       assert(posts.get() == 4)
       assert(emb.embedBatch((0 until 10).map(_.toString)).length == 10)
       assert(posts.get() == 5)
@@ -87,15 +85,81 @@ class RoutingSpec extends AnyFunSuite {
     try {
       val records = (0 until 10).map(i =>
         VectorRecord(s"id$i", s"t$i", "doc", Array(1f))).toDS().coalesce(1)
-      Routing.writeRecords(records,
+      val hooked = Routing.writeRecords(records,
         IngestRequest(webhookUrl = Some(s"$base/hook"), webhookKey = Some("k")), "j1")
       assert(webhookHits.get() == 1 && upsertHits.get() == 0)
-      Routing.writeRecords(records,
+      assert(hooked == CommitStats(10L, 0L, 1))
+      val upserted = Routing.writeRecords(records,
         IngestRequest(vectorDb = Some(VectorDbConfig("QDRANT", "idx")),
           vectorDbKey = Some("k")), "j2", vectorDbBaseUrl = base)
       assert(upsertHits.get() == 1)
+      assert(upserted == CommitStats(10L, 0L, 1))
       intercept[IllegalArgumentException](
         Routing.writeRecords(records, IngestRequest(), "j3"))
+    } finally server.stop(0)
+  }
+
+  test("OPEN_AI leg: a 503 resends only its own 2048-text sub-call") {
+    // 2049 texts = 2 sub-calls (2048 + 1, worker.py:96); the first POST
+    // to arrive is refused once. The failed sub-call alone is retried:
+    // 3 POSTs, and every text reaches a 200 exactly once.
+    val posts = new java.util.concurrent.atomic.AtomicInteger(0)
+    val answered = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/v1/embeddings", (ex: HttpExchange) => {
+      val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+      val texts = "\"(t\\d+)\"".r.findAllMatchIn(body).map(_.group(1)).toSeq
+      if (posts.incrementAndGet() == 1) respond(ex, 503, "busy")
+      else {
+        texts.foreach(answered.add)
+        respond(ex, 200, texts.indices
+          .map(i => s"""{"index":$i,"embedding":[$i.0,1.0]}""").mkString("""{"data":[""", ",", "]}"))
+      }
+    })
+    server.start()
+    try {
+      val emb = Routing.embedderFor("OPEN_AI", baseUrl = s"http://127.0.0.1:${server.getAddress.getPort}",
+        apiKey = "k", dim = 2).fold(e => fail(e), identity)
+      val texts = (0 until 2049).map(i => s"t$i")
+      val out = emb.embedBatch(texts)
+      assert(out.length == 2049)
+      assert(out(2048).toSeq == Seq(0f, 1f), "the second sub-call's vector is misplaced")
+      assert(posts.get() == 3, "a failed sub-call must resend only itself")
+      import scala.jdk.CollectionConverters._
+      assert(answered.asScala.toSeq.sorted == texts.sorted,
+        "every text must reach a 200 exactly once")
+    } finally server.stop(0)
+  }
+
+  test("K5: failed sink batches surface in the commit stats; a dead store fails the write") {
+    import spark.implicits._
+    // one 128-row batch (the one holding row 150) 500s on every attempt
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/points", (ex: HttpExchange) => {
+      val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+      if (body.contains("\"t150\"")) respond(ex, 500, "boom") else respond(ex, 200, "ok")
+    })
+    server.createContext("/down", (ex: HttpExchange) => {
+      ex.getRequestBody.readAllBytes(); respond(ex, 500, "down")
+    })
+    server.start()
+    val base = s"http://127.0.0.1:${server.getAddress.getPort}"
+    val qdrant = IngestRequest(vectorDb = Some(VectorDbConfig("QDRANT", "idx")), vectorDbKey = Some("k"))
+    try {
+      val records = (0 until 300).map(i =>
+        VectorRecord(s"id$i", s"t$i", "doc", Array(1f))).toDS().coalesce(1)
+      val stats = Routing.writeRecords(records, qdrant, "j1", vectorDbBaseUrl = base)
+      assert(stats == CommitStats(172L, 128L, 1))
+      // every batch of the partition fails: the task throws, Spark's
+      // retry fails the same way, and the write fails
+      val dead = intercept[Exception](Routing.writeRecords(records.limit(10), qdrant, "j2",
+        vectorDbBaseUrl = s"$base/down"))
+      assert(Iterator.iterate[Throwable](dead)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("all 10 upserts failed")))
+      // WEBHOOK is a sink, not a vector_db_type
+      val e = intercept[IllegalArgumentException](Routing.writeRecords(records,
+        qdrant.copy(vectorDb = Some(VectorDbConfig("WEBHOOK", "idx"))), "j3", base))
+      assert(e.getMessage.contains("Unsupported vector DB type"))
     } finally server.stop(0)
   }
 

@@ -39,36 +39,6 @@ class VectorDbSinksSpec extends AnyFunSuite {
     assert(e.getMessage.contains("Unsupported vector DB type"))
   }
 
-  test("upsert sink: 128-batching, retry, accumulator accounting") {
-    import spark.implicits._
-    val received = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val failures = new java.util.concurrent.atomic.AtomicInteger(1)
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-    server.createContext("/points", (ex: HttpExchange) => {
-      val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-      if (failures.getAndDecrement() > 0) respond(ex, 500, "boom")
-      else { received.add(body); respond(ex, 200, "ok") }
-    })
-    server.start()
-    try {
-      val records = (0 until 300).map(i =>
-        VectorRecord(s"r$i", s"text$i", "doc", Array(i.toFloat))).toDS().coalesce(1)
-      val up = spark.sparkContext.longAccumulator("up")
-      val fail = spark.sparkContext.longAccumulator("fail")
-      VectorDbSinks.upsert(records, s"http://127.0.0.1:${server.getAddress.getPort}",
-        "key", VectorDbSinks.Qdrant, "job-9", attempts = 3, baseDelayMs = 1L,
-        uploaded = up, failed = fail)
-      // 300 records -> batches of 128/128/44; first POST failed once then retried
-      assert(received.size() == 3)
-      assert(up.value == 300L && fail.value == 0L)
-      val bodies = {
-        val it = received.iterator(); val b = Seq.newBuilder[String]
-        while (it.hasNext) b += it.next(); b.result()
-      }
-      assert(bodies.forall(_.startsWith("""{"points":[""")))
-    } finally server.stop(0)
-  }
-
   test("auth headers per store: Api-Key for Pinecone/Qdrant, Bearer for Weaviate") {
     import spark.implicits._
     assert(VectorDbSinks.Pinecone.authHeader("k") == ("Api-Key", "k"))
@@ -84,8 +54,8 @@ class VectorDbSinksSpec extends AnyFunSuite {
     server.start()
     try {
       val records = Seq(rec).toDS().coalesce(1)
-      VectorDbSinks.upsert(records, s"http://127.0.0.1:${server.getAddress.getPort}",
-        "secret", VectorDbSinks.Weaviate, "job-w", attempts = 1)
+      VectorDbSinks.write(records, s"http://127.0.0.1:${server.getAddress.getPort}",
+        "secret", VectorDbSinks.Weaviate, "job-w")
       assert(seen.peek() == "Bearer secret")
     } finally server.stop(0)
   }
@@ -93,10 +63,12 @@ class VectorDbSinksSpec extends AnyFunSuite {
   test("DataSourceV2 writer: batched upserts, commit accounting, deterministic ids") {
     import spark.implicits._
     val received = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val failures = new java.util.concurrent.atomic.AtomicInteger(1)
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     server.createContext("/points", (ex: HttpExchange) => {
-      received.add(new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8))
-      respond(ex, 200, "ok")
+      val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+      if (failures.getAndDecrement() > 0) respond(ex, 500, "boom")
+      else { received.add(body); respond(ex, 200, "ok") }
     })
     server.start()
     try {
@@ -108,14 +80,17 @@ class VectorDbSinksSpec extends AnyFunSuite {
         .option("apiKey", "key").option("shape", "QDRANT").option("jobId", "dsv2-job")
         .mode("append").save()
       writeOnce()
-      // 300 rows -> POSTs of 128/128/44
+      // 300 rows -> POSTs of 128/128/44; the first POST failed once and
+      // was retried
       assert(received.size() == 3)
       val stats = VectorDbDataSource.lastCommitStats
       assert(stats.exists(s => s.uploaded == 300L && s.failed == 0L && s.tasks == 1))
       def ids(bodies: Iterable[String]): Set[String] =
         bodies.flatMap("\"id\":\"([0-9a-f-]+)\"".r.findAllMatchIn(_).map(_.group(1))).toSet
-      val first = ids(scala.jdk.CollectionConverters.IteratorHasAsScala(
-        received.iterator()).asScala.toList)
+      val firstBodies = scala.jdk.CollectionConverters.IteratorHasAsScala(
+        received.iterator()).asScala.toList
+      assert(firstBodies.forall(_.startsWith("""{"points":[""")))
+      val first = ids(firstBodies)
       assert(first.size == 300)
       received.clear()
       // re-run: identical uuid5 ids -> pure upsert overwrite, no growth
@@ -123,54 +98,6 @@ class VectorDbSinksSpec extends AnyFunSuite {
       val second = ids(scala.jdk.CollectionConverters.IteratorHasAsScala(
         received.iterator()).asScala.toList)
       assert(second == first, "re-delivery must target identical record ids")
-    } finally server.stop(0)
-  }
-
-  test("chaos: a task that dies mid-upsert retries into zero duplicates " +
-      "and exact ledger counts (foreachPartition sink)") {
-    // the r10 stretch pin: the uuid5 idempotent-upsert DESIGN
-    // (reference README.md:210) was spec-covered only on the happy
-    // path — here the first task attempt POSTs its first micro-batch,
-    // then dies; Spark's retry (master local[*, 2]) replays the whole
-    // partition. The store, keyed by id like every real vector DB,
-    // must end with exactly one row per record, and the A1-ledger
-    // accumulators must count the successful attempt only.
-    import spark.implicits._
-    val store = new java.util.concurrent.ConcurrentHashMap[String, String]()
-    val posts = new java.util.concurrent.atomic.AtomicInteger()
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-    server.createContext("/points", (ex: HttpExchange) => {
-      val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-      posts.incrementAndGet()
-      // an UPSERT store: same id overwrites, never duplicates
-      "\"id\":\"([0-9a-f-]+)\"".r.findAllMatchIn(body)
-        .foreach(m => store.put(m.group(1), body))
-      respond(ex, 200, "ok")
-    })
-    server.start()
-    try {
-      val records = (0 until 300).map(i =>
-          VectorRecord(s"r$i", s"text$i", "doc", Array(i.toFloat)))
-        .toDS().coalesce(1)
-        // pipelined into the sink task: record 150 kills ATTEMPT 0
-        // after the first 128-record POST already shipped
-        .map { r =>
-          val tc = org.apache.spark.TaskContext.get()
-          if (r.id == "r150" && tc != null && tc.attemptNumber() == 0)
-            throw new RuntimeException("chaos: injected task death")
-          r
-        }
-      val up = spark.sparkContext.longAccumulator("up_chaos")
-      val fail = spark.sparkContext.longAccumulator("fail_chaos")
-      VectorDbSinks.upsert(records, s"http://127.0.0.1:${server.getAddress.getPort}",
-        "key", VectorDbSinks.Qdrant, "job-chaos", attempts = 3,
-        baseDelayMs = 1L, uploaded = up, failed = fail)
-      assert(posts.get() > 3, "the first attempt must have POSTed before dying")
-      assert(store.size() === 300,
-        "idempotent uuid5 ids: the retry overwrites the dead attempt's rows")
-      assert(up.value === 300L && fail.value === 0L,
-        "ledger counts come from the successful attempt only — Spark " +
-          "discards failed-attempt accumulator updates")
     } finally server.stop(0)
   }
 
