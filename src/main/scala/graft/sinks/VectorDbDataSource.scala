@@ -1,6 +1,10 @@
 package graft.sinks
 
 import java.util
+import java.util.concurrent.{ExecutionException, Executors, Future, ThreadFactory, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -8,6 +12,8 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+
+import graft.pipeline.VectorRecord
 
 /** DataSourceV2 writer — the one sink path of the ingest pipeline: the
   * vector-DB upserts (K1-K3) and the raw-embeddings webhook (K4), in
@@ -29,6 +35,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Semantics:
   *  - every task buffers `batchSize` (default 128) rows per POST, the
   *    reference's micro-batch size, each POST retried with backoff;
+  *  - up to 4 batches are in flight per task, each encoded and POSTed
+  *    off the task thread; `abort`/`close` drop only unsent rows and
+  *    wait for the in-flight batches instead of interrupting them;
   *  - record ids are uuid5(jobId, partitionId, i) — identical on task
   *    RETRY, so a re-executed task overwrites its own rows (upsert
   *    idempotency is the abort story: aborted tasks need no undo); the
@@ -130,17 +139,34 @@ private[sinks] class VdbWriterFactory(conf: VdbWriteConf, schema: StructType)
     new VdbDataWriter(conf, schema, partitionId)
 }
 
+/** One task's writer. The task thread only cuts `batchSize`-row batches
+  * and numbers their rows; a pool of [[VdbDataWriter.InFlight]] threads
+  * encodes and POSTs them, so up to that many upserts overlap. When that
+  * many are pending, `write` waits for the oldest: a task buffers at
+  * most `InFlight + 1` batches. Outcomes are settled in submission order. */
 private[sinks] class VdbDataWriter(conf: VdbWriteConf, schema: StructType,
                                    partitionId: Int)
     extends DataWriter[InternalRow] {
 
   private val shape = VectorDbSinks.formatShape(conf.shapeName)
   private val client = VectorDbSinks.httpClient()
+  private val url = s"${conf.url}${shape.path}"
+  private val headers = Seq(shape.authHeader(conf.apiKey))
   private val idxId = schema.fieldIndex("id")
   private val idxText = schema.fieldIndex("source_text")
   private val idxDoc = schema.fieldIndex("source_document")
   private val idxVec = schema.fieldIndex("vector")
-  private val buf = new scala.collection.mutable.ArrayBuffer[graft.pipeline.VectorRecord]()
+  private val pool = Executors.newFixedThreadPool(VdbDataWriter.InFlight, new ThreadFactory {
+    private val n = new AtomicInteger()
+    override def newThread(r: Runnable): Thread = {
+      val t = new Thread(r, s"graft-vdb-upsert-$partitionId-${n.getAndIncrement()}")
+      t.setDaemon(true)
+      t
+    }
+  })
+  /** Submitted batches, oldest first: (sent?, rows). */
+  private val pending = new util.ArrayDeque[(Future[Boolean], Int)]()
+  private var buf = new ArrayBuffer[VectorRecord](conf.batchSize)
   private var i = 0
   private var uploaded = 0L
   private var failed = 0L
@@ -152,25 +178,34 @@ private[sinks] class VdbDataWriter(conf: VdbWriteConf, schema: StructType,
               else row.getArray(idxVec).toFloatArray()
     def str(i: Int): String =
       if (row.isNullAt(i)) "" else row.getUTF8String(i).toString
-    buf += graft.pipeline.VectorRecord(str(idxId), str(idxText), str(idxDoc), vec)
-    if (buf.length >= conf.batchSize) flush()
+    buf += VectorRecord(str(idxId), str(idxText), str(idxDoc), vec)
+    if (buf.length >= conf.batchSize) submit()
   }
 
-  private def flush(): Unit = {
+  private def submit(): Unit = {
     if (buf.nonEmpty) {
-      val entries = buf.map { r =>
-        val e = shape.entry(r, conf.jobId, partitionId.toLong, i); i += 1; e
-      }
-      val sent = VectorDbSinks.postWithRetry(client, s"${conf.url}${shape.path}",
-        Seq(shape.authHeader(conf.apiKey)), shape.body(entries.toSeq, conf.jobId),
-        conf.attempts, baseDelayMs = 200L)
-      if (sent.isRight) uploaded += buf.length else failed += buf.length
-      buf.clear()
+      if (pending.size >= VdbDataWriter.InFlight) settle()
+      val batch = buf
+      val first = i
+      buf = new ArrayBuffer[VectorRecord](conf.batchSize)
+      i += batch.length
+      val sent = pool.submit(() => VectorDbSinks.postWithRetry(client, url, headers,
+        shape.body(batch, conf.jobId, partitionId.toLong, first),
+        conf.attempts, baseDelayMs = 200L).isRight)
+      pending.add((sent, batch.length))
     }
   }
 
+  /** Wait for the oldest pending batch and count it. */
+  private def settle(): Unit = {
+    val (sent, rows) = pending.poll()
+    val ok = try sent.get() catch { case e: ExecutionException => throw e.getCause }
+    if (ok) uploaded += rows else failed += rows
+  }
+
   override def commit(): WriterCommitMessage = {
-    flush()
+    submit()
+    while (!pending.isEmpty) settle()
     // a task whose uploads ALL failed poisons the job: surface it as a
     // task failure so Spark retries (idempotent ids make that safe)
     if (failed > 0 && uploaded == 0)
@@ -178,6 +213,23 @@ private[sinks] class VdbDataWriter(conf: VdbWriteConf, schema: StructType,
     VdbCommit(uploaded, failed)
   }
 
-  override def abort(): Unit = buf.clear()
-  override def close(): Unit = ()
+  /** Drops only the unsent rows: a submitted batch is an idempotent
+    * upsert, so it is left to finish rather than interrupted. */
+  override def abort(): Unit = {
+    buf.clear()
+    drain()
+  }
+
+  override def close(): Unit = drain()
+
+  private def drain(): Unit = {
+    pool.shutdown()
+    try while (!pool.awaitTermination(1, TimeUnit.MINUTES)) ()
+    catch { case _: InterruptedException => Thread.currentThread().interrupt() }
+  }
+}
+
+private[sinks] object VdbDataWriter {
+  /** Upserts in flight per write task. */
+  private val InFlight = 4
 }

@@ -1,5 +1,6 @@
 package graft.sinks
 
+import java.lang.{StringBuilder => JStringBuilder}
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
@@ -28,49 +29,84 @@ import graft.pipeline.VectorRecord
   */
 object VectorDbSinks {
 
-  /** One upsert entry (payload JSON object) for a record. The id is
-    * uuid5(jobId, batchId, i) exactly like the reference (so re-running
-    * a batch overwrites, never duplicates). */
+  /** How one store wants its upsert entries and POST bodies. Each entry
+    * is a payload JSON object whose id is uuid5(jobId, batchId, i)
+    * exactly like the reference (so re-running a batch overwrites, never
+    * duplicates). A micro-batch is encoded into one builder: no
+    * per-entry `String`, no boxed vector `mkString`. */
   sealed trait PayloadShape {
-    def entry(r: VectorRecord, jobId: String, batchId: Long, i: Int): String
-    /** Wrap a micro-batch of entries into the POST body. */
-    def body(entries: Seq[String], jobId: String): String
+    /** Append the upsert entry for `r` to `b`. */
+    def entry(b: JStringBuilder, r: VectorRecord, jobId: String, batchId: Long, i: Int): Unit
+    /** The POST body of a micro-batch: `records` as entries numbered
+      * from `first`, wrapped in this store's envelope. */
+    final def body(records: Iterable[VectorRecord], jobId: String, batchId: Long, first: Int): String = {
+      val b = new JStringBuilder(prefix)
+      var k = 0
+      records.foreach { r =>
+        if (k > 0) b.append(',')
+        entry(b, r, jobId, batchId, first + k)
+        k += 1
+      }
+      suffix(b, jobId)
+      b.toString
+    }
+    protected def prefix: String
+    protected def suffix(b: JStringBuilder, jobId: String): Unit = b.append("]}")
     def path: String
     /** Auth header (name, value) for this store: Pinecone and Qdrant
       * take an `Api-Key` header, Weaviate expects a Bearer token. */
     def authHeader(apiKey: String): (String, String) = ("Api-Key", apiKey)
   }
 
-  private def vec(r: VectorRecord): String = r.vector.mkString("[", ",", "]")
+  /** `v` as a JSON array, each float as `Float.toString` writes it. */
+  private def vec(b: JStringBuilder, v: Array[Float]): Unit = {
+    b.append('[')
+    var k = 0
+    while (k < v.length) {
+      if (k > 0) b.append(',')
+      b.append(v(k))
+      k += 1
+    }
+    b.append(']')
+  }
 
   case object Pinecone extends PayloadShape {
-    override def entry(r: VectorRecord, jobId: String, batchId: Long, i: Int): String =
-      s"""{"id":"${Uuid5.ofParts(jobId, batchId, i)}","values":${vec(r)},""" +
-        s""""metadata":{"source_text":${q(r.source_text)},"source_document":${q(r.source_document)}}}"""
-    override def body(entries: Seq[String], jobId: String): String =
-      entries.mkString("""{"vectors":[""", ",", "]}")
+    override def entry(b: JStringBuilder, r: VectorRecord, jobId: String, batchId: Long, i: Int): Unit = {
+      b.append("{\"id\":\"").append(Uuid5.ofParts(jobId, batchId, i)).append("\",\"values\":")
+      vec(b, r.vector)
+      b.append(",\"metadata\":{\"source_text\":"); q(b, r.source_text)
+      b.append(",\"source_document\":"); q(b, r.source_document)
+      b.append("}}")
+    }
+    override protected val prefix = "{\"vectors\":["
     override val path = "/vectors/upsert"
   }
 
   case object Qdrant extends PayloadShape {
-    override def entry(r: VectorRecord, jobId: String, batchId: Long, i: Int): String =
-      s"""{"id":"${Uuid5.ofParts(jobId, batchId, i)}","vector":${vec(r)},""" +
-        s""""payload":{"source_text":${q(r.source_text)},"source_document":${q(r.source_document)}}}"""
-    override def body(entries: Seq[String], jobId: String): String =
-      entries.mkString("""{"points":[""", ",", "]}")
+    override def entry(b: JStringBuilder, r: VectorRecord, jobId: String, batchId: Long, i: Int): Unit = {
+      b.append("{\"id\":\"").append(Uuid5.ofParts(jobId, batchId, i)).append("\",\"vector\":")
+      vec(b, r.vector)
+      b.append(",\"payload\":{\"source_text\":"); q(b, r.source_text)
+      b.append(",\"source_document\":"); q(b, r.source_document)
+      b.append("}}")
+    }
+    override protected val prefix = "{\"points\":["
     override val path = "/points"
   }
 
   case object Weaviate extends PayloadShape {
-    override def entry(r: VectorRecord, jobId: String, batchId: Long, i: Int): String =
-      s"""{"class":"VectorflowChunk","properties":{"source_data":${q(r.source_text)},""" +
-        // [sic] "vectoflow_id": the reference writes this misspelled
-        // property (vector_uploader.py:149) while its README documents
-        // "vectorflow_id" — replicated for data-level parity
-        s""""vectoflow_id":"${Uuid5.ofParts(jobId, batchId, i)}",""" +
-        s""""source_document":${q(r.source_document)}},"vector":${vec(r)}}"""
-    override def body(entries: Seq[String], jobId: String): String =
-      entries.mkString("""{"objects":[""", ",", "]}")
+    override def entry(b: JStringBuilder, r: VectorRecord, jobId: String, batchId: Long, i: Int): Unit = {
+      b.append("{\"class\":\"VectorflowChunk\",\"properties\":{\"source_data\":"); q(b, r.source_text)
+      // [sic] "vectoflow_id": the reference writes this misspelled
+      // property (vector_uploader.py:149) while its README documents
+      // "vectorflow_id" — replicated for data-level parity
+      b.append(",\"vectoflow_id\":\"").append(Uuid5.ofParts(jobId, batchId, i))
+      b.append("\",\"source_document\":"); q(b, r.source_document)
+      b.append("},\"vector\":")
+      vec(b, r.vector)
+      b.append('}')
+    }
+    override protected val prefix = "{\"objects\":["
     override val path = "/v1/batch/objects"
     override def authHeader(apiKey: String): (String, String) =
       ("Authorization", s"Bearer $apiKey")
@@ -80,11 +116,19 @@ object VectorDbSinks {
     * the URL is used as given, and the key travels in the reference's
     * `X-Embeddings-Webhook-Key` header. */
   case object Webhook extends PayloadShape {
-    override def entry(r: VectorRecord, jobId: String, batchId: Long, i: Int): String =
-      s"""{"id":${q(r.id)},"source_text":${q(r.source_text)},""" +
-        s""""source_document":${q(r.source_document)},"vector":${vec(r)}}"""
-    override def body(entries: Seq[String], jobId: String): String =
-      entries.mkString("""{"Embeddings":[""", ",", s"""],"DocumentID":"","JobID":${q(jobId)}}""")
+    override def entry(b: JStringBuilder, r: VectorRecord, jobId: String, batchId: Long, i: Int): Unit = {
+      b.append("{\"id\":"); q(b, r.id)
+      b.append(",\"source_text\":"); q(b, r.source_text)
+      b.append(",\"source_document\":"); q(b, r.source_document)
+      b.append(",\"vector\":")
+      vec(b, r.vector)
+      b.append('}')
+    }
+    override protected val prefix = "{\"Embeddings\":["
+    override protected def suffix(b: JStringBuilder, jobId: String): Unit = {
+      b.append("],\"DocumentID\":\"\",\"JobID\":"); q(b, jobId)
+      b.append('}')
+    }
     override val path = ""
     override def authHeader(apiKey: String): (String, String) =
       ("X-Embeddings-Webhook-Key", apiKey)
@@ -149,16 +193,33 @@ object VectorDbSinks {
 
   /** `s` as a JSON string literal. */
   private[graft] def q(s: String): String = {
-    val b = new StringBuilder(s.length + 8).append('"')
-    s.foreach {
-      case '"' => b.append("\\\"")
-      case '\\' => b.append("\\\\")
-      case '\n' => b.append("\\n")
-      case '\r' => b.append("\\r")
-      case '\t' => b.append("\\t")
-      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
-      case c => b.append(c)
+    val b = new JStringBuilder(s.length + 8)
+    q(b, s)
+    b.toString
+  }
+
+  /** Append `s` to `b` as a JSON string literal; runs of characters that
+    * need no escape are copied in bulk. */
+  private[graft] def q(b: JStringBuilder, s: String): Unit = {
+    b.append('"')
+    var run = 0
+    var k = 0
+    while (k < s.length) {
+      val c = s.charAt(k)
+      if (c == '"' || c == '\\' || c < ' ') {
+        b.append(s, run, k)
+        c match {
+          case '"' => b.append("\\\"")
+          case '\\' => b.append("\\\\")
+          case '\n' => b.append("\\n")
+          case '\r' => b.append("\\r")
+          case '\t' => b.append("\\t")
+          case _ => b.append(f"\\u${c.toInt}%04x")
+        }
+        run = k + 1
+      }
+      k += 1
     }
-    b.append('"').result()
+    b.append(s, run, s.length).append('"')
   }
 }

@@ -20,12 +20,18 @@ class VectorDbSinksSpec extends AnyFunSuite {
 
   private val rec = VectorRecord("ignored", "some \"text\"", "doc.txt", Array(0.5f, 1.0f))
 
+  private def entry(shape: VectorDbSinks.PayloadShape): String = {
+    val b = new java.lang.StringBuilder()
+    shape.entry(b, rec, "job1", 7L, 0)
+    b.toString
+  }
+
   test("payload shapes match the reference uploader structs") {
-    val pine = VectorDbSinks.Pinecone.entry(rec, "job1", 7L, 0)
+    val pine = entry(VectorDbSinks.Pinecone)
     assert(pine == s"""{"id":"${Uuid5.ofParts("job1", 7L, 0)}","values":[0.5,1.0],"metadata":{"source_text":"some \\"text\\"","source_document":"doc.txt"}}""")
-    val qd = VectorDbSinks.Qdrant.entry(rec, "job1", 7L, 0)
+    val qd = entry(VectorDbSinks.Qdrant)
     assert(qd.contains(""""vector":[0.5,1.0]""") && qd.contains(""""payload":{"source_text""""))
-    val weav = VectorDbSinks.Weaviate.entry(rec, "job1", 7L, 0)
+    val weav = entry(VectorDbSinks.Weaviate)
     // quirk 6: the reference writes the misspelled property
     assert(weav.contains(""""vectoflow_id":""") && !weav.contains(""""vectorflow_id":"""))
     assert(weav.contains(""""source_data":"some \"text\""""))
@@ -145,6 +151,49 @@ class VectorDbSinksSpec extends AnyFunSuite {
     } finally server.stop(0)
   }
 
+  test("DataSourceV2 writer: up to 4 upserts in flight, ids numbered in row order") {
+    val store = new SlowStore(latencyMs = 50)
+    try {
+      val batches = 40
+      val n = batches * 4
+      writeRows(n, store.url, "overlap-job", batchSize = 4)
+      assert(store.peak.get() == 4, "a write task keeps exactly 4 upserts in flight")
+      val entries = store.entries()
+      assert(entries.size == n, "each row is delivered once")
+      assert(entries.map(_._1).toSet == (0 until n).map(Uuid5.ofParts("overlap-job", 0L, _)).toSet)
+      // the id of row i is uuid5(job, partition, i), whichever thread sent it
+      entries.foreach { case (id, row) => assert(id == Uuid5.ofParts("overlap-job", 0L, row)) }
+      assert(VectorDbDataSource.lastCommitStats.contains(VectorDbDataSource.CommitStats(n, 0, 1)))
+      assert(store.spanMs < batches * 50 / 2,
+        s"$batches upserts of 50 ms took ${store.spanMs} ms at the store")
+      assert(liveUpsertThreads().isEmpty)
+    } finally store.stop()
+  }
+
+  test("DataSourceV2 writer: a batch failing beside in-flight ones is counted; " +
+      "no upsert thread outlives a write or a task death") {
+    // the 4-row batch holding row 13 500s on every try
+    val store = new SlowStore(latencyMs = 50, fail = _.contains("\"text13\""))
+    try {
+      writeRows(160, store.url, "fail-job", batchSize = 4)
+      assert(store.peak.get() == 4)
+      assert(VectorDbDataSource.lastCommitStats.contains(VectorDbDataSource.CommitStats(156, 4, 1)))
+      assert(liveUpsertThreads().isEmpty)
+    } finally store.stop()
+    // the first attempt dies at row 150 with batches in flight; they
+    // finish (not interrupted) and the retry re-sends the same ids
+    val chaos = new SlowStore(latencyMs = 50)
+    try {
+      writeRows(300, chaos.url, "death-job", batchSize = 4, dieAt = Some(150))
+      // the dead attempt's 37 submitted batches all land (rows 148-149
+      // were still buffered), then the retry's 75
+      assert(chaos.entries().size == 148 + 300)
+      assert(chaos.entries().map(_._1).toSet.size == 300)
+      assert(VectorDbDataSource.lastCommitStats.contains(VectorDbDataSource.CommitStats(300, 0, 1)))
+      assert(liveUpsertThreads().isEmpty)
+    } finally chaos.stop()
+  }
+
   test("DataSourceV2 writer rejects unknown shapes at planning time") {
     import spark.implicits._
     val df = Seq(VectorRecord("a", "t", "d", Array(1f))).toDS().toDF()
@@ -179,6 +228,72 @@ class VectorDbSinksSpec extends AnyFunSuite {
     // webhook URL without key rejected
     val wh = ok.copy(webhookUrl = Some("http://x"), webhookKey = None)
     assert(RequestValidator.validate(wh).contains(RequestValidator.Webhook))
+  }
+
+  /** Write rows `text0`… of one partition to `url` in the Qdrant shape;
+    * with `dieAt`, the task's first attempt dies at that row. */
+  private def writeRows(n: Int, url: String, jobId: String, batchSize: Int,
+                        dieAt: Option[Int] = None): Unit = {
+    import spark.implicits._
+    (0 until n)
+      .map(i => VectorRecord(s"r$i", s"text$i", "doc", Array(i.toFloat)))
+      .toDS()
+      .coalesce(1)
+      .map { r =>
+        val tc = org.apache.spark.TaskContext.get()
+        if (dieAt.exists(d => r.id == s"r$d") && tc != null && tc.attemptNumber() == 0)
+          throw new RuntimeException("chaos: injected task death")
+        r
+      }
+      .toDF()
+      .write.format("graft.sinks.VectorDbDataSource")
+      .option("url", url).option("apiKey", "key").option("shape", "QDRANT")
+      .option("jobId", jobId).option("batchSize", batchSize.toString)
+      .mode("append").save()
+  }
+
+  /** A Qdrant store that answers each POST after `latencyMs` (500 when
+    * `fail` holds for its body), serving requests concurrently and
+    * recording the peak number in progress at once. */
+  private final class SlowStore(latencyMs: Long, fail: String => Boolean = _ => false) {
+    private val bodies = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    private val inFlight = new java.util.concurrent.atomic.AtomicInteger()
+    val peak = new java.util.concurrent.atomic.AtomicInteger()
+    private val firstNs = new java.util.concurrent.atomic.AtomicLong(Long.MaxValue)
+    private val lastNs = new java.util.concurrent.atomic.AtomicLong(0L)
+    private val threads = java.util.concurrent.Executors.newFixedThreadPool(8)
+    private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.setExecutor(threads)
+    server.createContext("/points", (ex: HttpExchange) => {
+      firstNs.accumulateAndGet(System.nanoTime(), math.min)
+      val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+      peak.accumulateAndGet(inFlight.incrementAndGet(), math.max)
+      Thread.sleep(latencyMs)
+      // leave before answering, so the writer's next POST cannot overlap
+      inFlight.decrementAndGet()
+      lastNs.accumulateAndGet(System.nanoTime(), math.max)
+      if (fail(body)) respond(ex, 500, "boom")
+      else { bodies.add(body); respond(ex, 200, "ok") }
+    })
+    server.start()
+    val url = s"http://127.0.0.1:${server.getAddress.getPort}"
+    /** (id, row number) of every delivered entry. */
+    def entries(): Seq[(String, Int)] =
+      scala.jdk.CollectionConverters.IteratorHasAsScala(bodies.iterator()).asScala.toSeq
+        .flatMap(""""id":"([0-9a-f-]+)","vector":\[[^\]]*\],"payload":\{"source_text":"text(\d+)"""".r
+          .findAllMatchIn(_).map(m => (m.group(1), m.group(2).toInt)))
+    /** Milliseconds from the first request's arrival to the last answer. */
+    def spanMs: Long = (lastNs.get() - firstNs.get()) / 1000000L
+    def stop(): Unit = { server.stop(0); threads.shutdownNow() }
+  }
+
+  /** Names of live writer pool threads, after giving exiting ones a moment. */
+  private def liveUpsertThreads(): Seq[String] = {
+    def live = scala.jdk.CollectionConverters.SetHasAsScala(Thread.getAllStackTraces.keySet)
+      .asScala.toSeq.filter(t => t.isAlive && t.getName.startsWith("graft-vdb-upsert")).map(_.getName)
+    val deadline = System.nanoTime() + 5000000000L
+    while (live.nonEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+    live
   }
 
   private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
