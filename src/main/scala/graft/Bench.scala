@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerStageSubmitted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Executor-side facts per bench query — the forensics that separate
   * "the query did more work" from "the host was slow" (round-7: three
@@ -174,9 +173,18 @@ final class BenchQueryListener extends SparkListener {
 /** Per-round benchmark: headline queries timed at SPARK_GRAFT_SF_DIR
   * (default sf0.1), printed as one JSON line.
   *
-  * A warmup pass at sf0.001 runs every headline query first so JIT,
-  * parquet footer caches, and codegen compilation don't land in the
-  * timed numbers (first-query warmup was ~10 s otherwise). */
+  * A warmup pass at sf0.001 runs every headline query first so JIT and
+  * parquet footer caches don't land in the timed numbers (first-query
+  * warmup was ~10 s otherwise). Codegen compilation is kept out only
+  * for the classes still in Spark's JVM-wide LRU class cache at a row's
+  * timed pass. At Spark's default 100 entries none were: the 159 rows'
+  * warm-up classes evicted each other long before their timed passes,
+  * so every timed row Janino-compiled its classes again. The session
+  * now holds `Graft.CodegenCacheEntries` (1000) classes, so a row keeps
+  * its warm-up classes unless the rows run between its two passes
+  * generate more than that; a row whose sf0.1 plan differs from its
+  * sf0.001 plan (join strategy, AQE partitioning) still compiles the
+  * differing classes in its timed pass. */
 object Bench {
 
   /** Scale-representative subset: one per operator family. The pairwise
@@ -275,13 +283,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.localBuilder(cpus.toInt, "bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val qs = SparkEntry.queries
@@ -612,7 +614,11 @@ object Bench {
     //    The floor is deliberately high: Catalyst plan-compile + JIT
     //    CPU is real per-query driver work that reaches ~5 s on
     //    cold complex plans (q36 measured 4.8 s excess on a QUIET
-    //    4-query run), while r9's actual contamination rows all
+    //    4-query run; part of that was measured under Spark's default
+    //    100-entry codegen class cache, which made rows Janino- and
+    //    JIT-compile again classes their warm-up had already built
+    //    — see Graft.CodegenCacheEntries), while r9's actual
+    //    contamination rows all
     //    carried ≥ 15 s of excess; contention milder than the floor
     //    is the probe's job to catch.
     val medianOps = {

@@ -9,18 +9,52 @@ import org.apache.spark.sql.SparkSession
   */
 object Graft {
 
-  /** Build a local session wired for this engine. Cluster deployments
-    * use their own builder + `withExtensions(new plans.GraftExtensions)`
-    * + `functions.GraftFunctions.register`. */
-  def session(cores: Int = Runtime.getRuntime.availableProcessors(),
-              appName: String = "graft"): SparkSession = {
-    val spark = SparkSession.builder()
+  /** Entries of Spark's JVM-wide generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, Spark's default 100).
+    * `CodeGenerator` keeps every compiled class in one LRU cache shared
+    * by all sessions of the JVM. One run of p18_curate_full generates
+    * 120–130 distinct classes: a 100-entry LRU cycling through them
+    * misses on nearly every lookup, so every warm run Janino-compiled
+    * almost all of them again (five runs at sf0.001 in one JVM, Bench's
+    * teardown between runs: 122, 111, 108, 109, 109 compiles) and the
+    * JIT compiled each new class again — 58 % of a warm perfbench p18
+    * run's process CPU was JIT compiler threads. With 1000 entries the
+    * same five runs compile 122, 18, 20, 8, 0 classes (`CodegenCacheSpec`
+    * runs them in a fresh JVM). 1000 holds p18's class set several
+    * times over, with room for the other queries a session runs.
+    *
+    * The cache is sized once per JVM, from the conf of the session in
+    * use when `CodeGenerator` first loads: only the builder of a JVM's
+    * first session sets it. */
+  private val CodegenCacheEntries = 1000
+
+  /** The local-mode settings of [[session]], Bench and Verify: `cores`
+    * worker threads and as many shuffle partitions, AQE, UTC, no UI, and
+    * [[CodegenCacheEntries]]. Adds no extensions; [[session]] does. */
+  private[graft] def localBuilder(cores: Int,
+                                  appName: String): SparkSession.Builder =
+    SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries",
+        CodegenCacheEntries.toString)
+
+  /** Build a local session wired for this engine. Cluster deployments
+    * use their own builder + `withExtensions(new plans.GraftExtensions)`
+    * + `functions.GraftFunctions.register`.
+    *
+    * Sizes Spark's generated-class cache to [[CodegenCacheEntries]]
+    * (see there for the measured class counts). That size is fixed per
+    * JVM when `CodeGenerator` first loads, so it only takes effect when
+    * this call builds the JVM's first session: `getOrCreate` on an
+    * existing session cannot change it. */
+  def session(cores: Int = Runtime.getRuntime.availableProcessors(),
+              appName: String = "graft"): SparkSession = {
+    val spark = localBuilder(cores, appName)
       .withExtensions(new plans.GraftExtensions)
       .getOrCreate()
     install(spark)

@@ -3,6 +3,7 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
@@ -15,8 +16,10 @@ import graft.BenchQueryListener
   * `<outDir>/<query>.txt` (the format of the committed `plans/rNN/`
   * dumps), then [[WarmRuns]] warm runs. Each run is a `count()` followed
   * by Bench's teardown (`CacheLedger.releaseAll()` + `clearCache()`).
-  * Prints the cold time, the min and median warm time, and the last
-  * warm run's stages by summed executor run time with their call sites.
+  * Prints the cold time, the min and median warm time, the Janino
+  * compiles of each warm run (classes that missed Spark's generated-class
+  * cache), and the last warm run's stages by summed executor run time
+  * with their call sites.
   * An A/B compares two builds, each running the same command.
   *
   * Run: `sbt "runMain graft.tools.Inspect <q1,q2,...> <sfDir> [outDir]"`
@@ -27,7 +30,7 @@ object Inspect {
   private val StageRows = 10
 
   final case class Report(query: String, rows: Long, coldSec: Double,
-                          warmSec: Seq[Double],
+                          warmSec: Seq[Double], warmCompiles: Seq[Long],
                           stages: Seq[(Int, Long, Long, String)]) {
     def minSec: Double = warmSec.min
     def medianSec: Double = warmSec.sorted.apply(warmSec.length / 2)
@@ -46,30 +49,35 @@ object Inspect {
       throw new IllegalArgumentException(s"unknown query: $name"))
     val listener = new BenchQueryListener
     spark.sparkContext.addSparkListener(listener)
-    def timed(): (Long, Double) = {
+    // JVM-wide count: a run's delta also holds any other thread's compiles
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def timed(): (Long, Double, Long) = {
       listener.reset()
+      val c0 = compiles
       val t0 = System.nanoTime()
       val rows = q(spark, sfDir).count()
       val sec = (System.nanoTime() - t0) / 1e9
       listener.settle()
       teardown(spark)
-      (rows, sec)
+      (rows, sec, compiles - c0)
     }
     try {
-      val (rows, cold) = timed()
+      val (rows, cold, _) = timed()
       Files.createDirectories(outDir)
       Files.write(outDir.resolve(s"$name.txt"),
         q(spark, sfDir).queryExecution.explainString(FormattedMode)
           .getBytes(StandardCharsets.UTF_8))
       teardown(spark)
-      val warm = Seq.fill(WarmRuns)(timed()._2)
-      Report(name, rows, cold, warm, listener.stageTimes)
+      val warm = Seq.fill(WarmRuns)(timed())
+      Report(name, rows, cold, warm.map(_._2), warm.map(_._3),
+        listener.stageTimes)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   def render(r: Report): String = {
     val head = f"${r.query} rows=${r.rows} cold ${r.coldSec}%.3f s, warm " +
-      f"min ${r.minSec}%.3f s median ${r.medianSec}%.3f s (${r.warmSec.length} runs)"
+      f"min ${r.minSec}%.3f s median ${r.medianSec}%.3f s (${r.warmSec.length} runs), " +
+      s"codegen compiles per warm run ${r.warmCompiles.mkString("/")}"
     val table = r.stages.take(StageRows).map { case (sid, run, cpu, site) =>
       f"  $sid%6d $run%9d $cpu%9d  $site"
     }

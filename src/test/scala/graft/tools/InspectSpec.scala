@@ -6,8 +6,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Smoke test for [[Inspect]]'s entry function: plan dump, timings and
-  * the unknown-name failure. */
+/** Smoke test for [[Inspect]]'s entry function: plan dump, timings,
+  * per-run compile counts and the unknown-name failure. */
 class InspectSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -30,7 +30,12 @@ class InspectSpec extends AnyFunSuite {
       assert(r.rows > 0)
       assert(r.warmSec.length == Inspect.WarmRuns && r.warmSec.forall(_ > 0))
       assert(r.stages.nonEmpty, "no stage was attributed")
-      assert(Inspect.render(r).contains(f"median ${r.medianSec}%.3f s"))
+      assert(r.warmCompiles.length == Inspect.WarmRuns &&
+        r.warmCompiles.forall(_ >= 0))
+      val shown = Inspect.render(r)
+      assert(shown.contains(f"median ${r.medianSec}%.3f s"))
+      assert(shown.contains(
+        s"codegen compiles per warm run ${r.warmCompiles.mkString("/")}"), shown)
     } finally { Files.deleteIfExists(dump); Files.delete(out) }
   }
 
