@@ -34,7 +34,7 @@ object Verify {
         } catch { case _: Throwable => () }
       }
       // release operator-internal persists between queries (the Bench
-      // convention): 223 queries in one JVM otherwise accumulate pinned
+      // convention): 243 queries in one JVM otherwise accumulate pinned
       // MEMORY_AND_DISK entries and the later queries pay GC pressure
       graft.core.Caching.CacheLedger.releaseAll()
       spark.catalog.clearCache()

@@ -56,22 +56,15 @@ object Hits {
     finally pinned.foreach(_.unpersist(blocking = false))
   }
 
-  /** The readout plan behind [[hits]] — exposed for plan inspection
-    * (PlanReport prints THIS; the public form returns a LocalRelation
-    * whose executed plan shows nothing). NOT free to construct: the
-    * regime probe and the eager vector pins run the edge count and the
-    * full k-iteration chain during construction (a diagnostic caller
-    * that then executes the returned frame pays the readout again —
-    * acceptable for diagnostics, wrong for production: use [[hits]]).
-    * `pin` receives every frame that must be persisted; the default
-    * leaks them to LRU/clearCache. */
-  private[graft] def hitsPlan(edges: DataFrame, srcCol: String,
+  /** The readout plan behind [[hits]], which materializes it into a
+    * LocalRelation. NOT free to construct: the regime probe and the
+    * eager vector pins run the edge count and the full k-iteration
+    * chain during construction. `pin` receives every frame that must
+    * be persisted. */
+  private def hitsPlan(edges: DataFrame, srcCol: String,
       dstCol: String, iterations: Int, topK: Int,
-      splitEdgeThreshold: Long,
-      pin: DataFrame => DataFrame =
-        _.persist(StorageLevel.MEMORY_AND_DISK),
-      edgesDistinct: Boolean = false,
-      localComputeMaxEdges: Long = 10000000L): DataFrame = {
+      splitEdgeThreshold: Long, pin: DataFrame => DataFrame,
+      edgesDistinct: Boolean, localComputeMaxEdges: Long): DataFrame = {
     require(iterations >= 1)
     val proj = edges
       .select(col(srcCol).cast("long").as("c"), col(dstCol).cast("long").as("p"))

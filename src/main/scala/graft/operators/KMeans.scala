@@ -54,8 +54,9 @@ object KMeans {
     // add isnotnull(cluster), and PushDownPredicates then substitutes
     // the WHOLE UDF into the pushed filter — the k·dim distance scan
     // runs twice per row (once in Filter, once in Project; r11 verdict,
-    // PLANS.md a08/a36). Blocking pushdown keeps the null-guard above
-    // the project, evaluating isnotnull on the already-computed column.
+    // seen in the a08/a36 plans; KMeansSpec pins the fixed shape).
+    // Blocking pushdown keeps the null-guard above the project,
+    // evaluating isnotnull on the already-computed column.
     f.asNondeterministic()(expr(s"transform($vecCol, x -> cast(x as double))"))
   }
 

@@ -301,14 +301,12 @@ object Profile {
     finally if (snapshot != null) snapshot.unpersist(blocking = false)
   }
 
-  /** The LAZY plan behind [[exactQuantilesDistributed]] — exposed for
-    * plan inspection (PlanReport prints THIS; the public form returns
-    * a LocalRelation). `snapshot` receives the persisted range
-    * snapshot; the default leaks it to LRU/clearCache, so
-    * non-diagnostic callers use the public form. */
-  private[graft] def exactQuantilesDistributedPlan(
+  /** The LAZY plan behind [[exactQuantilesDistributed]], which
+    * materializes it into a LocalRelation. `snapshot` receives the
+    * persisted range snapshot, which the public form releases. */
+  private def exactQuantilesDistributedPlan(
       df: DataFrame, groupCol: String, valueMicro: Column,
-      percents: Seq[Int], snapshot: DataFrame => Unit = _ => ()): DataFrame = {
+      percents: Seq[Int], snapshot: DataFrame => Unit): DataFrame = {
     val spark = df.sparkSession
     val parts = spark.sparkContext.defaultParallelism
     val base = df

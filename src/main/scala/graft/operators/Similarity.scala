@@ -645,7 +645,7 @@ object Similarity {
       // KMeans.assignExact (r12): the posexplode's inferred
       // size(...)>0 / isnotnull constraints otherwise push below the
       // Project and re-run the whole greedy selection per group in the
-      // Filter — PLANS.md showed the UDF three times in one plan
+      // Filter — the plan dump showed the UDF three times in one plan
       .asNondeterministic()
     val grouped = cands
       .groupBy(col("query_id"))

@@ -4,9 +4,9 @@ import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 
 /** Anchored greedy rate limiting — q44's batch operator, extracted so
-  * the production query, the hot-key spec, and the PlanReport
-  * measurement share ONE implementation of the gate (three verbatim
-  * copies drifted apart is the failure mode this file closes).
+  * the production query and the hot-key spec share ONE implementation
+  * of the gate (verbatim copies drifted apart is the failure mode this
+  * file closes).
   *
   * Semantics: at most one kept event per key per `gapSeconds`,
   * anchored on the last KEPT event (a LAG window measures gaps to RAW

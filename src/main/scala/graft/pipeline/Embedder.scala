@@ -112,6 +112,17 @@ sealed abstract class HttpEmbedder(url: String, subBatchSize: Int, concurrency: 
   protected def requestBody(texts: IndexedSeq[String]): String
   private[pipeline] def parseResponse(body: String, n: Int): IndexedSeq[Array[Float]]
 
+  /** Component `s` of response vector `vector`. `toFloat` also accepts
+    * `NaN`, `Infinity` and literals that overflow to ∞ (`1e39`); none is
+    * a JSON number, so a vector carrying one could not be written to a
+    * sink, and the response is rejected here. */
+  protected final def component(s: String, vector: Int): Float = {
+    val f = s.trim.toFloat
+    if (!java.lang.Float.isFinite(f)) throw new IllegalArgumentException(
+      s"embedding response vector $vector has a non-finite component '${s.trim}'")
+    f
+  }
+
   @transient private lazy val client = VectorDbSinks.httpClient()
 
   private def call(texts: IndexedSeq[String]): IndexedSeq[Array[Float]] =
@@ -159,7 +170,9 @@ final class OpenAiHttpEmbedder(baseUrl: String, model: String,
       val (idx, arr) =
         if (m.group(1) != null) (m.group(1).toInt, m.group(2))
         else (m.group(4).toInt, m.group(3))
-      out(idx) = arr.split(",").map(_.trim.toFloat)
+      require(idx < n,
+        s"embedding response index $idx is out of range for $n inputs")
+      out(idx) = arr.split(",").map(component(_, idx))
     }
     require(out.forall(_ != null), "embedding response missing indices")
     out.toIndexedSeq
@@ -199,7 +212,7 @@ final class HuggingFaceHttpEmbedder(baseUrl: String, modelName: String,
     val out = IndexedSeq.newBuilder[Array[Float]]
     var count = 0
     while (m.find()) {
-      out += m.group(1).split(",").map(_.trim.toFloat)
+      out += m.group(1).split(",").map(component(_, count))
       count += 1
     }
     require(count == n,

@@ -38,8 +38,8 @@ object CurationQueries {
     * the tf self-join is O(df²) in the hottest shingle, and at 100 TB
     * one stop-gram ("of the and") would make a single hash's bucket
     * |corpus|². On this corpus max df = 25, so the cap provably drops
-    * nothing (the unguarded output is identical); PLANS.md carries the
-    * adversarial hot-gram measurement. */
+    * nothing (the unguarded output is identical); CosinePairsSpec pins
+    * the guard's filtered-universe rule. */
   def dedupCosine(spark: SparkSession, dir: String): DataFrame =
     // TF index artifact-served (r11, the docJaccardPairs economics —
     // bench times the build as art_cosine_tf); same operator output
@@ -798,12 +798,6 @@ object CurationQueries {
     * excluded (identity lookup isn't retrieval quality). */
   def retrievalBakeoff(spark: SparkSession, dir: String): DataFrame = {
     val (c, q) = retrievalCorpusQueries(spark, dir)
-    retrievalBakeoffOf(c, q)
-  }
-
-  /** [[retrievalBakeoff]] over caller-supplied corpus/query frames —
-    * the PlanReport slope harness drives this form directly. */
-  private[graft] def retrievalBakeoffOf(c: DataFrame, q: DataFrame): DataFrame = {
     // dense exact truth: the a10 vector-leg shape, k = 10, self excluded
     val qv = q.select(col("qid").as("query_id"),
       expr("transform(qvec, x -> cast(x as double))").as("qv"))

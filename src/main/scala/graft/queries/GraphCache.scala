@@ -230,33 +230,29 @@ object GraphCache {
     * orders containing both). One aggregate serves the whole family:
     * the distinct edge set (n ≥ 1) feeds g03/g04, the strong edges
     * (n ≥ 2) feed g05, and the per-order line dedup happens BEFORE the
-    * self-join so the quadratic fan-out shrinks at the source. */
+    * pair fan-out, so the quadratic step shrinks at the source.
+    * The fan-out happens SCAN-SIDE from the order's sorted part list
+    * (round 9 — previously a self-join on l_orderkey: one extra
+    * shuffle plus the join machinery for the same ≤ C(7,2) pairs per
+    * order; the order-line cap bounds the explode exactly like it
+    * bounded the join). sort_array gives a < b for free; one
+    * groupBy(ok) + one groupBy(a, b). */
   def coPurchaseWeights(spark: SparkSession, dir: String): DataFrame =
     artifact(spark, s"copurchase_w.v1|$dir",
       Seq(s"$dir/lineitem.parquet")) {
-      coPurchaseWeightsOf(lineitem(spark, dir))
+      lineitem(spark, dir)
+        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+        // collect_set IS the per-order line dedup — the previous
+        // .distinct() pre-shuffle is subsumed by the same groupBy
+        .groupBy(col("ok"))
+        .agg(sort_array(collect_set(col("pk"))).as("ps"))
+        .select(explode(expr(
+          """flatten(transform(ps, (x, i) ->
+            |  transform(slice(ps, i + 2, size(ps)), y ->
+            |    struct(x AS a, y AS b))))""".stripMargin)).as("p"))
+        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+        .agg(count(lit(1)).as("n_orders"))
     }
-
-  /** The co-purchase build body over an explicit lineitem frame —
-    * shared with the PlanReport slope row (which feeds a synthetic
-    * ×10 table). Per-order pair fan-out happens SCAN-SIDE from the
-    * order's sorted part list (round 9 — previously a self-join on
-    * l_orderkey: one extra shuffle plus the join machinery for the
-    * same ≤ C(7,2) pairs per order; the order-line cap bounds the
-    * explode exactly like it bounded the join). sort_array gives
-    * a < b for free; one groupBy(ok) + one groupBy(a, b). */
-  private[graft] def coPurchaseWeightsOf(li: DataFrame): DataFrame =
-    li.select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      // collect_set IS the per-order line dedup — the previous
-      // .distinct() pre-shuffle is subsumed by the same groupBy
-      .groupBy(col("ok"))
-      .agg(sort_array(collect_set(col("pk"))).as("ps"))
-      .select(explode(expr(
-        """flatten(transform(ps, (x, i) ->
-          |  transform(slice(ps, i + 2, size(ps)), y ->
-          |    struct(x AS a, y AS b))))""".stripMargin)).as("p"))
-      .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-      .agg(count(lit(1)).as("n_orders"))
 
   /** The distinct co-purchase edge list — g03/g04's common graph;
     * a projection of [[coPurchaseWeights]]. */
@@ -303,8 +299,8 @@ object GraphCache {
       custPartEdgesOf(orders(spark, dir), lineitem(spark, dir))
     }
 
-  /** The cust→part build body over explicit frames — shared with the
-    * PlanReport slope row. */
+  /** The cust→part build body over explicit frames (HitsSpec builds
+    * its graph from it without the artifact store). */
   private[graft] def custPartEdgesOf(ord: DataFrame, li: DataFrame): DataFrame =
     ord.select(col("o_orderkey"), col("o_custkey"))
       .join(li.select(col("l_orderkey"), col("l_partkey")),

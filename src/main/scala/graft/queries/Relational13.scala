@@ -601,7 +601,7 @@ object Relational13 {
     * that never trained anything can SERVE. The query loads the
     * [[graft.operators.IndexStore]] IVF-PQ artifact published under the
     * shared (non-pid-tagged, atomic-rename) store path — written by a
-    * PRIOR JVM when one ran first (Bench→Verify→PlanReport rounds reuse
+    * PRIOR JVM when one ran first (Bench→Verify→Inspect runs reuse
     * it across process boundaries); trained-and-published on first
     * contact otherwise — and serves a15's exact search pipeline with
     * the LOADED model. Every run serves from the parquet artifact, so

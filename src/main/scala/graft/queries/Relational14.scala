@@ -62,12 +62,8 @@ object Relational14 {
     * (bounded heaps, ≤ k·|sources| rows to the rank window — never a
     * full sort of the corpus). Long arithmetic throughout: |resid| ≤
     * 10⁶·4095 fits comfortably. */
-  def q56QualityAnomalies(spark: SparkSession, dir: String): DataFrame =
-    q56AnomaliesOf(q55Features(documentsParallel(spark, dir)))
-
-  /** q56's body over an explicit feature frame — shared with the
-    * PlanReport slope row (which feeds a synthetic ×10 corpus). */
-  private[graft] def q56AnomaliesOf(f: DataFrame): DataFrame = {
+  def q56QualityAnomalies(spark: SparkSession, dir: String): DataFrame = {
+    val f = q55Features(documentsParallel(spark, dir))
     val model = graft.operators.Distill.solveFromStats(
       graft.operators.Distill.suffStats(f, "source", "x1", "x2", "y"))
     val scored = f.join(

@@ -108,7 +108,7 @@ class KMeansSpec extends AnyFunSuite {
     // `cluster` made InferFiltersFromConstraints push isnotnull(UDF)
     // below the Project — the k·dim distance scan ran twice per row in
     // a08/a36. The UDFs are marked nondeterministic to block that; pin
-    // the plan shape so a future revert fails here, not in PLANS.md
+    // the plan shape so a future revert fails here, not in a plan dump
     import spark.implicits._
     val e = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
       .select(col("vec_id"), col("embedding"))

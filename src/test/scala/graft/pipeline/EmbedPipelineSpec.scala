@@ -169,6 +169,32 @@ class EmbedPipelineSpec extends AnyFunSuite {
     } finally server.stop(0)
   }
 
+  test("OpenAI parser rejects non-finite components and out-of-range indices by name") {
+    val e = new OpenAiHttpEmbedder("http://127.0.0.1:1", "m", "k", dim = 2)
+    assert(e.parseResponse("""{"data":[{"index":0,"embedding":[0.5,-1.25]}]}""", 1)
+      .map(_.toSeq) == Seq(Seq(0.5f, -1.25f)))
+    for (bad <- Seq("NaN", "Infinity", "-Infinity", "1e39")) {
+      val err = intercept[IllegalArgumentException](e.parseResponse(
+        s"""{"data":[{"index":0,"embedding":[0.5,$bad]}]}""", 1))
+      assert(err.getMessage.contains(s"non-finite component '$bad'"), err.getMessage)
+    }
+    val err = intercept[IllegalArgumentException](e.parseResponse(
+      """{"data":[{"index":0,"embedding":[1.0]},{"index":2,"embedding":[2.0]}]}""", 2))
+    assert(err.getMessage.contains("index 2 is out of range for 2 inputs"), err.getMessage)
+  }
+
+  test("TEI parser rejects non-finite components by name") {
+    val e = new HuggingFaceHttpEmbedder("http://127.0.0.1:1", "BAAI/bge-small-en", dim = 2)
+    assert(e.parseResponse("[[0.5,-1.25],[3e-8,1]]", 2).map(_.toSeq) ==
+      Seq(Seq(0.5f, -1.25f), Seq(3e-8f, 1f)))
+    for (bad <- Seq("NaN", "Infinity", "-1e39")) {
+      val err = intercept[IllegalArgumentException](
+        e.parseResponse(s"[[0.5,1.0],[2.0, $bad]]", 2))
+      assert(err.getMessage.contains(s"vector 1 has a non-finite component '$bad'"),
+        err.getMessage)
+    }
+  }
+
   test("chunk-validation semi-join keeps only service-approved rows") {
     import spark.implicits._
     val chunks = (0 until 20).map(i => ChunkRow(i.toLong, "s", i, s"id$i", s"t$i")).toDS().coalesce(1)
