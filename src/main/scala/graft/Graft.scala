@@ -29,8 +29,9 @@ object Graft {
   private val CodegenCacheEntries = 1000
 
   /** The local-mode settings of [[session]], Bench and Verify: `cores`
-    * worker threads and as many shuffle partitions, AQE, UTC, no UI, and
-    * [[CodegenCacheEntries]]. Adds no extensions; [[session]] does. */
+    * worker threads and as many shuffle partitions, AQE, UTC, no UI,
+    * [[CodegenCacheEntries]] and stage-id-free generated class names.
+    * Adds no extensions; [[session]] does. */
   private[graft] def localBuilder(cores: Int,
                                   appName: String): SparkSession.Builder =
     SparkSession.builder()
@@ -42,6 +43,11 @@ object Graft {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries",
         CodegenCacheEntries.toString)
+      // whole-stage codegen names each class after its stage id, which
+      // AQE assigns in a timing-dependent order: the same body under a
+      // new id missed the class cache and was compiled again (warm p18
+      // runs 2-5 at sf0.001: 4-22 compiles each; without the id, 0 or 8)
+      .config("spark.sql.codegen.useIdInClassName", "false")
 
   /** Build a local session wired for this engine. Cluster deployments
     * use their own builder + `withExtensions(new plans.GraftExtensions)`

@@ -200,9 +200,4 @@ object Chunkers {
     * `splitlines`, so downstream joins lose them (SURVEY §7 quirk 1). */
   def splitFile(content: String, linesPerBatch: Int = 1000): Vector[Vector[String]] =
     content.linesIterator.toVector.grouped(linesPerBatch).map(_.toVector).toVector
-
-  /** Re-batching for the embedding API: groups of ≤ `maxBatchSize`
-    * (worker.py:322-324; MAX_OPENAI_EMBEDDING_BATCH_SIZE=2048). */
-  def batchesForEmbedding[T](chunks: Seq[T], maxBatchSize: Int = 2048): Vector[Seq[T]] =
-    chunks.grouped(maxBatchSize).map(_.toSeq).toVector
 }

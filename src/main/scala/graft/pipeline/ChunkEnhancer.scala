@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.sinks.InFlight
+
 /** Chunk enhancement — the reference client's LLM pipeline
   * (client/src/vectorflow_client/chunk_enhancer.py): derive a use case,
   * extract document-level entities/keywords/themes, append relevant
@@ -33,19 +35,17 @@ object ChunkEnhancer {
   }
 
   /** Append model-derived facts to every chunk text (the per-chunk
-    * enhancement), batched `batchSize` prompts per call. */
+    * enhancement), batched `batchSize` prompts per call, one call at a
+    * time per task. A chat answer with fewer completions than prompts
+    * fails the task rather than dropping chunks. */
   def enhanceChunks(chunks: Dataset[ChunkRow], chat: ChatFn = localChat,
                     batchSize: Int = 20): Dataset[ChunkRow] = {
     val spark = chunks.sparkSession
     import spark.implicits._
-    chunks.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { group =>
-        val facts = chat("enrich", group.map(_.chunk_text).toIndexedSeq)
-        group.iterator.zip(facts.iterator).map { case (c, f) =>
-          c.copy(chunk_text = s"${c.chunk_text}\n$f")
-        }
-      }
-    }
+    chunks.mapPartitions(InFlight.batched(_, batchSize, limit = 1, "enhance")(
+        batch => chat("enrich", batch.map(_.chunk_text))).flatMap { case (batch, facts) =>
+      batch.iterator.zip(facts.get.iterator).map { case (c, f) => c.copy(chunk_text = s"${c.chunk_text}\n$f") }
+    })
   }
 
   /** One summary chunk per document appended to the chunk set

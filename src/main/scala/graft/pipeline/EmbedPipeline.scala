@@ -1,10 +1,13 @@
 package graft.pipeline
 
+import scala.util.{Failure, Success}
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{ChunkStrategy, Uuid5}
 import graft.operators.Chunking
+import graft.sinks.InFlight
 
 /** One chunk flowing through the embed stage. */
 final case class ChunkRow(doc_id: Long, source: String, chunk_seq: Int,
@@ -22,9 +25,9 @@ final case class VectorRecord(id: String, source_text: String,
   * `mapPartitions` with the reference's batching envelope.
   *
   * Scale posture: chunking is narrow (no shuffle); embedding is narrow;
-  * the only shuffle is the optional ledger aggregation. Partition count
-  * governs embed-API parallelism — at 1000 executors, repartition the
-  * chunk set to ~#executors × cores before embedding.
+  * the only shuffle is the optional ledger aggregation. Each task keeps
+  * up to the embedder's `concurrency` calls in flight, so embed-API
+  * parallelism is `concurrency` × concurrently running tasks.
   */
 object EmbedPipeline {
 
@@ -43,25 +46,24 @@ object EmbedPipeline {
       .as[ChunkRow]
   }
 
-  /** The embed map: groups of ≤ `embedder.maxBatchSize` per call inside
-    * each partition (reference E1, worker.py:92-113). Order within the
-    * partition is preserved by construction. */
+  /** The embed map (reference E1, worker.py:92-113): each task cuts
+    * `embedder.maxBatchSize`-text calls as chunks arrive, keeps up to
+    * `embedder.concurrency` of them in flight, and yields each call's
+    * records in input order once it settles. A failed call fails the
+    * task. */
   def embedStage(chunks: Dataset[ChunkRow], embedder: Embedder): Dataset[VectorRecord] = {
     val spark = chunks.sparkSession
     import spark.implicits._
-    chunks.mapPartitions(_.grouped(embedder.maxBatchSize).flatMap(embedGroup(embedder, _)))
+    chunks.mapPartitions(embedCalls(embedder, _).flatMap { case (batch, vecs) => records(batch, vecs.get) })
   }
 
-  /** One group through the embedder, each chunk paired with its vector;
-    * a short answer fails the group rather than dropping chunks. */
-  private def embedGroup(embedder: Embedder, group: Seq[ChunkRow]): Iterator[VectorRecord] = {
-    val vecs = embedder.embedBatch(group.map(_.chunk_text).toIndexedSeq)
-    require(vecs.length == group.length,
-      s"embedder returned ${vecs.length} vectors for ${group.length} texts — refusing to zip-drop chunks silently")
-    group.iterator.zip(vecs.iterator).map { case (c, v) =>
-      VectorRecord(sinkId(c), c.chunk_text, c.source, v)
-    }
-  }
+  /** One task's embedding calls, each with its chunks, in input order. */
+  private def embedCalls(embedder: Embedder, chunks: Iterator[ChunkRow]) =
+    InFlight.batched(chunks, embedder.maxBatchSize, embedder.concurrency, "embed")(
+      batch => embedder.embedBatch(batch.map(_.chunk_text)))
+
+  private def records(chunks: IndexedSeq[ChunkRow], vecs: IndexedSeq[Array[Float]]): Iterator[VectorRecord] =
+    chunks.iterator.zip(vecs.iterator).map { case (c, v) => VectorRecord(sinkId(c), c.chunk_text, c.source, v) }
 
   /** The sink id carries document context (like the reference's
     * uuid5(batch_id, job_id, i), vector_uploader.py:59) — chunk_id alone
@@ -82,22 +84,20 @@ object EmbedPipeline {
                                 source_document: String, vector: Array[Float],
                                 ok: Boolean, error: String)
 
-  /** Embed with the reference's partial-failure semantics: an embed-batch
-    * failure (after the embedder's own retries) fails THOSE chunks, not
-    * the Spark job — failed rows flow to the ledger as batch failures so
-    * the job lands on PARTIALLY_COMPLETED / FAILED exactly like
-    * update_job_with_batch (job_service.py:32-51). */
+  /** Embed with the reference's partial-failure semantics: an embedding
+    * call that fails (after the embedder's own retries) fails THOSE
+    * chunks, not the Spark job — failed rows flow to the ledger as batch
+    * failures so the job lands on PARTIALLY_COMPLETED / FAILED exactly
+    * like update_job_with_batch (job_service.py:32-51). The failure unit
+    * is one call: `embedder.maxBatchSize` chunks. */
   def embedStageWithStatus(chunks: Dataset[ChunkRow], embedder: Embedder): Dataset[StatusRecord] = {
     val spark = chunks.sparkSession
     import spark.implicits._
-    chunks.mapPartitions(_.grouped(embedder.maxBatchSize).flatMap { group =>
-      try embedGroup(embedder, group).map(r =>
+    chunks.mapPartitions(embedCalls(embedder, _).flatMap {
+      case (batch, Success(vecs)) => records(batch, vecs).map(r =>
         StatusRecord(r.id, r.source_text, r.source_document, r.vector, ok = true, error = ""))
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          group.iterator.map(c => StatusRecord(sinkId(c), c.chunk_text, c.source,
-            Array.empty[Float], ok = false, error = String.valueOf(e.getMessage)))
-      }
+      case (batch, Failure(e)) => batch.iterator.map(c => StatusRecord(sinkId(c), c.chunk_text,
+        c.source, Array.empty[Float], ok = false, error = String.valueOf(e.getMessage)))
     })
   }
 
@@ -126,9 +126,4 @@ object EmbedPipeline {
       .withColumn("job_status",
         when(col("vectors_written") === col("distinct_ids"), "COMPLETED")
           .otherwise("PARTIALLY_COMPLETED"))
-
-  /** Deterministic record id for re-chunked text: uuid5(source, seq, text)
-    * — idempotent under retry, the reference's own upsert-id design. */
-  def recordId(source: String, seq: Int, text: String): String =
-    Uuid5.ofParts(source, seq, text)
 }

@@ -3,7 +3,6 @@ package graft.pipeline
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 import java.time.Duration
-import java.util.concurrent.Executors
 
 import graft.sinks.VectorDbSinks
 import graft.sinks.VectorDbSinks.q
@@ -16,15 +15,21 @@ import graft.sinks.VectorDbSinks.q
   * src/worker/worker.py:327-335) is safe, and must preserve input order —
   * the reference zips responses positionally (worker.py:75-76), which we
   * harden by index-tagging (SURVEY §7 quirk 7).
+  *
+  * The embed stage ([[EmbedPipeline.embedStage]]) cuts each task's chunks
+  * into `maxBatchSize`-text calls and keeps up to `concurrency` of them
+  * in flight, so embed parallelism is `concurrency` per task × tasks.
   */
 trait Embedder extends Serializable {
   def dim: Int
-  /** Embed one API-sized batch, preserving order: result(i) belongs to
+  /** Embed the texts of one call, preserving order: result(i) belongs to
     * texts(i). */
   def embedBatch(texts: IndexedSeq[String]): IndexedSeq[Array[Float]]
   /** Texts per call (reference MAX_OPENAI_EMBEDDING_BATCH_SIZE=2048,
     * src/worker/config.py:2). */
   def maxBatchSize: Int = 2048
+  /** Calls in flight per task. */
+  def concurrency: Int = 1
 }
 
 /** Deterministic local embedder for tests/benchmarks: seeds SplitMix64
@@ -95,18 +100,16 @@ final class Md5Embedder(override val dim: Int = 64) extends Embedder {
   }
 }
 
-/** The HTTP embedders' one body. A group of texts splits into
-  * `subBatchSize`-text sub-calls, fanned out over at most `concurrency`
-  * threads inside the Spark task. Each sub-call is one
+/** The HTTP embedders' one body. Each `embedBatch` is one call: one
   * [[graft.sinks.VectorDbSinks.postWithRetry]] of 5 tries with a 2^i s
   * backoff (reference get_openai_embedding, worker.py:77-90), so a
-  * transient failure resends only its own sub-batch; a sub-call that
-  * fails its last try fails the whole group (worker.py:92-113). Each
-  * sub-call's vectors keep its position, so response order cannot
-  * scramble the zip. Subclasses give only the wire format. */
-sealed abstract class HttpEmbedder(url: String, subBatchSize: Int, concurrency: Int)
+  * transient failure resends only its own texts; a call that fails its
+  * last try fails its texts (worker.py:92-113). The embed stage keeps up
+  * to `concurrency` calls in flight per task. Subclasses give only the
+  * wire format. */
+sealed abstract class HttpEmbedder(url: String, override val maxBatchSize: Int,
+                                   override val concurrency: Int)
     extends Embedder {
-  override def maxBatchSize: Int = subBatchSize * concurrency
 
   protected def headers: Seq[(String, String)]
   protected def requestBody(texts: IndexedSeq[String]): String
@@ -125,33 +128,23 @@ sealed abstract class HttpEmbedder(url: String, subBatchSize: Int, concurrency: 
 
   @transient private lazy val client = VectorDbSinks.httpClient()
 
-  private def call(texts: IndexedSeq[String]): IndexedSeq[Array[Float]] =
+  override def embedBatch(texts: IndexedSeq[String]): IndexedSeq[Array[Float]] =
     VectorDbSinks.postWithRetry(client, url, headers, requestBody(texts),
         attempts = 5, baseDelayMs = 1000L, timeout = Duration.ofSeconds(60))
       .fold(e => throw new java.io.IOException(s"embedding call to $url failed: $e"),
         parseResponse(_, texts.length))
-
-  override def embedBatch(texts: IndexedSeq[String]): IndexedSeq[Array[Float]] = {
-    val subBatches = texts.grouped(subBatchSize).toIndexedSeq
-    if (concurrency <= 1 || subBatches.lengthCompare(1) <= 0) subBatches.flatMap(call)
-    else {
-      val pool = Executors.newFixedThreadPool(math.min(concurrency, subBatches.length))
-      try subBatches.map(b => pool.submit(() => call(b))).flatMap(_.get())
-      finally pool.shutdownNow()
-    }
-  }
 }
 
 /** OpenAI-compatible `/v1/embeddings` HTTP embedder.
   *
   * Matches the reference's designed throughput envelope: ≤2048 texts per
-  * call (worker.py:96) fanned out over 20 parallel calls per partition
+  * call (worker.py:96), up to 20 calls in flight per task
   * (MAX_THREADS_OPENAI=20, worker.py:100-102). The response's `index`
   * tags place each vector. Intended for real deployments; tests exercise
   * it against a local stub server. */
 final class OpenAiHttpEmbedder(baseUrl: String, model: String,
                                apiKey: String, override val dim: Int)
-    extends HttpEmbedder(s"$baseUrl/v1/embeddings", subBatchSize = 2048, concurrency = 20) {
+    extends HttpEmbedder(s"$baseUrl/v1/embeddings", maxBatchSize = 2048, concurrency = 20) {
 
   override protected def headers: Seq[(String, String)] =
     Seq("Authorization" -> s"Bearer $apiKey")
@@ -189,14 +182,14 @@ final class OpenAiHttpEmbedder(baseUrl: String, model: String,
   *
   * Speaks the public text-embeddings-inference convention: POST
   * `$baseUrl/embed` with `{"inputs":[...]}`, response a top-level
-  * array of float arrays in request order. Sub-batches of 32 per the
-  * reference's constant, sent one at a time (the reference's HF
+  * array of float arrays in request order. Calls of 32 texts per the
+  * reference's constant, one in flight per task (the reference's HF
   * consumer is a single local model server fed one queue message at a
   * time — fanning 20 concurrent calls at one local GPU would just
   * queue there). */
 final class HuggingFaceHttpEmbedder(baseUrl: String, modelName: String,
                                     override val dim: Int)
-    extends HttpEmbedder(s"$baseUrl/embed", subBatchSize = 32, concurrency = 1) {
+    extends HttpEmbedder(s"$baseUrl/embed", maxBatchSize = 32, concurrency = 1) {
   require(modelName.nonEmpty, "hugging_face_model_name required")
 
   override protected def headers: Seq[(String, String)] = Nil

@@ -19,7 +19,7 @@ object Routing {
     * .yaml:27-29, worker config.py:6) and requires the model name,
     * failing with the validator's reserved message otherwise; any
     * other declared type is a permanent failure (`bypass_retries=True`
-    * — no retry). Both HTTP legs retry each sub-call 5 times with
+    * — no retry). Both HTTP legs retry each call 5 times with
     * exponential backoff ([[HttpEmbedder]]). The deterministic local
     * embedder is reachable as LOCAL for tests/benchmarks. */
   def embedderFor(embeddingsType: String, baseUrl: String = "https://api.openai.com",

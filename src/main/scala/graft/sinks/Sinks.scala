@@ -2,8 +2,6 @@ package graft.sinks
 
 import org.apache.spark.sql.Dataset
 
-import graft.pipeline.VectorRecord
-
 /** Vector sinks (SURVEY.md §2.6). The vector-DB uploads (Pinecone /
   * Qdrant / Weaviate, K1-K3) and the raw-embeddings webhook (K4) all
   * reduce to: per partition, micro-batches of ≤128 records POSTed to an
@@ -21,22 +19,15 @@ object Sinks {
     * (src/worker/config.py:3). */
   final val UpsertBatchSize = 128
 
-  /** K6: parquet vector store — the local/test oracle sink. */
-  def writeParquet(records: Dataset[VectorRecord], path: String): Unit =
-    records.write.mode("overwrite").parquet(path)
-
   /** F4: chunk-validation webhook — a semi-join against an external
     * service: POST the partition's chunk texts, keep only the indices the
     * service returns (reference worker.py:148-172; the row set is
     * *replaced* by the service's answer, so this cannot be a Catalyst
     * filter). The `validate` function abstracts the HTTP call so tests
-    * can inject a local stub. */
+    * can inject a local stub; calls run one at a time per task on the
+    * remote legs' one call loop, [[InFlight]]. */
   def validateChunks[T](ds: Dataset[T], batchSize: Int = UpsertBatchSize)(
-      validate: Seq[T] => Seq[T]): Dataset[T] = {
-    import ds.sparkSession.implicits._
-    implicit val enc = ds.encoder
-    ds.mapPartitions { it =>
-      it.grouped(batchSize).flatMap(b => validate(b.toSeq))
-    }
-  }
+      validate: Seq[T] => Seq[T]): Dataset[T] =
+    ds.mapPartitions(it =>
+      InFlight.ordered(it.grouped(batchSize), limit = 1, "graft-validate")(validate).flatten)(ds.encoder)
 }

@@ -1,8 +1,6 @@
 package graft.sinks
 
 import java.util
-import java.util.concurrent.{ExecutionException, Executors, Future, ThreadFactory, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -36,8 +34,9 @@ import graft.pipeline.VectorRecord
   *  - every task buffers `batchSize` (default 128) rows per POST, the
   *    reference's micro-batch size, each POST retried with backoff;
   *  - up to 4 batches are in flight per task, each encoded and POSTed
-  *    off the task thread; `abort`/`close` drop only unsent rows and
-  *    wait for the in-flight batches instead of interrupting them;
+  *    off the task thread ([[InFlight]], the loop the embed stage also
+  *    uses); `abort`/`close` drop only unsent rows and wait for the
+  *    in-flight batches instead of interrupting them;
   *  - record ids are uuid5(jobId, partitionId, i) — identical on task
   *    RETRY, so a re-executed task overwrites its own rows (upsert
   *    idempotency is the abort story: aborted tasks need no undo); the
@@ -140,10 +139,10 @@ private[sinks] class VdbWriterFactory(conf: VdbWriteConf, schema: StructType)
 }
 
 /** One task's writer. The task thread only cuts `batchSize`-row batches
-  * and numbers their rows; a pool of [[VdbDataWriter.InFlight]] threads
-  * encodes and POSTs them, so up to that many upserts overlap. When that
-  * many are pending, `write` waits for the oldest: a task buffers at
-  * most `InFlight + 1` batches. Outcomes are settled in submission order. */
+  * and numbers their rows; up to 4 of them are encoded and POSTed at
+  * once on an [[InFlight]] pool (threads
+  * `graft-vdb-upsert-<partition>-<n>`), so a task buffers at most 5
+  * batches. Outcomes are counted in submission order. */
 private[sinks] class VdbDataWriter(conf: VdbWriteConf, schema: StructType,
                                    partitionId: Int)
     extends DataWriter[InternalRow] {
@@ -156,16 +155,8 @@ private[sinks] class VdbDataWriter(conf: VdbWriteConf, schema: StructType,
   private val idxText = schema.fieldIndex("source_text")
   private val idxDoc = schema.fieldIndex("source_document")
   private val idxVec = schema.fieldIndex("vector")
-  private val pool = Executors.newFixedThreadPool(VdbDataWriter.InFlight, new ThreadFactory {
-    private val n = new AtomicInteger()
-    override def newThread(r: Runnable): Thread = {
-      val t = new Thread(r, s"graft-vdb-upsert-$partitionId-${n.getAndIncrement()}")
-      t.setDaemon(true)
-      t
-    }
-  })
-  /** Submitted batches, oldest first: (sent?, rows). */
-  private val pending = new util.ArrayDeque[(Future[Boolean], Int)]()
+  /** Upserts in flight, each settling as (sent?, rows). */
+  private val upserts = new InFlight[(Boolean, Int)](limit = 4, "graft-vdb-upsert")
   private var buf = new ArrayBuffer[VectorRecord](conf.batchSize)
   private var i = 0
   private var uploaded = 0L
@@ -182,30 +173,23 @@ private[sinks] class VdbDataWriter(conf: VdbWriteConf, schema: StructType,
     if (buf.length >= conf.batchSize) submit()
   }
 
-  private def submit(): Unit = {
-    if (buf.nonEmpty) {
-      if (pending.size >= VdbDataWriter.InFlight) settle()
-      val batch = buf
-      val first = i
-      buf = new ArrayBuffer[VectorRecord](conf.batchSize)
-      i += batch.length
-      val sent = pool.submit(() => VectorDbSinks.postWithRetry(client, url, headers,
-        shape.body(batch, conf.jobId, partitionId.toLong, first),
-        conf.attempts, baseDelayMs = 200L).isRight)
-      pending.add((sent, batch.length))
-    }
+  private def submit(): Unit = if (buf.nonEmpty) {
+    if (upserts.isFull) count(upserts.settle())
+    val batch = buf
+    val first = i
+    buf = new ArrayBuffer[VectorRecord](conf.batchSize)
+    i += batch.length
+    upserts.submit((VectorDbSinks.postWithRetry(client, url, headers,
+      shape.body(batch, conf.jobId, partitionId.toLong, first),
+      conf.attempts, baseDelayMs = 200L).isRight, batch.length))
   }
 
-  /** Wait for the oldest pending batch and count it. */
-  private def settle(): Unit = {
-    val (sent, rows) = pending.poll()
-    val ok = try sent.get() catch { case e: ExecutionException => throw e.getCause }
-    if (ok) uploaded += rows else failed += rows
-  }
+  private def count(upsert: (Boolean, Int)): Unit =
+    if (upsert._1) uploaded += upsert._2 else failed += upsert._2
 
   override def commit(): WriterCommitMessage = {
     submit()
-    while (!pending.isEmpty) settle()
+    while (!upserts.isEmpty) count(upserts.settle())
     // a task whose uploads ALL failed poisons the job: surface it as a
     // task failure so Spark retries (idempotent ids make that safe)
     if (failed > 0 && uploaded == 0)
@@ -217,19 +201,8 @@ private[sinks] class VdbDataWriter(conf: VdbWriteConf, schema: StructType,
     * upsert, so it is left to finish rather than interrupted. */
   override def abort(): Unit = {
     buf.clear()
-    drain()
+    upserts.close()
   }
 
-  override def close(): Unit = drain()
-
-  private def drain(): Unit = {
-    pool.shutdown()
-    try while (!pool.awaitTermination(1, TimeUnit.MINUTES)) ()
-    catch { case _: InterruptedException => Thread.currentThread().interrupt() }
-  }
-}
-
-private[sinks] object VdbDataWriter {
-  /** Upserts in flight per write task. */
-  private val InFlight = 4
+  override def close(): Unit = upserts.close()
 }

@@ -167,7 +167,7 @@ object VectorDbSinks {
   /** POST `body` to `url` with `attempts` tries and exponential backoff
     * starting at `baseDelayMs`: Right(response body) on the first 200,
     * else Left(the last failure). The one retry loop of the remote legs —
-    * every sink batch and every embedding sub-call is one such call, so a
+    * every sink batch and every embedding call is one such call, so a
     * protocol fix (status handling, retry policy) lands in one place. */
   private[graft] def postWithRetry(client: HttpClient, url: String,
                                    headers: Seq[(String, String)], body: String,

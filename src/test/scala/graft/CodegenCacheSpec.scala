@@ -17,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * session is `Graft.session(4)` ([[CodegenCacheRuns]]). */
 class CodegenCacheSpec extends AnyFunSuite {
 
-  test("p18: warm runs in a fresh Graft.session JVM compile fewer than 20 classes") {
+  test("p18: warm runs in a fresh Graft.session JVM compile fewer than 10 classes") {
     val tmp = Files.createTempDirectory("codegen-cache")
     val log = tmp.resolve("child.log")
     val cmd = Seq(Paths.get(sys.props("java.home"), "bin", "java").toString) ++
@@ -36,7 +36,9 @@ class CodegenCacheSpec extends AnyFunSuite {
       info(s"Janino compiles per p18 run: ${counts.mkString(", ")}")
       // the first run builds p18's ~122 classes: a blind counter reads 0
       assert(counts.head >= 50, counts)
-      assert(counts.drop(3).forall(_ < 20), counts)
+      // with stage ids out of the class names, runs 4 and 5 compiled 0 or
+      // 8 classes in three JVMs (0 to 14 with the ids in)
+      assert(counts.drop(3).forall(_ < 10), counts)
     } finally {
       child.destroyForcibly()
       graft.core.Fs.deleteTree(tmp)

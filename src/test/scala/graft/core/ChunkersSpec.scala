@@ -1,6 +1,11 @@
 package graft.core
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.pipeline.{ChunkRow, EmbedPipeline, Embedder}
 
 /** Golden tests ported from the reference's chunker suite
   * (reference: src/worker/tests/test_worker.py:221-344). The token-window
@@ -101,11 +106,26 @@ class ChunkersSpec extends AnyFunSuite {
     assert(chunks(1).text.take(10) == " longer so")
   }
 
-  // test_worker.py:289-297
+  // test_worker.py:289-297 — the embed stage cuts one partition's
+  // chunks into calls of at most 2048 texts
   test("embedding re-batch: 4*2048 chunks -> 4 batches") {
-    val batches = Chunkers.batchesForEmbedding(Seq.fill(2048 * 4)("test"), 2048)
-    assert(batches.length == 4)
-    assert(batches.forall(_.length == 2048))
+    val spark = SparkSession.builder().master("local[2]")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    import spark.implicits._
+    // closures are serialized per task even in local mode: collect the
+    // call sizes through an accumulator
+    val sizes = spark.sparkContext.collectionAccumulator[Int]("call_sizes")
+    val counting = new Embedder {
+      override val dim = 1
+      override def embedBatch(texts: IndexedSeq[String]): IndexedSeq[Array[Float]] = {
+        sizes.add(texts.length)
+        texts.map(_ => Array(0f))
+      }
+    }
+    val chunks = (0 until 2048 * 4).map(i => ChunkRow(i.toLong, "s", 0, s"c$i", "test"))
+      .toDS().coalesce(1)
+    assert(EmbedPipeline.embedStage(chunks, counting).count() == 2048 * 4)
+    assert(sizes.value.asScala.toSeq == Seq.fill(4)(2048))
   }
 
   // test_worker.py:299-311

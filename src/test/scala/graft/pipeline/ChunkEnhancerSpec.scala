@@ -52,4 +52,13 @@ class ChunkEnhancerSpec extends AnyFunSuite {
     assert(!sizes.value.isEmpty)
     sizes.value.forEach(n => assert(n <= 7))
   }
+
+  test("a chat answer short of its prompts fails by name instead of dropping chunks") {
+    val short: ChunkEnhancer.ChatFn = (_, prompts) => prompts.drop(1).map(_ => "x")
+    val e = intercept[Exception](ChunkEnhancer.enhanceChunks(chunks, short).collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.matches("(?s).*enhance call returned (\\d+) results for \\d+ inputs.*")),
+      messages.mkString("\n"))
+  }
 }

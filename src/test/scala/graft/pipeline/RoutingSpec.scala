@@ -55,16 +55,16 @@ class RoutingSpec extends AnyFunSuite {
       val emb = Routing.embedderFor("HUGGING_FACE", baseUrl = base, dim = 2,
         huggingFaceModelName = Some("BAAI/bge-small-en"))
         .fold(e => fail(e), identity)
-      // 65 texts = 3 sub-batches (32 + 32 + 1 per HUGGING_FACE_BATCH_SIZE,
+      // 65 texts = 3 calls (32 + 32 + 1 per HUGGING_FACE_BATCH_SIZE,
       // worker config.py:6)
-      val out = emb.embedBatch((0 until 65).map(i => s"text $i"))
+      val out = embed(emb, (0 until 65).map(i => s"text $i"))
       assert(out.length == 65)
       assert(out.forall(_.length == 2))
-      assert(maxBatchSeen.get() == 32, "sub-batch must cap at 32")
-      // 3 sub-batches + 1 resend of the 500'd one alone = 4 POSTs; then
+      assert(maxBatchSeen.get() == 32, "a call must cap at 32 texts")
+      // 3 calls + 1 resend of the 500'd one alone = 4 POSTs; then
       // 10 texts fit 1 call
       assert(posts.get() == 4)
-      assert(emb.embedBatch((0 until 10).map(_.toString)).length == 10)
+      assert(embed(emb, (0 until 10).map(_.toString)).length == 10)
       assert(posts.get() == 5)
     } finally server.stop(0)
   }
@@ -100,9 +100,10 @@ class RoutingSpec extends AnyFunSuite {
   }
 
   test("OPEN_AI leg: a 503 resends only its own 2048-text sub-call") {
-    // 2049 texts = 2 sub-calls (2048 + 1, worker.py:96); the first POST
-    // to arrive is refused once. The failed sub-call alone is retried:
-    // 3 POSTs, and every text reaches a 200 exactly once.
+    // 2049 texts = 2 calls (2048 + 1, worker.py:96), both in flight at
+    // once; the first POST to arrive is refused once. The failed call
+    // alone is retried: 3 POSTs, and every text reaches a 200 exactly
+    // once.
     val posts = new java.util.concurrent.atomic.AtomicInteger(0)
     val answered = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
@@ -121,13 +122,40 @@ class RoutingSpec extends AnyFunSuite {
       val emb = Routing.embedderFor("OPEN_AI", baseUrl = s"http://127.0.0.1:${server.getAddress.getPort}",
         apiKey = "k", dim = 2).fold(e => fail(e), identity)
       val texts = (0 until 2049).map(i => s"t$i")
-      val out = emb.embedBatch(texts)
+      val out = embed(emb, texts)
       assert(out.length == 2049)
-      assert(out(2048).toSeq == Seq(0f, 1f), "the second sub-call's vector is misplaced")
-      assert(posts.get() == 3, "a failed sub-call must resend only itself")
+      assert(out(2048).toSeq == Seq(0f, 1f), "the second call's vector is misplaced")
+      assert(posts.get() == 3, "a failed call must resend only itself")
       import scala.jdk.CollectionConverters._
       assert(answered.asScala.toSeq.sorted == texts.sorted,
         "every text must reach a 200 exactly once")
+    } finally server.stop(0)
+  }
+
+  test("OPEN_AI leg: the failure unit of embedStageWithStatus is one 2048-text call") {
+    // 4097 chunks in one partition = 3 calls (2048 + 2048 + 1), all in
+    // flight at once; every try of the call holding "t3000" 500s. Only
+    // that call's 2048 chunks come back failed.
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/v1/embeddings", (ex: HttpExchange) => {
+      val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+      val n = "\"t\\d+\"".r.findAllMatchIn(body).length
+      if (body.contains("\"t3000\"")) respond(ex, 500, "poisoned")
+      else respond(ex, 200, (0 until n)
+        .map(i => s"""{"index":$i,"embedding":[$i.0,1.0]}""").mkString("""{"data":[""", ",", "]}"))
+    })
+    server.start()
+    try {
+      import spark.implicits._
+      val emb = Routing.embedderFor("OPEN_AI", baseUrl = s"http://127.0.0.1:${server.getAddress.getPort}",
+        apiKey = "k", dim = 2).fold(e => fail(e), identity)
+      val chunks = (0 until 4097).map(i => ChunkRow(i.toLong, "doc", 0, s"c$i", s"t$i")).toDS().coalesce(1)
+      val rows = EmbedPipeline.embedStageWithStatus(chunks, emb).collect()
+      assert(rows.map(_.source_text).toSeq == (0 until 4097).map(i => s"t$i"), "rows out of input order")
+      val failed = rows.filter(!_.ok).map(_.source_text.drop(1).toInt)
+      assert(failed.toSeq == (2048 until 4096), "only the poisoned call's 2048 rows fail")
+      assert(rows.filter(!_.ok).forall(r => r.error.contains("HTTP 500") && r.vector.isEmpty))
+      assert(rows.filter(_.ok).forall(_.vector.length == 2))
     } finally server.stop(0)
   }
 
@@ -168,6 +196,17 @@ class RoutingSpec extends AnyFunSuite {
     val hc = spark.sparkContext.hadoopConfiguration
     assert(hc.get("fs.s3a.endpoint") == "http://minio:9000")
     assert(hc.get("fs.s3a.path.style.access") == "true")
+  }
+
+  /** `texts` through the embed stage as one partition: one vector per
+    * text, in order. */
+  private def embed(emb: Embedder, texts: Seq[String]): Seq[Array[Float]] = {
+    import spark.implicits._
+    val chunks = texts.zipWithIndex.map { case (t, i) => ChunkRow(i.toLong, "doc", 0, s"c$i", t) }
+      .toDS().coalesce(1)
+    val out = EmbedPipeline.embedStage(chunks, emb).collect()
+    assert(out.map(_.source_text).toSeq == texts, "records out of input order")
+    out.map(_.vector).toSeq
   }
 
   private def respond(ex: HttpExchange, code: Int, body: String): Unit = {

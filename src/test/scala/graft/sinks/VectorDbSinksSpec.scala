@@ -8,7 +8,19 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{IngestRequest, RequestValidator, Uuid5, VectorDbConfig}
-import graft.pipeline.VectorRecord
+import graft.pipeline.{ChunkRow, EmbedPipeline, Embedder, VectorRecord}
+
+/** A local embedder whose 4-text calls take 20 ms each, up to 4 in flight
+  * per task. Top-level so the task closure doesn't capture the suite. */
+class SlowEmbedder extends Embedder {
+  override val dim = 1
+  override val maxBatchSize = 4
+  override val concurrency = 4
+  override def embedBatch(texts: IndexedSeq[String]): IndexedSeq[Array[Float]] = {
+    Thread.sleep(20)
+    texts.map(t => Array(t.length.toFloat))
+  }
+}
 
 class VectorDbSinksSpec extends AnyFunSuite {
 
@@ -152,11 +164,14 @@ class VectorDbSinksSpec extends AnyFunSuite {
   }
 
   test("DataSourceV2 writer: up to 4 upserts in flight, ids numbered in row order") {
-    val store = new SlowStore(latencyMs = 50)
+    // the store holds each request until 4 are inside at once (30 s
+    // timeout), so the write completes only if the writer overlaps 4
+    val store = new SlowStore(latencyMs = 0, together = 4)
     try {
       val batches = 40
       val n = batches * 4
       writeRows(n, store.url, "overlap-job", batchSize = 4)
+      assert(store.timeouts.get() == 0, "requests waited 30 s for 4 to be in flight at once")
       assert(store.peak.get() == 4, "a write task keeps exactly 4 upserts in flight")
       val entries = store.entries()
       assert(entries.size == n, "each row is delivered once")
@@ -164,9 +179,7 @@ class VectorDbSinksSpec extends AnyFunSuite {
       // the id of row i is uuid5(job, partition, i), whichever thread sent it
       entries.foreach { case (id, row) => assert(id == Uuid5.ofParts("overlap-job", 0L, row)) }
       assert(VectorDbDataSource.lastCommitStats.contains(VectorDbDataSource.CommitStats(n, 0, 1)))
-      assert(store.spanMs < batches * 50 / 2,
-        s"$batches upserts of 50 ms took ${store.spanMs} ms at the store")
-      assert(liveUpsertThreads().isEmpty)
+      assert(liveThreads("graft-vdb-upsert").isEmpty)
     } finally store.stop()
   }
 
@@ -178,20 +191,25 @@ class VectorDbSinksSpec extends AnyFunSuite {
       writeRows(160, store.url, "fail-job", batchSize = 4)
       assert(store.peak.get() == 4)
       assert(VectorDbDataSource.lastCommitStats.contains(VectorDbDataSource.CommitStats(156, 4, 1)))
-      assert(liveUpsertThreads().isEmpty)
+      assert(liveThreads("graft-vdb-upsert").isEmpty)
     } finally store.stop()
     // the first attempt dies at row 150 with batches in flight; they
-    // finish (not interrupted) and the retry re-sends the same ids
-    val chaos = new SlowStore(latencyMs = 50)
-    try {
-      writeRows(300, chaos.url, "death-job", batchSize = 4, dieAt = Some(150))
-      // the dead attempt's 37 submitted batches all land (rows 148-149
-      // were still buffered), then the retry's 75
-      assert(chaos.entries().size == 148 + 300)
-      assert(chaos.entries().map(_._1).toSet.size == 300)
-      assert(VectorDbDataSource.lastCommitStats.contains(VectorDbDataSource.CommitStats(300, 0, 1)))
-      assert(liveUpsertThreads().isEmpty)
-    } finally chaos.stop()
+    // finish (not interrupted) and the retry re-sends the same ids.
+    // Without and then with an embed stage keeping 4 calls in flight
+    // ahead of the writer: no embed thread outlives the dead attempt.
+    Seq(None, Some(new SlowEmbedder)).foreach { embedder =>
+      val chaos = new SlowStore(latencyMs = 50)
+      try {
+        writeRows(300, chaos.url, "death-job", batchSize = 4, dieAt = Some(150), embedder = embedder)
+        // the dead attempt's 37 submitted batches all land (rows 148-149
+        // were still buffered), then the retry's 75
+        assert(chaos.entries().size == 148 + 300)
+        assert(chaos.entries().map(_._1).toSet.size == 300)
+        assert(VectorDbDataSource.lastCommitStats.contains(VectorDbDataSource.CommitStats(300, 0, 1)))
+        assert(liveThreads("graft-vdb-upsert").isEmpty)
+        assert(liveThreads("graft-embed").isEmpty)
+      } finally chaos.stop()
+    }
   }
 
   test("DataSourceV2 writer rejects unknown shapes at planning time") {
@@ -230,18 +248,22 @@ class VectorDbSinksSpec extends AnyFunSuite {
     assert(RequestValidator.validate(wh).contains(RequestValidator.Webhook))
   }
 
-  /** Write rows `text0`… of one partition to `url` in the Qdrant shape;
-    * with `dieAt`, the task's first attempt dies at that row. */
+  /** Write rows `text0`… of one partition to `url` in the Qdrant shape,
+    * through `embedder`'s embed stage when one is given; with `dieAt`,
+    * the task's first attempt dies at that row. */
   private def writeRows(n: Int, url: String, jobId: String, batchSize: Int,
-                        dieAt: Option[Int] = None): Unit = {
+                        dieAt: Option[Int] = None, embedder: Option[Embedder] = None): Unit = {
     import spark.implicits._
-    (0 until n)
-      .map(i => VectorRecord(s"r$i", s"text$i", "doc", Array(i.toFloat)))
-      .toDS()
-      .coalesce(1)
+    val records = embedder match {
+      case Some(e) => EmbedPipeline.embedStage((0 until n)
+        .map(i => ChunkRow(i.toLong, "doc", 0, s"c$i", s"text$i")).toDS().coalesce(1), e)
+      case None => (0 until n)
+        .map(i => VectorRecord(s"r$i", s"text$i", "doc", Array(i.toFloat))).toDS().coalesce(1)
+    }
+    records
       .map { r =>
         val tc = org.apache.spark.TaskContext.get()
-        if (dieAt.exists(d => r.id == s"r$d") && tc != null && tc.attemptNumber() == 0)
+        if (dieAt.exists(d => r.source_text == s"text$d") && tc != null && tc.attemptNumber() == 0)
           throw new RuntimeException("chaos: injected task death")
         r
       }
@@ -252,27 +274,31 @@ class VectorDbSinksSpec extends AnyFunSuite {
       .mode("append").save()
   }
 
-  /** A Qdrant store that answers each POST after `latencyMs` (500 when
-    * `fail` holds for its body), serving requests concurrently and
-    * recording the peak number in progress at once. */
-  private final class SlowStore(latencyMs: Long, fail: String => Boolean = _ => false) {
+  /** A Qdrant store that holds each POST until `together` are inside at
+    * once (a request that waits 30 s for that counts a timeout and 500s),
+    * then answers after `latencyMs` (500 when `fail` holds for its body),
+    * serving requests concurrently and recording the peak number in
+    * progress at once. */
+  private final class SlowStore(latencyMs: Long, fail: String => Boolean = _ => false,
+                                together: Int = 1) {
     private val bodies = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     private val inFlight = new java.util.concurrent.atomic.AtomicInteger()
+    private val gate = new java.util.concurrent.CyclicBarrier(together)
     val peak = new java.util.concurrent.atomic.AtomicInteger()
-    private val firstNs = new java.util.concurrent.atomic.AtomicLong(Long.MaxValue)
-    private val lastNs = new java.util.concurrent.atomic.AtomicLong(0L)
+    val timeouts = new java.util.concurrent.atomic.AtomicInteger()
     private val threads = java.util.concurrent.Executors.newFixedThreadPool(8)
     private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     server.setExecutor(threads)
     server.createContext("/points", (ex: HttpExchange) => {
-      firstNs.accumulateAndGet(System.nanoTime(), math.min)
       val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
       peak.accumulateAndGet(inFlight.incrementAndGet(), math.max)
+      val held = try { gate.await(30, java.util.concurrent.TimeUnit.SECONDS); true }
+        catch { case _: java.util.concurrent.TimeoutException |
+                     _: java.util.concurrent.BrokenBarrierException => timeouts.incrementAndGet(); false }
       Thread.sleep(latencyMs)
       // leave before answering, so the writer's next POST cannot overlap
       inFlight.decrementAndGet()
-      lastNs.accumulateAndGet(System.nanoTime(), math.max)
-      if (fail(body)) respond(ex, 500, "boom")
+      if (!held || fail(body)) respond(ex, 500, "boom")
       else { bodies.add(body); respond(ex, 200, "ok") }
     })
     server.start()
@@ -282,15 +308,14 @@ class VectorDbSinksSpec extends AnyFunSuite {
       scala.jdk.CollectionConverters.IteratorHasAsScala(bodies.iterator()).asScala.toSeq
         .flatMap(""""id":"([0-9a-f-]+)","vector":\[[^\]]*\],"payload":\{"source_text":"text(\d+)"""".r
           .findAllMatchIn(_).map(m => (m.group(1), m.group(2).toInt)))
-    /** Milliseconds from the first request's arrival to the last answer. */
-    def spanMs: Long = (lastNs.get() - firstNs.get()) / 1000000L
     def stop(): Unit = { server.stop(0); threads.shutdownNow() }
   }
 
-  /** Names of live writer pool threads, after giving exiting ones a moment. */
-  private def liveUpsertThreads(): Seq[String] = {
+  /** Names of live threads named `prefix…`, after giving exiting ones a
+    * moment. */
+  private def liveThreads(prefix: String): Seq[String] = {
     def live = scala.jdk.CollectionConverters.SetHasAsScala(Thread.getAllStackTraces.keySet)
-      .asScala.toSeq.filter(t => t.isAlive && t.getName.startsWith("graft-vdb-upsert")).map(_.getName)
+      .asScala.toSeq.filter(t => t.isAlive && t.getName.startsWith(prefix)).map(_.getName)
     val deadline = System.nanoTime() + 5000000000L
     while (live.nonEmpty && System.nanoTime() < deadline) Thread.sleep(10)
     live
