@@ -7,15 +7,16 @@ import scala.util.Try
 
 import org.apache.spark.TaskContext
 
-/** The one bounded, order-preserving call loop of the remote legs (the
-  * embedding calls and the sink upserts). Calls run on one pool of daemon
-  * threads named `<name>-<partition>-<n>`; at most `limit` are pending
-  * (submitted and not yet settled), and they settle in submission order,
-  * a failed call rethrowing its own cause.
+/** The one bounded, order-preserving call loop of the remote legs:
+  * embedding calls, sink upserts, and the chat and chunk-validation
+  * calls. Calls run on one pool of daemon threads named
+  * `<name>-<partition>-<n>`; at most `limit` are pending (submitted and
+  * not yet settled), and they settle in submission order, a failed call
+  * rethrowing its own cause.
   *
   * Close policy: `close` drops the unsettled results but lets every
-  * submitted call finish (an upsert is idempotent and an embedding call
-  * pure, so neither is interrupted), and returns once every pool thread
+  * submitted call finish (an upsert is idempotent and the other calls
+  * pure, so none is interrupted), and returns once every pool thread
   * has exited. Built inside a Spark task, it also closes when the task
   * ends (success, failure or kill), so no thread outlives its task. */
 private[graft] final class InFlight[B](limit: Int, name: String) extends AutoCloseable {

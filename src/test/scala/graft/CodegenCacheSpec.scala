@@ -37,7 +37,7 @@ class CodegenCacheSpec extends AnyFunSuite {
       // the first run builds p18's ~122 classes: a blind counter reads 0
       assert(counts.head >= 50, counts)
       // with stage ids out of the class names, runs 4 and 5 compiled 0 or
-      // 8 classes in three JVMs (0 to 14 with the ids in)
+      // 8 classes in six JVMs (0 to 14 in three with the ids in)
       assert(counts.drop(3).forall(_ < 10), counts)
     } finally {
       child.destroyForcibly()
