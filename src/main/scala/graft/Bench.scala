@@ -283,7 +283,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Graft.localBuilder(cpus.toInt, "bench").getOrCreate()
+    val spark = Graft.session(cpus.toInt, "bench")
     spark.sparkContext.setLogLevel("WARN")
 
     val qs = SparkEntry.queries

@@ -5,7 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Library entry point: one call gives a session with every graft
   * extension installed — the custom planner strategy (TopKPerKey), the
   * native SQL functions (cosine_similarity, uuid5, minhash_signature,
-  * chunk_text), and the scale-sane local defaults.
+  * chunk_text), the extractor UDFs, and the scale-sane local defaults.
+  * Every tool (Verify, Bench, Inspect, ExportRanks, perfbench) runs on
+  * [[session]], so each plans what Verify checks.
   */
 object Graft {
 
@@ -28,13 +30,23 @@ object Graft {
     * first session sets it. */
   private val CodegenCacheEntries = 1000
 
-  /** The local-mode settings of [[session]], Bench and Verify: `cores`
-    * worker threads and as many shuffle partitions, AQE, UTC, no UI,
+  /** Build a local session wired for this engine: `cores` worker
+    * threads and as many shuffle partitions, AQE, UTC, no UI,
     * [[CodegenCacheEntries]] and stage-id-free generated class names.
-    * Adds no extensions; [[session]] does. */
-  private[graft] def localBuilder(cores: Int,
-                                  appName: String): SparkSession.Builder =
-    SparkSession.builder()
+    * The strategy and the native SQL functions come from
+    * [[plans.GraftExtensions]]; this call adds only the extractor UDFs
+    * ([[functions.GraftFunctions.register]]), which cannot be injected.
+    * Cluster deployments use their own builder +
+    * `withExtensions(new plans.GraftExtensions)` +
+    * `functions.GraftFunctions.register`.
+    *
+    * Extensions and static settings (the class cache size among them)
+    * take effect only when this call builds the session: `getOrCreate`
+    * returns an existing session as it is, with only the runtime
+    * settings applied. */
+  def session(cores: Int = Runtime.getRuntime.availableProcessors(),
+              appName: String = "graft"): SparkSession = {
+    val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
@@ -48,31 +60,9 @@ object Graft {
       // new id missed the class cache and was compiled again (warm p18
       // runs 2-5 at sf0.001: 4-22 compiles each; without the id, 0 or 8)
       .config("spark.sql.codegen.useIdInClassName", "false")
-
-  /** Build a local session wired for this engine. Cluster deployments
-    * use their own builder + `withExtensions(new plans.GraftExtensions)`
-    * + `functions.GraftFunctions.register`.
-    *
-    * Sizes Spark's generated-class cache to [[CodegenCacheEntries]]
-    * (see there for the measured class counts). That size is fixed per
-    * JVM when `CodeGenerator` first loads, so it only takes effect when
-    * this call builds the JVM's first session: `getOrCreate` on an
-    * existing session cannot change it. */
-  def session(cores: Int = Runtime.getRuntime.availableProcessors(),
-              appName: String = "graft"): SparkSession = {
-    val spark = localBuilder(cores, appName)
       .withExtensions(new plans.GraftExtensions)
       .getOrCreate()
-    install(spark)
-    spark
-  }
-
-  /** Install graft functions + strategy on an existing session
-    * (idempotent). */
-  def install(spark: SparkSession): Unit = {
     functions.GraftFunctions.register(spark)
-    if (!spark.experimental.extraStrategies.contains(plans.TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ plans.TopKStrategy
+    spark
   }
 }

@@ -12,7 +12,7 @@ object Verify {
         n => pats.exists(n.contains)
       } else _ => true
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Graft.localBuilder(cpus.toInt, "verify").getOrCreate()
+    val spark = Graft.session(cpus.toInt, "verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // A query that throws must FAIL the round, not vanish from it: dump a
@@ -39,18 +39,10 @@ object Verify {
       graft.core.Caching.CacheLedger.releaseAll()
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // JSON string escape of every control char (<0x20) as well: a tab or
+    // CR in builder-authored SQL would otherwise make the driver's
+    // json.load fail and silently zero the round's correctness
+    import graft.sinks.VectorDbSinks.q
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

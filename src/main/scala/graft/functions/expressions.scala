@@ -449,7 +449,7 @@ object helpers {
     while (i <= s.length) {
       if (i == s.length || s.charAt(i) == ' ') {
         val wl = i - start
-        // EnStopwords: the / a / of / and / to / in / is
+        // English stopwords: the / a / of / and / to / in / is
         if (wl == 1) {
           if (s.charAt(start) == 'a') stopHits += 1
         } else if (wl == 2) {
@@ -2108,10 +2108,8 @@ object GraftFunctions {
     v.asInstanceOf[UTF8String].toString
   }
 
-  /** Name → builder for every native SQL function. One list serves both
-    * session-level [[register]] and extension-level injection
-    * ([[graft.plans.GraftExtensions]]), so the two deployment paths
-    * cannot drift. */
+  /** Name → builder for every native SQL function, injected by
+    * [[graft.plans.GraftExtensions]]. */
   val sqlBuilders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "cosine_similarity" -> (exprs => CosineSimilarity(exprs(0), exprs(1))),
     "uuid5" -> (exprs => Uuid5Expr(exprs.head)),
@@ -2132,16 +2130,11 @@ object GraftFunctions {
     "chunk_text" ->
       (exprs => ChunkGenerator(exprs(0), exprs(1), exprs(2), exprs(3))))
 
-  /** Register the native SQL functions plus the UDF-shaped extractors
-    * on an existing session. (The extension-config path —
-    * `spark.sql.extensions=graft.plans.GraftExtensions` — injects
-    * [[sqlBuilders]] at session build; the extractor UDFs still need
-    * this call because `spark.udf` does not exist at injection time.) */
+  /** Register the four UDF-shaped extractors on a session. The native
+    * SQL functions ([[sqlBuilders]]) come from
+    * [[graft.plans.GraftExtensions]] at session build; these four need
+    * this call because `spark.udf` does not exist at injection time. */
   def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    sqlBuilders.foreach { case (name, builder) =>
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
-    }
     // document extraction over binary columns (SQL surface for the S2/S3/
     // S4 extractors; Scala UDFs — extraction is I/O-shaped, not a
     // codegen hot path)

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Chunk, ChunkStrategy, Chunkers, Tokenizer, Tokenizers, Uuid5}
+import graft.core.{Chunk, ChunkStrategy, Chunkers, Tokenizer, Tokenizers}
 
 /** DataFrame-level chunking: one document row in, N chunk rows out
   * (the reference's extract→chunk stages, SURVEY.md §2.2-2.3).
@@ -82,11 +82,4 @@ object Chunking {
         col("pos").cast("long").as("block_id"),
         col("col.block_text"),
         col("col.n_words").cast("long").as("n_words"))
-
-  /** Deterministic UUIDv5 chunk/record id column (reference
-    * src/shared/utils.py:5-10) — the idempotent-upsert key. */
-  def uuid5Column(parts: Column*): Column = {
-    val f = udf { (joined: String) => Uuid5.of(joined) }
-    f(concat_ws("-", parts: _*))
-  }
 }

@@ -133,14 +133,6 @@ object IndexStore {
       ProductQuantizer.IvfPqModel(cents, books, subDim, m, k, scale)
     }
 
-  /** Convenience: the served-search form — load the model at `path`
-    * and run [[ProductQuantizer.searchIvfPqExact]] with it. */
-  def serveIvfPq(queries: DataFrame, corpus: DataFrame, idCol: String,
-                 vecCol: String, path: String, nprobe: Int,
-                 shortlist: Int, topK: Int): DataFrame =
-    ProductQuantizer.searchIvfPqExact(queries, corpus, idCol, vecCol,
-      loadIvfPq(corpus.sparkSession, path), nprobe, shortlist, topK)
-
   /** The SHARED (cross-JVM, non-pid-tagged) artifact root: unlike
     * GraphCache's per-JVM trees, an index artifact's whole point is to
     * OUTLIVE the JVM that trained it — the next serving process loads

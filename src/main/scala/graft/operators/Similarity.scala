@@ -87,9 +87,9 @@ object Similarity {
     val scored = c.join(broadcast(q), cond)
       .select(col("query_id"), col("neighbor_id"),
         round(cosine(col("qv"), col("cv")), 6).as("score"))
-    // strategy registration + attribute binding live in TopKPerKey.prune
-    // (r9 review: this method hand-rolled the same node construction and
-    // lacked the k >= 1 fail-fast prune carries)
+    // attribute binding lives in TopKPerKey.prune (r9 review: this
+    // method hand-rolled the same node construction and lacked the
+    // k >= 1 fail-fast prune carries)
     val topk = graft.plans.TopKPerKey.prune(
       scored, "query_id", "score", "neighbor_id", k)
     val w = Window.partitionBy(col("query_id"))

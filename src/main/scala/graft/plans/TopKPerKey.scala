@@ -4,7 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, UnspecifiedDistribution}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 
 /** Grouped top-k as a first-class operator (SURVEY §2.8 top-k; the
@@ -59,6 +59,11 @@ final case class TopKPerKeyExec(keys: Seq[Expression], score: Expression,
     if (partial) UnspecifiedDistribution :: Nil
     else ClusteredDistribution(keys) :: Nil
 
+  // a per-partition heap filter: rows stay in the partition they came
+  // from, so a rank window on the same keys reuses the final phase's
+  // exchange instead of shuffling again
+  override def outputPartitioning: Partitioning = child.outputPartitioning
+
   override protected def doExecute(): RDD[InternalRow] = {
     val keyExprs = keys
     val scoreExpr = score
@@ -87,10 +92,10 @@ final case class TopKPerKeyExec(keys: Seq[Expression], score: Expression,
       }
       // DEEP copy: tie values may be views into the scan's reused row
       // buffer — not just UTF8String but UnsafeArrayData/UnsafeRow for
-      // array/struct ties (any orderable type reaches here via the
-      // window rewrite; r9 review caught the array case comparing
-      // garbage once the buffer advanced). InternalRow.copyValue is
-      // Spark's own any-type copier for exactly this.
+      // array/struct ties (prune accepts any orderable tie column; r9
+      // review caught the array case comparing garbage once the buffer
+      // advanced). InternalRow.copyValue is Spark's own any-type copier
+      // for exactly this.
       def copyTie(v: Any): Any =
         org.apache.spark.sql.catalyst.InternalRow.copyValue(v)
       // score ordering chosen from the static type (node construction
@@ -157,7 +162,8 @@ object TopKPerKey {
     require(k >= 1, s"TopKPerKey.prune: k must be >= 1, got $k")
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
+    // a session built without GraftExtensions lacks the strategy
+    if (!spark.sessionState.planner.strategies.contains(TopKStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ TopKStrategy
     val plan = ColumnBridge.logicalPlan(df)
@@ -166,103 +172,6 @@ object TopKPerKey {
         s"no column '$n' in ${plan.output.map(_.name).mkString(", ")}"))
     ColumnBridge.ofRows(spark,
       TopKPerKeyNode(Seq(attr(keyCol)), attr(scoreCol), attr(tieCol), k, plan))
-  }
-}
-
-/** Catalyst OPTIMIZER rule: rewrites the classic grouped-top-k idiom
-  *
-  *   Filter(rank <= k, Window(row_number() OVER (PARTITION BY keys
-  *     ORDER BY score DESC, tie ASC) AS rank, child))
-  *
-  * into the same plan with [[TopKPerKeyNode]] inserted UNDER the
-  * window — the window then ranks only the ≤ k·|keys| survivors the
-  * bounded heaps let through, instead of sorting and shuffling every
-  * input row. The rewrite is semantics-preserving because the node
-  * prunes by EXACTLY the window's total order (score desc NULLS LAST,
-  * tie asc NULLS FIRST — the exec's documented contract), so the
-  * surviving set is precisely the rows whose row_number would be ≤ k.
-  *
-  * Conservative trigger conditions (anything else is left alone):
-  * single row_number window expression; partition keys and sort
-  * expressions are plain attributes; default null orderings; a numeric
-  * score; the filter is a single `rank <= k` / `rank < k` comparison
-  * on the window's own output attribute; k ≥ 1.
-  *
-  * Two accepted sort shapes:
-  *  - (score DESC, tie ASC) — the fully-deterministic idiom; the heap
-  *    prunes by exactly the window's total order.
-  *  - (score DESC) alone — `row_number` over a NON-total order, where
-  *    the window form itself breaks score ties by arrival order, i.e.
-  *    nondeterministically. The rewrite passes the score as its own
-  *    tiebreak (a no-op among tied rows): the heap keeps exactly k
-  *    rows whose scores are ≥ every dropped row's score with boundary
-  *    ties decided arbitrarily — precisely the set SOME valid
-  *    execution of the original window would rank ≤ k. The rewrite
-  *    adds no nondeterminism the query didn't already have, and
-  *    tie-free data is bit-identical to the window form.
-  *
-  * Deploy: `spark.sql.extensions=graft.plans.GraftExtensions` (config
-  * path) or `spark.experimental.extraOptimizations` (runtime path) —
-  * either way existing window-form queries get the bounded-heap
-  * physical shape with NO source change. */
-object TopKWindowRewrite
-    extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
-  import org.apache.spark.sql.catalyst.expressions._
-  import org.apache.spark.sql.catalyst.plans.logical.{Filter, Window}
-
-  private def limitOf(cond: Expression,
-                      rank: Attribute): Option[Int] = cond match {
-    case LessThanOrEqual(a: Attribute, Literal(v: Int, _))
-      if a.exprId == rank.exprId => Some(v)
-    case LessThan(a: Attribute, Literal(v: Int, _))
-      if a.exprId == rank.exprId && v > Int.MinValue => Some(v - 1)
-    case GreaterThanOrEqual(Literal(v: Int, _), a: Attribute)
-      if a.exprId == rank.exprId => Some(v)
-    case GreaterThan(Literal(v: Int, _), a: Attribute)
-      if a.exprId == rank.exprId => Some(v - 1)
-    case _ => None
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case f @ Filter(cond,
-        w @ Window(Seq(alias @ Alias(WindowExpression(_: RowNumber,
-          WindowSpecDefinition(partSpec, Seq(
-            SortOrder(score: Attribute, Descending, NullsLast, _),
-            SortOrder(tie: Attribute, Ascending, NullsFirst, _)), _)), _)),
-          _, _, child, _))
-      if !child.isInstanceOf[TopKPerKeyNode] &&
-        // nonEmpty: a GLOBAL top-k (no PARTITION BY) must stay a
-        // window — ClusteredDistribution(Nil) is rejected at planning
-        partSpec.nonEmpty &&
-        partSpec.forall(_.isInstanceOf[Attribute]) &&
-        TopKPerKeyExec.scoreOrdering(score.dataType).isDefined =>
-      limitOf(cond, alias.toAttribute) match {
-        // upper bound: a huge k makes per-key heaps pointless (and the
-        // plain window form is no worse) — leave those plans alone
-        case Some(k) if k >= 1 && k <= (1 << 24) =>
-          f.copy(child = w.copy(child =
-            TopKPerKeyNode(partSpec, score, tie, k, child)))
-        case _ => f
-      }
-    // single-sort-key form: row_number over (score DESC) only — the
-    // window itself is tie-nondeterministic, so pruning with the score
-    // as its own tiebreak yields a set some valid execution would rank
-    // ≤ k (see the scaladoc's second accepted shape)
-    case f @ Filter(cond,
-        w @ Window(Seq(alias @ Alias(WindowExpression(_: RowNumber,
-          WindowSpecDefinition(partSpec, Seq(
-            SortOrder(score: Attribute, Descending, NullsLast, _)), _)), _)),
-          _, _, child, _))
-      if !child.isInstanceOf[TopKPerKeyNode] &&
-        partSpec.nonEmpty &&
-        partSpec.forall(_.isInstanceOf[Attribute]) &&
-        TopKPerKeyExec.scoreOrdering(score.dataType).isDefined =>
-      limitOf(cond, alias.toAttribute) match {
-        case Some(k) if k >= 1 && k <= (1 << 24) =>
-          f.copy(child = w.copy(child =
-            TopKPerKeyNode(partSpec, score, score, k, child)))
-        case _ => f
-      }
   }
 }
 
@@ -276,19 +185,17 @@ object TopKStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   }
 }
 
-/** Extension entry point:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`. Injects the
-  * top-k strategy and every native graft SQL function
-  * ([[graft.functions.GraftFunctions.sqlBuilders]]) — the config-only
-  * deploy path gets the full SQL surface with no Scala call. The
-  * UDF-shaped extractors (`pdf_pages`, `graft_extract`, …) still come
-  * from `GraftFunctions.register(spark)`: `spark.udf` does not exist
-  * at injection time. */
+/** Extension entry point, used by [[graft.Graft.session]]: a
+  * builder's `withExtensions(new GraftExtensions)` or
+  * `spark.sql.extensions=graft.plans.GraftExtensions`. The one install
+  * path of the top-k strategy and of every native graft SQL function
+  * ([[graft.functions.GraftFunctions.sqlBuilders]]). The UDF-shaped
+  * extractors (`pdf_pages`, `graft_extract`, …) come from
+  * `GraftFunctions.register(spark)`: `spark.udf` does not exist at
+  * injection time. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => TopKStrategy)
-    e.injectOptimizerRule(_ => TopKWindowRewrite)
     graft.functions.GraftFunctions.sqlBuilders.foreach { case (name, builder) =>
       e.injectFunction((
         org.apache.spark.sql.catalyst.FunctionIdentifier(name),

@@ -3,8 +3,6 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.util.Base64
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: train BPE on a testdata corpus and export the rank table
   * in tiktoken's public `.tiktoken` format (`base64(bytes) rank` per
   * line) — the artifact behind `src/main/resources/graft_trained
@@ -21,11 +19,7 @@ object ExportRanks {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "src/main/resources/graft_trained.tiktoken"
     val numMerges = if (args.length > 2) args(2).toInt else 64
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session(8, "export-ranks")
     spark.sparkContext.setLogLevel("WARN")
     val docs = graft.Tables.documents(spark, sfDir)
     val (merges, alphabet) =

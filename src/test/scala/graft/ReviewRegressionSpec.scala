@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,13 +7,7 @@ import graft.core.Chunkers
 import graft.operators.{Dedup, KMeans, Similarity}
 
 /** Regressions for the round-1 and round-2 code-review findings. */
-class ReviewRegressionSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ReviewRegressionSpec extends AnyFunSuite with SharedSpark {
 
   test("nested /Pages trees walk to the leaf pages (r2 review)") {
     import java.nio.charset.StandardCharsets

@@ -2,7 +2,6 @@ package graft.core
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.{ChunkRow, EmbedPipeline, Embedder}
@@ -16,7 +15,7 @@ import graft.pipeline.{ChunkRow, EmbedPipeline, Embedder}
   * stand-in (recomputed expected value, divergence noted) and with a
   * BPE rank table reproducing the reference's exact count.
   */
-class ChunkersSpec extends AnyFunSuite {
+class ChunkersSpec extends AnyFunSuite with graft.SharedSpark {
 
   // test_worker.py:221-233 — "testtext"*192: 384 tokens; 3 chunks of
   // 1024/1024/512 chars at size=256 overlap=128.
@@ -109,8 +108,6 @@ class ChunkersSpec extends AnyFunSuite {
   // test_worker.py:289-297 — the embed stage cuts one partition's
   // chunks into calls of at most 2048 texts
   test("embedding re-batch: 4*2048 chunks -> 4 batches") {
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
     import spark.implicits._
     // closures are serialized per task even in local mode: collect the
     // call sizes through an accumulator

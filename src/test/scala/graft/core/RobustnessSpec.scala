@@ -1,6 +1,5 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,13 +7,7 @@ import graft.operators.{Chunking, Dedup, TextAnalysis}
 
 /** Edge inputs the 100 TB crawl will certainly contain: unicode, empty
   * strings, nulls, single-word docs. */
-class RobustnessSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RobustnessSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("tokenizer is lossless on CJK, emoji, RTL, and mixed scripts") {
     val cases = Seq(

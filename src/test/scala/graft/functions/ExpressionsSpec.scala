@@ -1,18 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Uuid5
 
-class ExpressionsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ExpressionsSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("uuid5 expression matches the core implementation and Python vectors") {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * to the compiled path without touching their plane-literal oracles —
   * including the null edges the SQL form defines (short vector / null
   * element → all CASEs fall to 0 → code 0). */
-class SignCodeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SignCodeSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

@@ -1,19 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the round-6 loud-failure guards: corrupt inputs and misuse
   * must fail with a NAMED error, not an opaque NPE/CCE deep in a task
   * (the wrong-length-vector convention, extended per ADVICE r5). */
-class AdviceGuardSpec extends AnyFunSuite {
+class AdviceGuardSpec extends AnyFunSuite with graft.SharedSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2, 2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  override protected def suiteConf = Seq(
+    "spark.sql.shuffle.partitions" -> "2")
 
   test("gramMatrix: a null vector ELEMENT fails loudly, naming the index") {
     import spark.implicits._

@@ -2,21 +2,16 @@ package graft.operators
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins [[Analytics.funnelCounts]] (strict order, first-touch window,
   * greedy earliest-qualifying maximality) and
   * [[Analytics.cohortRetention]] (first-day cohorts, distinct-day
   * activity, offset cap) against hand-built event chains. */
-class AnalyticsSpec extends AnyFunSuite {
+class AnalyticsSpec extends AnyFunSuite with graft.SharedSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  override protected def suiteConf = Seq(
+    "spark.sql.session.timeZone" -> "UTC")
 
   import spark.implicits._
 

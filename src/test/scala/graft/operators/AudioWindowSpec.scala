@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import Multimodal.MediaRow
@@ -8,13 +7,7 @@ import Multimodal.MediaRow
 /** [[Multimodal.audioWindowEnergies]] — exact per-window Σ s² over the
   * real WAV decode, including partial tails, stereo interleave, and
   * the degrade-not-fail contract for undecodable payloads. */
-class AudioWindowSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AudioWindowSpec extends AnyFunSuite with graft.SharedSpark {
 
   private def windows(rows: Seq[MediaRow], w: Int) = {
     import spark.implicits._

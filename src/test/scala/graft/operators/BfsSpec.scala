@@ -1,18 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins [[Bfs.hopDistances]]: exact shortest hop counts on a chain,
   * shortest-of-several-paths, the hop cap, unreachable exclusion, and
   * multi-source minimums. */
-class BfsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BfsSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

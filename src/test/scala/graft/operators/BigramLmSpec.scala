@@ -1,18 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[TextAnalysis.bigramLmScore]] — add-one-smoothed bigram LM over the
   * corpus: closed-form probabilities, repeated-bigram weighting, the
   * short-doc zero path, and the fluency ordering the signal exists for. */
-class BigramLmSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BigramLmSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

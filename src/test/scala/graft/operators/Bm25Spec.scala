@@ -1,19 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Similarity.bm25TopK]] — the Okapi ranking with rational idf and
   * scaled-integer summation: closed-form score checks, absent-term
   * exclusion, deterministic ties, and the k cut. */
-class Bm25Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Bm25Spec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

@@ -1,18 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[TextAnalysis.removeBoilerplate]] — per-source line-frequency
   * stripping: threshold semantics, per-doc-distinct counting, source
   * isolation, order-preserving rebuild, and the all-boilerplate doc. */
-class BoilerplateSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BoilerplateSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

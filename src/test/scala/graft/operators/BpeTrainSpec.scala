@@ -1,18 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[BpeTrain]] — merge sequence on the classic hand-computable corpus,
   * deterministic tie-breaks, the minFreq stop, non-overlapping merge
   * application, and the round-trip into the real BPE encoder. */
-class BpeTrainSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BpeTrainSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

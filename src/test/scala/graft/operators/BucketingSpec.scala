@@ -1,26 +1,13 @@
 package graft.operators
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class BucketingSpec extends AnyFunSuite {
+class BucketingSpec extends AnyFunSuite with graft.SharedSpark {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4, 2]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", Files.createTempDirectory("wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // getOrCreate may return a session shared with other suites, whose
-    // builder configs are then ignored — force the runtime conf so the
-    // join under test cannot degrade to a broadcast
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s
-  }
+  // the join under test must not degrade to a broadcast
+  override protected def suiteConf = Seq(
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,13 +13,7 @@ import graft.core.Caching
   * [[Caching.CacheLedger]] so one `releaseAll()` at a query boundary
   * drops them. Assertions are DELTAS over `getPersistentRDDs` (other
   * suites share the forked JVM's SparkContext). */
-class CacheLifetimeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CacheLifetimeSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

@@ -2,21 +2,16 @@ package graft.operators
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins [[Changelog.scd2Intervals]] (island collapse, interval
   * chaining, open-interval flag, tie ordering) and
   * [[Changelog.latestState]] (latest-wins, tombstone deletion,
   * same-timestamp tie-break by id, change counting). */
-class ChangelogSpec extends AnyFunSuite {
+class ChangelogSpec extends AnyFunSuite with graft.SharedSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  override protected def suiteConf = Seq(
+    "spark.sql.session.timeZone" -> "UTC")
 
   import spark.implicits._
 

@@ -1,18 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{ChunkStrategy, Chunkers}
 
-class ChunkingSpec extends AnyFunSuite {
+class ChunkingSpec extends AnyFunSuite with graft.SharedSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  override protected def suiteConf = Seq(
+    "spark.sql.session.timeZone" -> "UTC")
 
   private val sfDir = "/root/testdata/sf0.001"
 

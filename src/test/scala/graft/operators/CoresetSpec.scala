@@ -1,19 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins [[Coreset.farthestPointSample]] (a30) to a hand-computed
   * greedy k-center run, and g04's clustering coefficient to known
   * graphs. */
-class CoresetSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CoresetSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

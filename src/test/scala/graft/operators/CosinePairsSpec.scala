@@ -1,17 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Dedup.cosinePairs]] — TF weighting must distinguish what set
   * Jaccard cannot, and the integer cos² must equal the real cosine. */
-class CosinePairsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CosinePairsSpec extends AnyFunSuite with graft.SharedSpark {
 
   private def pairs(rows: Seq[(Long, String)], thr: Long,
                     maxDf: Option[Int] = None) = {

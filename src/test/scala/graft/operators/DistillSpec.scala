@@ -1,18 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Distill.olsDistill]]: per-group integer OLS via one-pass normal
   * equations + in-plan Cramer solve + quantized-model R². */
-class DistillSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DistillSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

@@ -1,19 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the round-5 mixture/monitoring operators: [[Drift.sourceDrift]]
   * (exact total-variation drift), [[TextAnalysis.epochRepeat]]
   * (with-replacement upsampling), and [[Profile.winsorize]]. */
-class DriftRepeatSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DriftRepeatSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

@@ -1,16 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins [[Drift.embeddingDrift]] on hand-computed centroids. */
-class EmbeddingDriftSpec extends AnyFunSuite {
+class EmbeddingDriftSpec extends AnyFunSuite with graft.SharedSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2, 2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  override protected def suiteConf = Seq(
+    "spark.sql.shuffle.partitions" -> "2")
 
   import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[graft.functions.GraftFunctions.foldText]] (Unicode NFD/strip/
   * NFC/casefold) and [[Dedup.containmentPairs]] (asymmetric
   * doc-inside-doc near-dup). */
-class FoldContainmentSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FoldContainmentSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

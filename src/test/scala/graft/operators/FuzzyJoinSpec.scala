@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * brute-force n² definition on an adversarial corpus (substitutions,
   * insertions, deletions at every position, duplicates, repeated
   * characters, shared prefixes), and the no-cross-join plan shape. */
-class FuzzyJoinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FuzzyJoinSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

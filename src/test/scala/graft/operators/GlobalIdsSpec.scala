@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * definition, are dense 0-based, and are invariant to the input's
   * partitioning — while the physical plan never sorts the data in one
   * task (the whole point of the two-level rank). */
-class GlobalIdsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GlobalIdsSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

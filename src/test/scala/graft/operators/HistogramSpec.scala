@@ -1,19 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins [[Profile.histogram]]: exact bin membership at the edges, the
   * [0, nBins) range invariant, degenerate single-value groups, and
   * count conservation. */
-class HistogramSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class HistogramSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,14 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * to it (sketch-merge == rescan, the mergeability contract), the
   * per-day leg equals [[HyperLogLog.approxCountDistinct]], and both
   * stay within the HLL error envelope of exact counts. */
-class HllMergeSpec extends AnyFunSuite {
+class HllMergeSpec extends AnyFunSuite with graft.SharedSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  override protected def suiteConf = Seq(
+    "spark.sql.session.timeZone" -> "UTC")
 
   import spark.implicits._
 

@@ -1,19 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Similarity.hybridTopK]] — reciprocal-rank fusion of the lexical
   * and vector legs: leg rankings, missing-leg zeros, self-exclusion,
   * and the exact RRF arithmetic (1/(60+rank) per leg). */
-class HybridSearchSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class HybridSearchSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * parquet bit-exactly, and a search served from the RELOADED model
   * equals the trainer's own search row for row — the
   * train-once-serve-many contract across process boundaries. */
-class IndexStoreSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IndexStoreSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

@@ -1,19 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[ProductQuantizer.ivfAdcTopKRefined]] — the full IVF-PQ search:
   * full-probe/full-shortlist equivalence with brute force, planted
   * duplicates, probe-bounded candidate generation, and determinism. */
-class IvfPqSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IvfPqSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

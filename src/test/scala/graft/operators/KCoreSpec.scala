@@ -1,16 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[KCore.peel]] — hand-built graphs with known peel structure. */
-class KCoreSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class KCoreSpec extends AnyFunSuite with graft.SharedSpark {
 
   private def peel(edges: Seq[(Long, Long)], k: Int) = {
     import spark.implicits._

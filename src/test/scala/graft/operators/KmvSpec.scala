@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * aggregator monoid, and equality with an independent Spark SQL
   * window replay of the sketch definition.
   */
-class KmvSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class KmvSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** [[Similarity.knnGraphEdges]] — the all-vectors top-k within lists:
   * equality with the plain window form, list isolation, and the
   * no-corpus-broadcast plan shape that separates it from ivfTopK. */
-class KnnGraphSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class KnnGraphSpec extends AnyFunSuite with graft.SharedSpark {
 
   private def corpus = {
     import spark.implicits._

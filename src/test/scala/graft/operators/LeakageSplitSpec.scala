@@ -1,17 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** p34 leakage-safe split — near-dup clusters must be split-atomic. */
-class LeakageSplitSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LeakageSplitSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("every near-dup cluster lands in exactly one split; moved is honest") {
     val dir = "/root/testdata/sf0.001"

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the [[LocalGraph]] primitive toolkit every local graph regime
@@ -9,13 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * sorted-distinct over both endpoints, and the CSR preserves edge
   * MULTIPLICITY with ascending out-lists — the properties the peel /
   * rank / walk loops assume without re-checking. */
-class LocalGraphSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LocalGraphSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

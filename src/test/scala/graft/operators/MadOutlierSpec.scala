@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * median/MAD verdicts, robustness (the outlier itself doesn't shift
   * the gate, unlike a stddev z-score), group independence, and the
   * degenerate all-equal group. */
-class MadOutlierSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MadOutlierSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

@@ -1,19 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins [[Similarity.mmrDiversify]]: the greedy MMR trace on a planted
   * geometry where relevance-only ranking and diversified ranking must
   * differ. */
-class MmrSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MmrSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

@@ -1,18 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import Multimodal._
 
-class MultimodalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MultimodalSpec extends AnyFunSuite with graft.SharedSpark {
 
   /** Synthetic payload: u16 w, u16 h, u16 c, u32 duration_ms, body. */
   private def payload(w: Int, h: Int, c: Int, durMs: Long, bodyLen: Int): Array[Byte] = {

@@ -1,19 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins [[TextAnalysis.ngramNovelty]] (t39 — first-occurrence
   * attribution) and [[Fim.fimSplit]] (p31 — the reassembly invariant
   * and the md5-determinism of cuts/mode). */
-class NoveltyFimSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class NoveltyFimSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ranks), centrality ordering (a star's hub outranks its spokes),
   * determinism across partitionings, and mass conservation up to the
   * documented floor loss. */
-class PageRankSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PageRankSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

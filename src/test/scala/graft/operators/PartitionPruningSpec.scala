@@ -2,20 +2,13 @@ package graft.operators
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Hive-style partition layout + partition pruning: at 100 TB the
   * event-type filter must prune directories at planning time, not scan
   * and discard. */
-class PartitionPruningSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PartitionPruningSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("partitioned write + filter prunes partitions at the scan") {
     val out = Files.createTempDirectory("events_part").toString

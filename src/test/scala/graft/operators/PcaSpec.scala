@@ -1,18 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[LinAlg]] — Gram matrix, Jacobi eigensolver, and PCA projection:
   * known-matrix eigenpairs, principal-axis recovery, centering,
   * variance ordering, and determinism. */
-class PcaSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PcaSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

@@ -1,19 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Analytics.peakConcurrency]] — pins the closed-interval boundary
   * semantics the q49 oracle relies on: zero-length intervals count,
   * same-instant touch overlaps, and the two-level prefix-sum plan
   * equals a hand-computed sweep. */
-class PeakConcurrencySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PeakConcurrencySpec extends AnyFunSuite with graft.SharedSpark {
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 

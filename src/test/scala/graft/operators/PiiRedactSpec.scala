@@ -1,17 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins [[TextAnalysis.piiRedact]]: detection counts, mask order, word
   * boundaries, and the null convention. */
-class PiiRedactSpec extends AnyFunSuite {
+class PiiRedactSpec extends AnyFunSuite with graft.SharedSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2, 2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  override protected def suiteConf = Seq(
+    "spark.sql.shuffle.partitions" -> "2")
 
   import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,13 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[Dedup.jaccardPairs]] (the inverted-index plan) — the equality that
   * lets d20 share d02's oracle SQL and lets d19's recall denominator
   * swap plans without touching its oracle. */
-class PrefixJoinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PrefixJoinSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,13 +8,7 @@ import graft.queries.{CurationQueries, Relational6}
 /** Pins [[Profile]]: the single-scan plan claim (no Expand, one
   * aggregate exchange), distinct-sketch exactness below k, quantile
   * agreement with Spark's own percentile, and the split audit. */
-class ProfileSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ProfileSpec extends AnyFunSuite with graft.SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
 

@@ -1,19 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Similarity.signProjection]] — JL sign random projection: exact
   * integer arithmetic, seed determinism, shuffle-free plan, and the
   * distance-preservation property the reduction exists for. */
-class ProjectionSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ProjectionSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

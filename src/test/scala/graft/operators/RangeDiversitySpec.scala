@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,13 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * moment identity — the pair-free plan must produce EXACTLY the sum a
   * materialized pair loop produces over the same quantized unit
   * vectors. */
-class RangeDiversitySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RangeDiversitySpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

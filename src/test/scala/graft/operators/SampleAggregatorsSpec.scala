@@ -2,7 +2,6 @@ package graft.operators
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,13 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * yields the same k records), equality with the batch
   * [[Sampling.weightedTopK]] prune path, and accumulation across real
   * micro-batches. */
-class SampleAggregatorsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SampleAggregatorsSpec extends AnyFunSuite with graft.SharedSpark {
 
   private def tmp(name: String): String =
     Files.createTempDirectory(name).toString

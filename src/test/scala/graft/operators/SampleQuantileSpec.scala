@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,13 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * partition-invariance of the sample, mergeability (a union's sample
   * is the union of samples), sample-rate concentration, and rank-error
   * bounds of the resulting quantiles. */
-class SampleQuantileSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SampleQuantileSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

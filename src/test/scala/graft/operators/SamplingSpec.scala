@@ -1,18 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins [[Sampling.weightedTopK]]: exact agreement with a JVM replay
   * of the Efraimidis-Spirakis draw, determinism across partitionings,
   * the k cap, weight-zero exclusion, and weight-monotone selection. */
-class SamplingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SamplingSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,13 +7,7 @@ import graft.queries.CurationQueries
 
 /** Round-3 curation additions: the hashed-linear classifier filter
   * (t17) and SemDeDup semantic deduplication (d12). */
-class SemDedupClassifierSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SemDedupClassifierSpec extends AnyFunSuite with graft.SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
 

@@ -1,19 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins [[Sharding.corpusShuffle]]: the output is a permutation (every
   * id exactly once), per-shard positions are contiguous from 1,
   * assignment is deterministic across runs and partitionings, the salt
   * actually reshuffles, and shards are statistically balanced. */
-class ShardingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ShardingSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

@@ -1,27 +1,23 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** AQE skew-join demo (the ROADMAP deferred item): planted hot keys,
-  * AQE splits the oversized join partitions at runtime. Own session —
-  * the thresholds are deliberately tiny so the ~40 MB hot partition
+  * AQE splits the oversized join partitions at runtime. Own settings
+  * ([[suiteConf]]) — the thresholds are deliberately tiny so the ~40 MB hot partition
   * trips the splitter at test scale. */
-class SkewJoinSpec extends AnyFunSuite {
+class SkewJoinSpec extends AnyFunSuite with graft.SharedSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-    .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "256KB")
-    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64KB")
-    .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16KB")
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  override protected def suiteConf = Seq(
+    "spark.sql.shuffle.partitions" -> "8",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "256KB",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64KB",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16KB",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
   test("AQE splits a planted hot join key into multiple tasks (skew=true)") {
     import spark.implicits._

@@ -1,19 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Dedup.removeDuplicateSpans]] — exact-substring removal semantics:
   * first occurrence (by doc_id, then position) survives, every word
   * covered by a later duplicate n-word window is dropped. */
-class SpanRemovalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SpanRemovalSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

@@ -1,19 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins [[Sq8]] — scalar 8-bit quantization ANN: model sanity, exact
   * self-duplicate retrieval, determinism, and refined recall vs exact
   * brute force (the a09/a15 quality-gate convention). */
-class Sq8Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Sq8Spec extends AnyFunSuite with graft.SharedSpark {
 
   private def embeddings(dir: String) =
     spark.read.parquet(s"$dir/embeddings.parquet")

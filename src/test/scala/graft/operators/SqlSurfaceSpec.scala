@@ -1,19 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.ChunkStrategy
 import graft.functions.GraftFunctions
 
-class SqlSurfaceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SqlSurfaceSpec extends AnyFunSuite with graft.SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,17 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[TextAnalysis.stitchPairs]] — directed suffix→prefix matching
   * with graded overlap length. */
-class StitchSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StitchSpec extends AnyFunSuite with graft.SharedSpark {
 
   private def pairs(rows: Seq[(Long, String)]) = {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Property-style pins for [[Throttle.anchoredKeep]]: on pseudo-random
@@ -8,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * file), the distributed operator must equal a sequential reference
   * simulation of the greedy anchored gate, and its output must satisfy
   * the gate's invariants directly. */
-class ThrottlePropertySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ThrottlePropertySpec extends AnyFunSuite with graft.SharedSpark {
 
   private def lcg(seed: Long): Iterator[Long] =
     Iterator.iterate(seed)(x => x * 6364136223846793005L + 1442695040888963407L).drop(1)

@@ -2,21 +2,16 @@ package graft.operators
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins [[TimeSeries.resampleFfill]]: grid completeness between each
   * key's first and last bucket, forward-fill across gaps, the
   * deterministic (ts, id) last-observation tie-break, and per-key
   * independence. */
-class TimeSeriesSpec extends AnyFunSuite {
+class TimeSeriesSpec extends AnyFunSuite with graft.SharedSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  override protected def suiteConf = Seq(
+    "spark.sql.session.timeZone" -> "UTC")
 
   import spark.implicits._
 

@@ -1,18 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins [[Triangles.perNodeCounts]]: hand-counted graphs, and equality
   * of the broadcast-probe path vs the shuffle-join fallback (same
   * algorithm, two physical forms — the a03/a08 full-probe principle). */
-class TrianglesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TrianglesSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

@@ -1,18 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins [[UrlNorm.canonicalize]] rule by rule and the keep-first dedup
   * contract of [[UrlNorm.dedupByCanonicalUrl]]. */
-class UrlNormSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class UrlNormSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * interleave, and the layout claim itself: z-bucket min-max stats
   * prune a two-column box strictly better than a single-column sort
   * layout on uniform grid data. */
-class ZOrderSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ZOrderSpec extends AnyFunSuite with graft.SharedSpark {
 
   import spark.implicits._
 

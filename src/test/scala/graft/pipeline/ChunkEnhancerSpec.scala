@@ -1,17 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.ChunkStrategy
 
-class ChunkEnhancerSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ChunkEnhancerSpec extends AnyFunSuite with graft.SharedSpark {
 
   private def chunks = EmbedPipeline.chunkStage(
     graft.Tables.documents(spark, "/root/testdata/sf0.001").limit(20),

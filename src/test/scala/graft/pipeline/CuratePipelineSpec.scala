@@ -1,16 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class CuratePipelineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CuratePipelineSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("curation funnel: quality gate, exact dedup, near-dup removal, embed") {
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
@@ -38,13 +31,5 @@ class CuratePipelineSpec extends AnyFunSuite {
     // every md5-arithmetic component to its own hash-checked row)
     assert(entry.columns.contains("chunk_md5") && entry.columns.contains("component"))
     assert(!entry.schema.exists(_.dataType.typeName == "array"))
-  }
-
-  test("Graft.install is idempotent and registers the SQL surface") {
-    graft.Graft.install(spark)
-    graft.Graft.install(spark)
-    assert(spark.experimental.extraStrategies.count(_ == graft.plans.TopKStrategy) == 1)
-    assert(spark.sql("SELECT uuid5('hello') AS u").head().getString(0)
-      == "9342d47a-1bab-5709-9869-c840b2eac501")
   }
 }

@@ -5,20 +5,13 @@ import java.nio.charset.StandardCharsets
 import java.util.concurrent.atomic.AtomicInteger
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sinks.{Sinks, VectorDbDataSource, VectorDbSinks}
 
 /** End-to-end pipeline tests, including the HTTP embedder and webhook
   * sink driven against a local in-JVM stub server (zero egress). */
-class EmbedPipelineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EmbedPipelineSpec extends AnyFunSuite with graft.SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
 

@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,13 +20,7 @@ class PoisonEmbedder(poison: String) extends Embedder {
   }
 }
 
-class PartialFailureSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PartialFailureSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("a failing embed batch yields PARTIALLY_COMPLETED, not a dead job") {
     import spark.implicits._

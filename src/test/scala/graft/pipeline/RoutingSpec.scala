@@ -4,19 +4,12 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{IngestRequest, VectorDbConfig}
 import graft.sinks.VectorDbDataSource.CommitStats
 
-class RoutingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RoutingSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("E3: OPEN_AI/HUGGING_FACE/LOCAL resolve; others are permanent failures") {
     assert(Routing.embedderFor("LOCAL", dim = 8).isRight)

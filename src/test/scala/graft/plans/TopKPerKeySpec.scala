@@ -6,13 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Similarity
 
-class TopKPerKeySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TopKPerKeySpec extends AnyFunSuite with graft.SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -64,8 +58,6 @@ class TopKPerKeySpec extends AnyFunSuite {
     // many rows share the same score; the kept set must be the lowest ids
     val df = (0L until 100L).map(i => (1L, i, if (i < 5) 10.0 else 1.0)).toDF("k", "id", "s")
       .repartition(4)
-    spark.experimental.extraStrategies =
-      spark.experimental.extraStrategies.filterNot(_ == TopKStrategy) :+ TopKStrategy
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val plan = ColumnBridge.logicalPlan(df)
     val out = ColumnBridge.ofRows(spark, TopKPerKeyNode(
@@ -105,8 +97,6 @@ class TopKPerKeySpec extends AnyFunSuite {
   test("null scores rank last (window desc NULLS LAST parity) and float scores work") {
     import spark.implicits._
     import org.apache.spark.sql.graftbridge.ColumnBridge
-    spark.experimental.extraStrategies =
-      spark.experimental.extraStrategies.filterNot(_ == TopKStrategy) :+ TopKStrategy
     // ids 0-3 have real scores, 4-9 null; k=6 must keep all scored rows
     // then fill with the lowest-id null rows — exactly the window form
     val df = (0L until 10L).map(i => (1L, i, if (i < 4) Some(i * 1.0f) else None))
@@ -145,32 +135,46 @@ class TopKPerKeySpec extends AnyFunSuite {
     assert("TopKPerKey \\[".r.findAllIn(p).length == 2, s"expected partial+final:\n$p")
   }
 
+  test("the rank window reuses the final phase's exchange on the query key") {
+    val e = graft.Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
+    val q = e.filter(col("vec_id") < 2)
+    val p = Similarity.bruteForceTopKExec(q, e, "vec_id", "embedding", k = 5)
+      .queryExecution.executedPlan.toString
+    // the final phase and the row_number window both cluster on
+    // query_id; the final phase keeps its input partitioning, so no
+    // second shuffle sits between them
+    assert("Exchange hashpartitioning\\(query_id".r.findAllIn(p).length == 1,
+      s"expected one exchange on query_id:\n$p")
+  }
+
   test("GraftExtensions injects the strategy at session build time") {
-    // getOrCreate returns any ACTIVE session and skips extensions —
-    // clear both handles so a genuinely new session is built (the
+    // getOrCreate returns any ACTIVE session as it is — clear both
+    // handles so Graft.session builds a genuinely new session (the
     // SparkContext is reused), then restore the suite session after
     spark.sparkContext // force the suite session first
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val s2 = SparkSession.builder()
-        .master("local[2, 2]")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      // the strategy resolves the node without touching experimental hooks
-      assert(s2.sessionState.planner.strategies.exists(_.isInstanceOf[TopKStrategy.type]) ||
-        s2.sessionState.planner.extraPlanningStrategies.contains(TopKStrategy))
-      // and the native SQL functions are injected with no register() call:
-      // config-only deployments get the full SQL surface
+      val s2 = graft.Graft.session(4, "graft-session-pin")
+      assert(s2 ne spark)
+      def strategies = s2.sessionState.planner.strategies.count(_ == TopKStrategy)
+      assert(strategies == 1)
+      // prune finds the injected strategy and adds no second one
+      val df = s2.range(10).selectExpr("id % 2 AS k", "id", "CAST(id AS DOUBLE) AS s")
+      assert(TopKPerKey.prune(df, "k", "s", "id", 2).count() == 4)
+      assert(strategies == 1)
+      // the native SQL functions and the extractor UDFs resolve
       val cos = s2.sql(
         "SELECT cosine_similarity(array(1.0F, 0.0F), array(1.0F, 0.0F)) c")
         .collect()(0).getDouble(0)
       assert(math.abs(cos - 1.0) < 1e-12)
-      val id1 = s2.sql("SELECT uuid5('chunk-0-exact') u").collect()(0).getString(0)
-      assert(id1 === graft.core.Uuid5.of("chunk-0-exact"))
+      assert(s2.sql("SELECT uuid5('hello') AS u").head().getString(0)
+        == "9342d47a-1bab-5709-9869-c840b2eac501")
       assert(s2.sql("SELECT lang_id('the of and to a in is') l")
         .collect()(0).getString(0) === "en")
+      val extracted = s2.sql("SELECT pdf_pages(CAST(NULL AS BINARY)) p, " +
+        "graft_extract(CAST('plain text' AS BINARY), '.txt') t").head()
+      assert(extracted.isNullAt(0) && extracted.getString(1) == "plain text")
     } finally {
       // a failed assertion must not leave the suite session cleared for
       // every later test in this JVM

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[ModelCache]] — the session-scoped trained-index registry: the
@@ -8,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * must equal a fresh train (fit determinism is pinned separately in
   * PqSpec; this pins the registry semantics a09/a15/a21/a24 rely on
   * for their shared-model hash oracles). */
-class ModelCacheSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ModelCacheSpec extends AnyFunSuite with graft.SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

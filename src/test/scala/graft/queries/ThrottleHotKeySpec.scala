@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,13 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * which at 100 TB turns a hot key into an OOM. The greedy arithmetic
   * is pinned exactly: events 1 s apart for 10⁶ s keep one event per
   * 3600 s → ceil(1e6/3600) survivors, anchors at multiples of 3600. */
-class ThrottleHotKeySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ThrottleHotKeySpec extends AnyFunSuite with graft.SharedSpark {
 
   test("1M-event hot key streams through with O(1) state") {
     import spark.implicits._

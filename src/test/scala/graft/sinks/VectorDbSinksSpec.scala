@@ -4,7 +4,6 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{IngestRequest, RequestValidator, Uuid5, VectorDbConfig}
@@ -22,13 +21,7 @@ class SlowEmbedder extends Embedder {
   }
 }
 
-class VectorDbSinksSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class VectorDbSinksSpec extends AnyFunSuite with graft.SharedSpark {
 
   private val rec = VectorRecord("ignored", "some \"text\"", "doc.txt", Array(0.5f, 1.0f))
 

@@ -2,16 +2,9 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-class DocumentReaderSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DocumentReaderSpec extends AnyFunSuite with graft.SharedSpark {
 
   private def fixtures(): String = {
     val dir = Files.createTempDirectory("intake")

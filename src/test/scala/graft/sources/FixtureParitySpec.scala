@@ -2,7 +2,6 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,13 +10,7 @@ import graft.core.Chunkers
 /** FIXTURES.md §1: synthetic equivalents of the reference fixture files
   * with the same line counts, so the expected batch/chunk counts carry
   * over — driven end-to-end through intake → split_file → chunk. */
-class FixtureParitySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FixtureParitySpec extends AnyFunSuite with graft.SharedSpark {
 
   /** (name, lines) mirroring the reference fixtures: test_short_text 4,
     * test_medium_text 146, test_text 1107, test_long_text 12000. */

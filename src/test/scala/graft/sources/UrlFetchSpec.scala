@@ -4,19 +4,15 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
 import com.sun.net.httpserver.HttpServer
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** S7 presigned-URL ingestion: fetch over a real (local, in-JVM) HTTP
   * server, content sniffing, extractor dispatch, and the dead
   * text/plain branch quirk (reference src/api/app.py:180-226). */
-class UrlFetchSpec extends AnyFunSuite {
+class UrlFetchSpec extends AnyFunSuite with graft.SharedSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2, 2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  override protected def suiteConf = Seq(
+    "spark.sql.shuffle.partitions" -> "2")
 
   test("s3 file name parse matches the reference's own test vector") {
     // reference test_app.py:145-153

@@ -3,18 +3,11 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Smoke test for [[Inspect]]'s entry function: plan dump, timings,
   * per-run compile counts and the unknown-name failure. */
-class InspectSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class InspectSpec extends AnyFunSuite with graft.SharedSpark {
 
   // the sf0.001 tables behind the registry's smoke query
   private lazy val sfDir = new org.apache.hadoop.fs.Path(
