@@ -78,7 +78,8 @@ object Bloom {
 }
 
 /** Bit-level Bloom probe shared by the builder and the native
-  * expression (both sides MUST derive probe positions identically).
+  * `bloom_hit_count` probe ([[graft.functions.helpers.bloomHitCount]]):
+  * both sides MUST derive probe positions identically.
   * Kirsch–Mitzenmacher double hashing: probe_i = h1 + i·h2 over the
   * already-64-bit input hash, h2 remixed (SplitMix64 finalizer, forced
   * odd) so the probe stride is independent of h1. */
@@ -116,19 +117,5 @@ object BloomBits {
       i += 1
     }
     true
-  }
-
-  /** Number of elements of an array<bigint> that might be in the filter
-    * (called from generated code — keep the signature codegen-friendly). */
-  def hitCount(arr: org.apache.spark.sql.catalyst.util.ArrayData,
-               bits: Array[Long], numHashes: Int): Int = {
-    val n = arr.numElements()
-    var hits = 0
-    var i = 0
-    while (i < n) {
-      if (mightContain(bits, arr.getLong(i), numHashes)) hits += 1
-      i += 1
-    }
-    hits
   }
 }

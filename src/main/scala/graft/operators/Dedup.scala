@@ -48,7 +48,7 @@ object Dedup {
   }
 
   /** documents(id, text) -> (id, shingles: array<string>) with distinct
-    * word n-grams — the native scan-local [[graft.functions.NgramStrings]]
+    * word n-grams — the native scan-local [[graft.functions.GraftFunctions.ngramStrings]]
     * pass (the interpreted transform/slice/array_join form was the
     * dominant cost of every string-shingle consumer). */
   def withShingles(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
@@ -442,8 +442,8 @@ object Dedup {
         round(col("containment"), 6).as("containment"))
   }
 
-  /** MinHash signature column: the native [[graft.functions.MinHashSignature]]
-    * expression — one XXH64 per shingle, all lanes folded in one codegen'd
+  /** MinHash signature column: the native
+    * [[graft.functions.GraftFunctions.minhashSignature]] — one XXH64 per shingle, all lanes folded in one codegen'd
     * pass (the interpreted transform/array_min form cost 8.2 s of the
     * sf0.1 bench; this runs in ~0.1 s). */
   def minHashSignature(shinglesCol: String, numHashes: Int): Column =

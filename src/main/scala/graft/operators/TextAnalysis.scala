@@ -302,7 +302,7 @@ object TextAnalysis {
     * partial-agg shuffle each, collected as a bounded array — 8k
     * doubles, not a corpus structure); the per-document score is then
     * ONE scan-local native-expression pass over the broadcast log-ratio
-    * table (`SumLookup` — table ships once per executor). No joins, no
+    * table ([[graft.functions.GraftFunctions.sumLookup]] — table ships once per executor). No joins, no
     * per-feature shuffle of the corpus. Rows-only vs the oracle:
     * xxhash64 feature hashing and `ln` have no bit-exact DuckDB twin
     * (DsirSpec pins the semantics instead). */
@@ -796,7 +796,7 @@ object TextAnalysis {
     * Sketch build: one scan → explode to `depth` (row, bucket) keys
     * per token → bounded groupBy. Buckets: row j reads the big-endian
     * 32-bit lane j%4 of md5("cm{j/4}|" + key) — one digest covers four
-    * sketch rows — via the native [[graft.functions.CmBucketsExpr]]
+    * sketch rows — via the native [[graft.functions.GraftFunctions.cmBuckets]]
     * (digest bytes, no hex-string hop). Lookup for a key set:
     * broadcast the keys, probe the sketch on (row, bucket), min over
     * rows. */

@@ -67,7 +67,8 @@ final class HashEmbedder(override val dim: Int = 64) extends Embedder {
 
 /** Deterministic ORACLE-RECOMPUTABLE embedder — the flagship pipeline's
   * test embedder, built so a SQL engine can recompute every component
-  * exactly (the t17 ClassifierScoreExpr md5-arithmetic principle):
+  * exactly (the t17 [[graft.functions.GraftFunctions.classifierScore]]
+  * md5-arithmetic principle):
   *
   *   component(text, k) = (u32(md5(text ++ ":" ++ k)) mod 2001) − 1000
   *

@@ -92,7 +92,7 @@ object PipelineQueries {
     * end: chunk (EXACT_BY_CHARACTERS 256/128) → deterministic local
     * embed → vector records. The [[graft.pipeline.Md5Embedder]] makes
     * every vector component an exact md5-arithmetic integer (the t17
-    * ClassifierScoreExpr principle), and each component explodes to its
+    * [[graft.functions.GraftFunctions.classifierScore]] principle), and each component explodes to its
     * own row, so the oracle retokenizes the chunks AND recomputes the
     * complete vector contents in SQL — nothing is fingerprinted away.
     * The uuid5 record id alone is not SQL-recomputable (no sha1 in

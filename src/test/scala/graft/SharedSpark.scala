@@ -31,13 +31,16 @@ trait SharedSpark extends TestSuite {
 
   override def run(testName: Option[String], args: Args): Status =
     if (suiteConf.isEmpty) super.run(testName, args)
-    else {
-      val explicit = spark.conf.getAll
-      suiteConf.foreach { case (k, v) => spark.conf.set(k, v) }
-      // put back each key's previous explicit value, or unset it
-      try super.run(testName, args)
-      finally suiteConf.foreach { case (k, _) =>
-        explicit.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
-      }
+    else withConf(suiteConf)(super.run(testName, args))
+
+  /** Runs `body` under the runtime SQL settings `conf`, then puts back
+    * each key's previous explicit value, or unsets it. */
+  protected def withConf[T](conf: Seq[(String, String)])(body: => T): T = {
+    val explicit = spark.conf.getAll
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally conf.foreach { case (k, _) =>
+      explicit.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
+  }
 }

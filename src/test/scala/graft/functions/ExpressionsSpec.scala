@@ -113,6 +113,30 @@ class ExpressionsSpec extends AnyFunSuite with graft.SharedSpark {
     assert(e.getMessage.toLowerCase.contains("cosine"))
   }
 
+  test("minhash_signature, minhash_words and uuid5 reject wrong input types at analysis") {
+    import spark.implicits._
+    val df = Seq(("a b", 7L)).toDF("s", "n")
+    Seq(GraftFunctions.minhashSignature(col("s"), 4) -> "minhash_signature",
+        GraftFunctions.minhashWords(col("s"), 4, 2) -> "minhash_words",
+        GraftFunctions.uuid5(col("n")) -> "uuid5").foreach { case (c, fn) =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](df.select(c).collect())
+      assert(e.getMessage.contains(s"$fn needs"), e.getMessage)
+    }
+  }
+
+  test("count arguments below 1 fail when the column is built") {
+    Seq[(() => Any, String)](
+      (() => GraftFunctions.ngramHashes(col("w"), 0), "ngram_hashes"),
+      (() => GraftFunctions.ngramStrings(col("t"), 0), "ngram_strings"),
+      (() => GraftFunctions.topGramFraction(col("t"), 0), "top_gram_fraction"),
+      (() => GraftFunctions.minhashSignature(col("w"), -1), "minhash_signature"),
+      (() => GraftFunctions.minhashWords(col("w"), 4, 0), "minhash_words")).foreach {
+      case (build, fn) =>
+        val e = intercept[IllegalArgumentException](build())
+        assert(e.getMessage.contains(fn), e.getMessage)
+    }
+  }
+
   test("minhash signature: deterministic, monotone under containment") {
     import spark.implicits._
     val df = Seq(

@@ -53,4 +53,17 @@ class AdviceGuardSpec extends AnyFunSuite with graft.SharedSpark {
     }
     assert(n.getMessage.contains("foldable non-null INT literal"))
   }
+
+  test("INT count arguments below 1 are clean analysis errors") {
+    import spark.implicits._
+    Seq(("a b c", Seq("a", "b", "c"))).toDF("t", "w").createOrReplaceTempView("cnt_t")
+    Seq("ngram_hashes(w, 0)", "ngram_strings(t, 0)", "top_gram_fraction(t, 0)",
+        "minhash_signature(w, -1)", "classifier_score(t, 0)").foreach { call =>
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        spark.sql(s"SELECT $call FROM cnt_t").collect()
+      }
+      val fn = call.takeWhile(_ != '(')
+      assert(e.getMessage.contains(s"$fn needs an INT argument >= 1"), e.getMessage)
+    }
+  }
 }
