@@ -1383,7 +1383,7 @@ object GraftFunctions {
 
   private val Words = ArrayType(StringType)
   private val Longs = ArrayType(LongType)
-  private val LongArray = ArrayType(LongType, containsNull = false)
+  private val NonNullLongs = ArrayType(LongType, containsNull = false)
   private def longStruct(names: String*): StructType =
     StructType(names.map(StructField(_, LongType, nullable = false)))
 
@@ -1399,7 +1399,7 @@ object GraftFunctions {
     * XXH64 per shingle, `numHashes` lanes folded in one pass. */
   def minhashSignature(shingles: Column, numHashes: Int): Column = {
     require(numHashes >= 1, s"minhash_signature needs numHashes >= 1, got $numHashes")
-    native("minhash_signature", "minHashSignature", LongArray, Seq(shingles -> Words),
+    native("minhash_signature", "minHashSignature", NonNullLongs, Seq(shingles -> Words),
       numHashes)
   }
 
@@ -1408,7 +1408,7 @@ object GraftFunctions {
   def minhashWords(words: Column, numHashes: Int, shingleSize: Int): Column = {
     require(numHashes >= 1 && shingleSize >= 1,
       s"minhash_words needs numHashes and shingleSize >= 1, got $numHashes/$shingleSize")
-    native("minhash_words", "minHashFromWords", LongArray, Seq(words -> Words),
+    native("minhash_words", "minHashFromWords", NonNullLongs, Seq(words -> Words),
       numHashes, shingleSize)
   }
 
@@ -1428,7 +1428,7 @@ object GraftFunctions {
     * buckets of one key, from digest bytes ([[helpers.cmBuckets]]). */
   def cmBuckets(word: Column, depth: Int, width: Int): Column = {
     require(depth >= 1 && width >= 1, s"depth/width must be >= 1, got $depth/$width")
-    native("cm_buckets", "cmBuckets", LongArray, Seq(word -> StringType), depth, width)
+    native("cm_buckets", "cmBuckets", NonNullLongs, Seq(word -> StringType), depth, width)
   }
 
   /** `uuid5(name)` → RFC 4122 v5 UUID string of the UTF-8 name (DNS
@@ -1453,7 +1453,7 @@ object GraftFunctions {
     * through this one function so keys compare equal across them. */
   def ngramHashes(words: Column, n: Int): Column = {
     require(n >= 1, s"ngram_hashes needs n >= 1, got $n")
-    native("ngram_hashes", "ngramHashes", LongArray, Seq(words -> Words), n)
+    native("ngram_hashes", "ngramHashes", NonNullLongs, Seq(words -> Words), n)
   }
 
   /** `word_count(text)` → int: `size(split(text, " "))` without the
@@ -1513,7 +1513,7 @@ object GraftFunctions {
   /** `distinct_word_hashes(text)` → array<bigint>: the per-doc distinct
     * xxhash64 word-hash set. */
   def distinctWordHashes(text: Column): Column =
-    native("distinct_word_hashes", "distinctWordHashes", LongArray, Seq(text -> StringType))
+    native("distinct_word_hashes", "distinctWordHashes", NonNullLongs, Seq(text -> StringType))
 
   /** `md5_hash60(s)` → bigint: first 60 bits of md5(s), bit-identical to
     * `conv(substring(md5(s), 1, 15), 16, 10)` with one digest. */
@@ -1547,7 +1547,7 @@ object GraftFunctions {
     * hashes in position order, duplicates kept. */
   def ngramHashSeq(words: Column, n: Int): Column = {
     require(n >= 1, "ngram_hash_seq needs positive n")
-    native("ngram_hash_seq", "ngramHashSeq", LongArray, Seq(words -> Words), n)
+    native("ngram_hash_seq", "ngramHashSeq", NonNullLongs, Seq(words -> Words), n)
   }
 
   /** `gopher_fractions(text)` → array<double> [top2, top3, top4, dup5]
