@@ -65,11 +65,15 @@ object Chunkers {
   def exact(data: Seq[String], size: Int, overlap: Int,
             tok: Tokenizer = Tokenizers.default): Vector[Chunk] = {
     val step = requireStep(size, overlap)
-    val tokens = tok.encode(data.mkString)
+    val joined = data.mkString
+    // tokens are lossless, so decode(tokens[i, i+size)) is the substring
+    // between their offsets: one cut per chunk, no String per token
+    val ends = tok.ends(joined)
     val out = Vector.newBuilder[Chunk]
     var i = 0
-    while (i < tokens.length) {
-      val text = tok.decode(tokens.slice(i, i + size))
+    while (i < ends.length) {
+      val text = joined.substring(if (i == 0) 0 else ends(i - 1),
+        ends(math.min(i + size, ends.length) - 1))
       out += Chunk(text, Uuid5.ofParts(text, i, "exact"))
       i += step
     }

@@ -1,6 +1,7 @@
 package graft.core
 
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.immutable.ArraySeq
+import scala.collection.mutable.ArrayBuilder
 
 /** Tokenization abstraction for the token-windowed chunkers.
   *
@@ -24,7 +25,22 @@ trait Tokenizer extends Serializable {
   /** Split `text` into consecutive token strings; concatenation of the
     * result must equal `text` exactly. */
   def encode(text: String): IndexedSeq[String]
-  final def count(text: String): Int = encode(text).length
+  /** The end offset in `text` of each token of `encode(text)`. By the
+    * lossless property, `decode(encode(text).slice(i, j))` is
+    * `text.substring(ends(i - 1), ends(j - 1))` (0 for `ends(-1)`). */
+  def ends(text: String): Array[Int] = {
+    val tokens = encode(text)
+    val out = new Array[Int](tokens.length)
+    var end = 0
+    var k = 0
+    while (k < out.length) {
+      end += tokens(k).length
+      out(k) = end
+      k += 1
+    }
+    out
+  }
+  final def count(text: String): Int = ends(text).length
   final def decode(tokens: Seq[String]): String = tokens.mkString
 }
 
@@ -41,12 +57,12 @@ object GraftTokenizer extends Tokenizer {
   private def isDigit(c: Char): Boolean  = Character.isDigit(c)
   private def isSpaceLike(c: Char): Boolean = Character.isWhitespace(c)
 
-  override def encode(text: String): IndexedSeq[String] = {
-    val out = new ArrayBuffer[String]()
+  override def ends(text: String): Array[Int] = {
+    val out = new ArrayBuilder.ofInt
     val n = text.length
     var i = 0
     while (i < n) {
-      var start = i
+      val start = i
       var c = text.charAt(i)
       // single leading space attaches to the following word/number/punct
       // piece (GPT-2 pretokenizer convention), so " example" is one token
@@ -63,16 +79,27 @@ object GraftTokenizer extends Tokenizer {
       } else {
         while (i < n && { val x = text.charAt(i); !isLetter(x) && !isDigit(x) && !isSpaceLike(x) }) i += 1
       }
-      val piece = text.substring(start, i)
-      if (piece.length <= MaxPieceChars) out += piece
-      else {
-        var j = 0
-        while (j < piece.length) {
-          out += piece.substring(j, math.min(j + SubPieceChars, piece.length))
-          j += SubPieceChars
-        }
+      // a piece over MaxPieceChars ends every SubPieceChars chars
+      if (i - start > MaxPieceChars) {
+        var j = start + SubPieceChars
+        while (j < i) { out += j; j += SubPieceChars }
       }
+      out += i
     }
-    out.toIndexedSeq
+    out.result()
+  }
+
+  /** The substrings between [[ends]]. */
+  override def encode(text: String): IndexedSeq[String] = {
+    val e = ends(text)
+    val out = new Array[String](e.length)
+    var from = 0
+    var k = 0
+    while (k < e.length) {
+      out(k) = text.substring(from, e(k))
+      from = e(k)
+      k += 1
+    }
+    ArraySeq.unsafeWrapArray(out)
   }
 }

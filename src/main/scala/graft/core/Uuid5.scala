@@ -28,17 +28,38 @@ object Uuid5 {
 
   /** uuid5(NAMESPACE_DNS, name) as a lowercase hyphenated string. */
   def of(name: String): String = {
-    // MessageDigest is not thread-safe; cheap to instantiate.
+    val md = digest()
+    md.update(name.getBytes(StandardCharsets.UTF_8))
+    finish(md)
+  }
+
+  /** The reference's `generate_uuid_from_tuple`: uuid5 of the parts
+    * joined with "-". Each part's UTF-8 bytes and the separators go
+    * straight into the digest; the joined name is never built. */
+  def ofParts(parts: Any*): String = {
+    val md = digest()
+    var first = true
+    parts.foreach { p =>
+      if (!first) md.update('-'.toByte)
+      md.update(String.valueOf(p).getBytes(StandardCharsets.UTF_8))
+      first = false
+    }
+    finish(md)
+  }
+
+  /** A SHA-1 digest fed the namespace. MessageDigest is not thread-safe;
+    * cheap to instantiate. */
+  private def digest(): MessageDigest = {
     val md = MessageDigest.getInstance("SHA-1")
     md.update(namespaceBytes)
-    md.update(name.getBytes(StandardCharsets.UTF_8))
+    md
+  }
+
+  private def finish(md: MessageDigest): String = {
     val h = md.digest() // 20 bytes; UUID uses the first 16
     h(6) = ((h(6) & 0x0f) | 0x50).toByte // version 5
     h(8) = ((h(8) & 0x3f) | 0x80).toByte // RFC 4122 variant
     val bb = java.nio.ByteBuffer.wrap(h, 0, 16)
     new java.util.UUID(bb.getLong, bb.getLong).toString
   }
-
-  /** The reference's `generate_uuid_from_tuple`: join parts with "-". */
-  def ofParts(parts: Any*): String = of(parts.map(String.valueOf).mkString("-"))
 }

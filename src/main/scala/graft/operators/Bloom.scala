@@ -50,13 +50,18 @@ object Bloom {
           Iterator.single(bits)
         }
       }
-      // fold, not reduce: an empty input (empty eval set) yields the
-      // all-zero filter instead of throwing
-      .rdd.fold(new Array[Long](words)) { (a, b) =>
-        var i = 0
-        while (i < a.length) { a(i) |= b(i); i += 1 }
-        a
+      // fold over Option, not reduce: an empty input (empty eval set)
+      // yields the all-zero filter instead of throwing. The zero is None,
+      // not a zero bitset, because RDD.fold ships its zero inside every
+      // task's binary (1 MiB each at the default size)
+      .rdd.map(Option(_)).fold(None) {
+        case (Some(a), Some(b)) =>
+          var i = 0
+          while (i < a.length) { a(i) |= b(i); i += 1 }
+          Some(a)
+        case (a, b) => a.orElse(b)
       }
+      .getOrElse(new Array[Long](words))
   }
 
   /** Filter over the distinct word `n`-gram hashes of a text column

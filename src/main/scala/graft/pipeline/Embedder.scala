@@ -116,15 +116,19 @@ sealed abstract class HttpEmbedder(url: String, override val maxBatchSize: Int,
   protected def requestBody(texts: IndexedSeq[String]): String
   private[pipeline] def parseResponse(body: String, n: Int): IndexedSeq[Array[Float]]
 
-  /** Component `s` of response vector `vector`. `toFloat` also accepts
-    * `NaN`, `Infinity` and literals that overflow to ∞ (`1e39`); none is
-    * a JSON number, so a vector carrying one could not be written to a
-    * sink, and the response is rejected here. */
-  protected final def component(s: String, vector: Int): Float = {
-    val f = s.trim.toFloat
-    if (!java.lang.Float.isFinite(f)) throw new IllegalArgumentException(
-      s"embedding response vector $vector has a non-finite component '${s.trim}'")
-    f
+  /** `head`, then `texts` as a JSON array of strings, then `tail`: one
+    * builder sized to the finished body. */
+  protected final def textsBody(head: String, texts: IndexedSeq[String], tail: String): String = {
+    var size = head.length + texts.length + 1 + tail.length
+    texts.foreach(t => size += VectorDbSinks.quotedLength(t))
+    val b = new java.lang.StringBuilder(size).append(head).append('[')
+    var k = 0
+    while (k < texts.length) {
+      if (k > 0) b.append(',')
+      q(b, texts(k))
+      k += 1
+    }
+    b.append(']').append(tail).toString
   }
 
   @transient private lazy val client = VectorDbSinks.httpClient()
@@ -151,26 +155,12 @@ final class OpenAiHttpEmbedder(baseUrl: String, model: String,
     Seq("Authorization" -> s"Bearer $apiKey")
 
   override protected def requestBody(texts: IndexedSeq[String]): String =
-    s"""{"model":${q(model)},"input":${texts.map(q).mkString("[", ",", "]")}}"""
+    textsBody(s"""{"model":${q(model)},"input":""", texts, "}")
 
-  /** Minimal parser for `{"data":[{"index":i,"embedding":[...]},...]}` —
-    * avoids a JSON dependency; tolerant of field order. */
-  private[pipeline] def parseResponse(body: String, n: Int): IndexedSeq[Array[Float]] = {
-    val out = new Array[Array[Float]](n)
-    val entry = java.util.regex.Pattern.compile(
-      """"index"\s*:\s*(\d+)\s*,\s*"embedding"\s*:\s*\[([^\]]*)\]|"embedding"\s*:\s*\[([^\]]*)\]\s*,\s*"index"\s*:\s*(\d+)""")
-    val m = entry.matcher(body)
-    while (m.find()) {
-      val (idx, arr) =
-        if (m.group(1) != null) (m.group(1).toInt, m.group(2))
-        else (m.group(4).toInt, m.group(3))
-      require(idx < n,
-        s"embedding response index $idx is out of range for $n inputs")
-      out(idx) = arr.split(",").map(component(_, idx))
-    }
-    require(out.forall(_ != null), "embedding response missing indices")
-    out.toIndexedSeq
-  }
+  /** `{"data":[{"index":i,"embedding":[...]},...]}`, read in one pass by
+    * [[EmbeddingResponse.openAi]]: vectors placed by their `index` tags. */
+  private[pipeline] def parseResponse(body: String, n: Int): IndexedSeq[Array[Float]] =
+    EmbeddingResponse.openAi(body, n, dim)
 }
 
 /** HUGGING_FACE local-HTTP embedder — the dispatch leg the reference
@@ -196,21 +186,10 @@ final class HuggingFaceHttpEmbedder(baseUrl: String, modelName: String,
   override protected def headers: Seq[(String, String)] = Nil
 
   override protected def requestBody(texts: IndexedSeq[String]): String =
-    s"""{"inputs":${texts.map(q).mkString("[", ",", "]")}}"""
+    textsBody("""{"inputs":""", texts, "}")
 
-  /** `[[0.1,0.2],[...],...]` — no nesting inside an embedding, so each
-    * innermost bracket group is one vector, in request order. */
-  private[pipeline] def parseResponse(body: String, n: Int): IndexedSeq[Array[Float]] = {
-    val inner = java.util.regex.Pattern.compile("""\[([^\[\]]*)\]""")
-    val m = inner.matcher(body)
-    val out = IndexedSeq.newBuilder[Array[Float]]
-    var count = 0
-    while (m.find()) {
-      out += m.group(1).split(",").map(component(_, count))
-      count += 1
-    }
-    require(count == n,
-      s"hugging-face response carried $count embeddings for $n inputs")
-    out.result()
-  }
+  /** `[[0.1,0.2],[...],...]`: one vector per inner array, in request
+    * order ([[EmbeddingResponse.tei]]). */
+  private[pipeline] def parseResponse(body: String, n: Int): IndexedSeq[Array[Float]] =
+    EmbeddingResponse.tei(body, n, dim)
 }

@@ -40,7 +40,14 @@ object VectorDbSinks {
     /** The POST body of a micro-batch: `records` as entries numbered
       * from `first`, wrapped in this store's envelope. */
     final def body(records: Iterable[VectorRecord], jobId: String, batchId: Long, first: Int): String = {
-      val b = new JStringBuilder(prefix)
+      // every float prints in at most 15 chars ("-1.17549435E-38"); the
+      // fixed parts of an entry and the envelope stay under 160 chars
+      var size = prefix.length + 160 + quotedLength(jobId)
+      records.foreach { r =>
+        size += 160 + quotedLength(r.id) + quotedLength(r.source_text) +
+          quotedLength(r.source_document) + 16 * r.vector.length
+      }
+      val b = new JStringBuilder(size).append(prefix)
       var k = 0
       records.foreach { r =>
         if (k > 0) b.append(',')
@@ -58,11 +65,17 @@ object VectorDbSinks {
     def authHeader(apiKey: String): (String, String) = ("Api-Key", apiKey)
   }
 
-  /** `v` as a JSON array, each float as `Float.toString` writes it. */
-  private def vec(b: JStringBuilder, v: Array[Float]): Unit = {
+  /** `r.vector` as a JSON array, each float as `Float.toString` writes
+    * it. `NaN` and `Infinity` are not JSON numbers: a record carrying one
+    * (from an in-process embedder; the HTTP embedders reject them on
+    * read) fails its batch here, naming the record and the component. */
+  private def vec(b: JStringBuilder, r: VectorRecord): Unit = {
+    val v = r.vector
     b.append('[')
     var k = 0
     while (k < v.length) {
+      if (!java.lang.Float.isFinite(v(k))) throw new IllegalArgumentException(
+        s"record ${r.id} vector has a non-finite component '${v(k)}' at position $k")
       if (k > 0) b.append(',')
       b.append(v(k))
       k += 1
@@ -73,7 +86,7 @@ object VectorDbSinks {
   case object Pinecone extends PayloadShape {
     override def entry(b: JStringBuilder, r: VectorRecord, jobId: String, batchId: Long, i: Int): Unit = {
       b.append("{\"id\":\"").append(Uuid5.ofParts(jobId, batchId, i)).append("\",\"values\":")
-      vec(b, r.vector)
+      vec(b, r)
       b.append(",\"metadata\":{\"source_text\":"); q(b, r.source_text)
       b.append(",\"source_document\":"); q(b, r.source_document)
       b.append("}}")
@@ -85,7 +98,7 @@ object VectorDbSinks {
   case object Qdrant extends PayloadShape {
     override def entry(b: JStringBuilder, r: VectorRecord, jobId: String, batchId: Long, i: Int): Unit = {
       b.append("{\"id\":\"").append(Uuid5.ofParts(jobId, batchId, i)).append("\",\"vector\":")
-      vec(b, r.vector)
+      vec(b, r)
       b.append(",\"payload\":{\"source_text\":"); q(b, r.source_text)
       b.append(",\"source_document\":"); q(b, r.source_document)
       b.append("}}")
@@ -103,7 +116,7 @@ object VectorDbSinks {
       b.append(",\"vectoflow_id\":\"").append(Uuid5.ofParts(jobId, batchId, i))
       b.append("\",\"source_document\":"); q(b, r.source_document)
       b.append("},\"vector\":")
-      vec(b, r.vector)
+      vec(b, r)
       b.append('}')
     }
     override protected val prefix = "{\"objects\":["
@@ -121,7 +134,7 @@ object VectorDbSinks {
       b.append(",\"source_text\":"); q(b, r.source_text)
       b.append(",\"source_document\":"); q(b, r.source_document)
       b.append(",\"vector\":")
-      vec(b, r.vector)
+      vec(b, r)
       b.append('}')
     }
     override protected val prefix = "{\"Embeddings\":["
@@ -196,6 +209,19 @@ object VectorDbSinks {
     val b = new JStringBuilder(s.length + 8)
     q(b, s)
     b.toString
+  }
+
+  /** The length of `s` as a JSON string literal (see [[q]]). */
+  private[graft] def quotedLength(s: String): Int = {
+    var n = s.length + 2
+    var k = 0
+    while (k < s.length) {
+      val c = s.charAt(k)
+      if (c == '"' || c == '\\' || c == '\n' || c == '\r' || c == '\t') n += 1
+      else if (c < ' ') n += 5
+      k += 1
+    }
+    n
   }
 
   /** Append `s` to `b` as a JSON string literal; runs of characters that

@@ -42,9 +42,17 @@ object DocumentReader {
       .select(
         col("path"),
         element_at(split(col("path"), "/"), -1).as("source_filename"),
-        lower(regexp_extract(col("path"), "(\\.[^./]+)$", 1)).as("ext"),
+        extension(col("path")).as("ext"),
         col("length").as("size_bytes"),
         col("content"))
+
+  /** The extension of `path` with its dot, lowercased in ASCII only:
+    * every extension the whitelist and the format dispatch name is
+    * ASCII, and Spark's `lower` loads ICU case mapping on its first use
+    * in a JVM (~1.4 s). */
+  private[sources] def extension(path: Column): Column =
+    translate(regexp_extract(path, "(\\.[^./]+)$", 1),
+      "ABCDEFGHIJKLMNOPQRSTUVWXYZ", "abcdefghijklmnopqrstuvwxyz")
 
   /** S6: a file with an unknown extension is text iff its first 1 KB
     * decodes as UTF-8. */

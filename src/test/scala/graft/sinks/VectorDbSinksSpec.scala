@@ -44,6 +44,18 @@ class VectorDbSinksSpec extends AnyFunSuite with graft.SharedSpark {
     assert(pine.contains(Uuid5.ofParts("job1", 7L, 0)) && qd.contains(Uuid5.ofParts("job1", 7L, 0)))
   }
 
+  test("a non-finite vector component fails the body, naming the record and the component") {
+    for (shape <- Seq(VectorDbSinks.Pinecone, VectorDbSinks.Qdrant, VectorDbSinks.Weaviate,
+        VectorDbSinks.Webhook); bad <- Seq(Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity)) {
+      val records = Seq(rec, VectorRecord("rec-7", "t", "d", Array(0.5f, bad)))
+      val err = intercept[IllegalArgumentException](shape.body(records, "job1", 7L, 0))
+      assert(err.getMessage.contains(s"record rec-7 vector has a non-finite component '$bad' at position 1"),
+        err.getMessage)
+    }
+    // a finite body is unchanged
+    assert(VectorDbSinks.Qdrant.body(Seq(rec), "job1", 7L, 0) == s"""{"points":[${entry(VectorDbSinks.Qdrant)}]}""")
+  }
+
   test("unsupported DB types are rejected like the reference dispatch") {
     assert(VectorDbSinks.shapeFor("QDRANT") == VectorDbSinks.Qdrant)
     val e = intercept[IllegalArgumentException](VectorDbSinks.shapeFor("MILVUS"))

@@ -42,6 +42,34 @@ class DocumentReaderSpec extends AnyFunSuite with graft.SharedSpark {
     assert(observed.getAs[Long]("invalid_type_files") == 1) // binary.bin
   }
 
+  test("upper- and mixed-case extensions pass the whitelist and dispatch; " +
+      "a non-ASCII extension is still sniffed") {
+    val dir = Files.createTempDirectory("intake-case")
+    Files.write(dir.resolve("REPORT.PDF"), Array[Byte](0x25, 0x50, 0x44, 0x46, 1, 2, 3))
+    Files.writeString(dir.resolve("Notes.Md"), "# title\nbody")
+    Files.writeString(dir.resolve("PAGE.HTML"), "<p>hi</p>")
+    val rows = DocumentReader.intake(spark, dir.toString)
+      .collect().map(r => r.getString(1) -> r.getString(2)).toMap
+    assert(rows.keySet == Set("REPORT.PDF", "Notes.Md", "PAGE.HTML"))
+    assert(rows("REPORT.PDF").startsWith("[pdf:"))
+    assert(rows("Notes.Md") == "# title\nbody")
+    assert(rows("PAGE.HTML") == "'<p>hi</p>'")
+
+    // non-ASCII names, as paths (not files: the JVM's file-name charset
+    // may not encode them): only A-Z is lowercased, and an extension
+    // outside the whitelist is decided by the UTF-8 sniff
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val text = "sniffed prose".getBytes("UTF-8")
+    val binary = Array.tabulate[Byte](64)(i => (0x80 | i).toByte)
+    val decided = Seq(("/d/data.\u00c4\u00d6", text), ("/d/blob.\u00c9X", binary), ("/d/a.TxT", binary))
+      .toDF("path", "content")
+      .select(DocumentReader.extension(col("path")).as("ext"), col("content"))
+      .select(col("ext"), DocumentReader.isValidType(col("ext"), col("content")))
+      .collect().map(r => r.getString(0) -> r.getBoolean(1)).toSeq
+    assert(decided == Seq(".\u00c4\u00d6" -> true, ".\u00c9x" -> false, ".txt" -> true))
+  }
+
   test("pythonRepr matches Python repr() on tricky strings") {
     // python: repr("plain") == "'plain'"
     assert(DocumentReader.pythonRepr("plain") == "'plain'")
