@@ -117,11 +117,14 @@ sealed abstract class HttpEmbedder(url: String, override val maxBatchSize: Int,
   private[pipeline] def parseResponse(body: String, n: Int): IndexedSeq[Array[Float]]
 
   /** `head`, then `texts` as a JSON array of strings, then `tail`: one
-    * builder sized to the finished body. */
+    * builder sized for the finished body. Escapes lengthen a text; the
+    * 1/16 spare covers one escaped char in 16 without growing the
+    * builder (measuring each text's escapes first costs more than a
+    * rare regrowth). */
   protected final def textsBody(head: String, texts: IndexedSeq[String], tail: String): String = {
-    var size = head.length + texts.length + 1 + tail.length
-    texts.foreach(t => size += VectorDbSinks.quotedLength(t))
-    val b = new java.lang.StringBuilder(size).append(head).append('[')
+    var size = head.length + tail.length + 2
+    texts.foreach(t => size += t.length + 3)
+    val b = new java.lang.StringBuilder(size + size / 16).append(head).append('[')
     var k = 0
     while (k < texts.length) {
       if (k > 0) b.append(',')

@@ -41,11 +41,12 @@ object VectorDbSinks {
       * from `first`, wrapped in this store's envelope. */
     final def body(records: Iterable[VectorRecord], jobId: String, batchId: Long, first: Int): String = {
       // every float prints in at most 15 chars ("-1.17549435E-38"); the
-      // fixed parts of an entry and the envelope stay under 160 chars
-      var size = prefix.length + 160 + quotedLength(jobId)
+      // fixed parts of an entry and the envelope stay under 160 chars.
+      // Escapes in the strings may still grow the builder once.
+      var size = prefix.length + 160 + jobId.length
       records.foreach { r =>
-        size += 160 + quotedLength(r.id) + quotedLength(r.source_text) +
-          quotedLength(r.source_document) + 16 * r.vector.length
+        size += 160 + r.id.length + r.source_text.length + r.source_document.length +
+          16 * r.vector.length
       }
       val b = new JStringBuilder(size).append(prefix)
       var k = 0
@@ -209,19 +210,6 @@ object VectorDbSinks {
     val b = new JStringBuilder(s.length + 8)
     q(b, s)
     b.toString
-  }
-
-  /** The length of `s` as a JSON string literal (see [[q]]). */
-  private[graft] def quotedLength(s: String): Int = {
-    var n = s.length + 2
-    var k = 0
-    while (k < s.length) {
-      val c = s.charAt(k)
-      if (c == '"' || c == '\\' || c == '\n' || c == '\r' || c == '\t') n += 1
-      else if (c < ' ') n += 5
-      k += 1
-    }
-    n
   }
 
   /** Append `s` to `b` as a JSON string literal; runs of characters that
