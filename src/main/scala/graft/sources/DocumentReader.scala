@@ -49,7 +49,7 @@ object DocumentReader {
   /** The extension of `path` with its dot, lowercased in ASCII only:
     * every extension the whitelist and the format dispatch name is
     * ASCII, and Spark's `lower` loads ICU case mapping on its first use
-    * in a JVM (~1.4 s). */
+    * in a JVM, a cold start the intake does not need. */
   private[sources] def extension(path: Column): Column =
     translate(regexp_extract(path, "(\\.[^./]+)$", 1),
       "ABCDEFGHIJKLMNOPQRSTUVWXYZ", "abcdefghijklmnopqrstuvwxyz")
