@@ -44,6 +44,9 @@ object ChunkStrategy {
   *    steps back;
   *  - the paragraph token chunker decodes concatenated per-paragraph
   *    token lists, so the '\n\n' separators vanish from the output text.
+  *    Here the chunk text is its paragraphs concatenated as cut from the
+  *    input: the same text under a lossless tokenizer, and a lone
+  *    surrogate that a BPE byte fallback would turn into '?' survives.
   *
   * Divergence from the reference (guarded, not replicated): overlap >=
   * chunk_size would make the EXACT step non-positive and loop forever
@@ -105,17 +108,18 @@ object Chunkers {
     // size=1); one-token minimum guarantees progress
     val checkBound = math.max(1, (bound * size).toInt)
     val paragraphs = ParagraphSplit.split(joined, -1)
-    val tokenized = paragraphs.map(p => tok.encode(p))
+    val counts = paragraphs.map(p => tok.count(p))
     val out = new ArrayBuffer[Chunk]()
     var startIdx = 0
-    while (startIdx < tokenized.length) {
-      val current = new ArrayBuffer[String]()
-      while (current.length < checkBound && startIdx < tokenized.length) {
-        current ++= tokenized(startIdx)
+    while (startIdx < paragraphs.length) {
+      val from = startIdx
+      var nTokens = 0
+      while (nTokens < checkBound && startIdx < paragraphs.length) {
+        nTokens += counts(startIdx)
         startIdx += 1
       }
-      val currentText = tok.decode(current.toSeq)
-      if (current.length > size) {
+      val currentText = paragraphs.slice(from, startIdx).mkString
+      if (nTokens > size) {
         out ++= exact(Seq(currentText), size, overlap, tok)
       } else {
         // quirk: label is "exact" and the position is the *paragraph*

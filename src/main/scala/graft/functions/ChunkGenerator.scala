@@ -3,14 +3,17 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{ChunkStrategy, Chunkers}
 
-/** The chunker as a SQL table function (Catalyst `Generator`): one
-  * document row in, N chunk rows out —
+/** The chunker as a Catalyst `Generator`: one document row in, N chunk
+  * rows `(chunk_seq, chunk_id, chunk_text)` out, for any
+  * [[ChunkStrategy]] including `Custom`. The DataFrame API builds it
+  * with [[graft.operators.Chunking.chunks]]; SQL reaches it as a table
+  * function —
   *
   * {{{
   * SELECT doc_id, c.chunk_seq, c.chunk_id, c.chunk_text
@@ -18,51 +21,33 @@ import graft.core.{ChunkStrategy, Chunkers}
   * LATERAL VIEW chunk_text(text, 'EXACT', 32, 8) c AS chunk_seq, chunk_id, chunk_text
   * }}}
   *
-  * This is the reference's CUSTOM-chunker UDTF surface (T1/F5,
-  * README.md:214-223) exposed to SQL users. Strategy/size/overlap must
-  * be foldable (literals) — they configure the generator, they don't
-  * vary per row. Generators sit outside expression codegen by design
-  * (they produce rows, not values), hence CodegenFallback.
+  * the reference's CUSTOM-chunker UDTF surface (T1/F5, README.md:214-223)
+  * exposed to SQL users. Strategy, size and overlap configure the
+  * generator, they don't vary per row. Generators sit outside expression
+  * codegen by design (they produce rows, not values), hence
+  * CodegenFallback. A null text yields no rows.
   */
-case class ChunkGenerator(text: Expression, strategy: Expression,
-                          size: Expression, overlap: Expression)
-    extends Generator with CodegenFallback {
+case class ChunkGenerator(text: Expression, strategy: ChunkStrategy,
+                          size: Int, overlap: Int)
+    extends Generator with UnaryLike[Expression] with CodegenFallback {
 
-  override def children: Seq[Expression] = Seq(text, strategy, size, overlap)
+  override def child: Expression = text
 
   override def elementSchema: StructType = StructType(Seq(
     StructField("chunk_seq", IntegerType, nullable = false),
     StructField("chunk_id", StringType, nullable = false),
     StructField("chunk_text", StringType, nullable = false)))
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    if (!strategy.foldable || !size.foldable || !overlap.foldable)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        "chunk_text(text, strategy, size, overlap): strategy/size/overlap must be literals")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
-
-  @transient private lazy val resolvedStrategy: ChunkStrategy =
-    ChunkStrategy.fromString(strategy.eval(InternalRow.empty).toString)
-  @transient private lazy val sizeV: Int =
-    size.eval(InternalRow.empty).asInstanceOf[Number].intValue()
-  @transient private lazy val overlapV: Int =
-    overlap.eval(InternalRow.empty).asInstanceOf[Number].intValue()
-
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val t = text.eval(input)
     if (t == null) Nil
-    else {
-      val chunks = Chunkers.chunk(resolvedStrategy, Seq(t.toString), sizeV, overlapV)
-      chunks.iterator.zipWithIndex.map { case (c, i) =>
-        InternalRow(i, UTF8String.fromString(c.chunkId), UTF8String.fromString(c.text))
-      }
+    else Chunkers.chunk(strategy, Seq(t.toString), size, overlap).iterator.zipWithIndex.map {
+      case (c, i) => InternalRow(i, UTF8String.fromString(c.chunkId), UTF8String.fromString(c.text))
     }
   }
 
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(text = newChildren(0), strategy = newChildren(1),
-      size = newChildren(2), overlap = newChildren(3))
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(text = newChild)
 
   override def prettyName: String = "chunk_text"
 }

@@ -1624,7 +1624,7 @@ object GraftFunctions {
   // time; a column reference or wrong-typed literal must fail as a clean
   // analysis error naming the expectation, not a ClassCastException/NPE
   // from eval(InternalRow.empty)
-  private def countLit(fn: String, e: Expression): Int = {
+  private def countLit(fn: String, e: Expression, min: Int = 1): Int = {
     val v =
       if (e.foldable && e.dataType == org.apache.spark.sql.types.IntegerType)
         e.eval(InternalRow.empty)
@@ -1634,7 +1634,7 @@ object GraftFunctions {
     if (v == null)
       analysisError(s"expected a foldable non-null INT literal argument, got $e")
     val n = v.asInstanceOf[Int]
-    if (n < 1) analysisError(s"$fn needs an INT argument >= 1, got $n")
+    if (n < min) analysisError(s"$fn needs an INT argument >= $min, got $n")
     n
   }
 
@@ -1669,7 +1669,9 @@ object GraftFunctions {
         (e => classifierScore(c(e(0)), countLit("classifier_score", e(1)))),
       "unicode_norm" -> (e => unicodeNorm(c(e(0)),
         stringLit(e(1), "one of 'NFC', 'NFD', 'NFKC', 'NFKD'"))),
-      "chunk_text" -> (e => c(ChunkGenerator(e(0), e(1), e(2), e(3))))
+      "chunk_text" -> (e => graft.operators.Chunking.chunks(c(e(0)),
+        graft.core.ChunkStrategy.fromString(stringLit(e(1), "a chunk strategy name")),
+        countLit("chunk_text", e(2)), countLit("chunk_text", e(3), min = 0)))
     ).map { case (name, f) => name -> f.andThen(ColumnBridge.expression) }
   }
 

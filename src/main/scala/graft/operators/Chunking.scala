@@ -2,46 +2,31 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
-import graft.core.{Chunk, ChunkStrategy, Chunkers, Tokenizer, Tokenizers}
+import graft.core.ChunkStrategy
+import graft.functions.ChunkGenerator
 
 /** DataFrame-level chunking: one document row in, N chunk rows out
   * (the reference's extract→chunk stages, SURVEY.md §2.2-2.3).
   *
-  * Two execution paths:
-  *
-  *  - [[exactByCharsColumns]]: EXACT_BY_CHARACTERS expressed in pure
-  *    Catalyst (`sequence` + `substring` + `posexplode`) — whole-stage
-  *    codegen, no serialization boundary, the 100 TB path. Verified
-  *    byte-identical to the Scala chunker by ChunkingSpec.
-  *  - [[chunkUdf]]: the token-based strategies (BPE windows are not
-  *    expressible in Catalyst) as one UDF returning the chunk array,
-  *    exploded by the caller. The UDF is a pure function of (text,
-  *    config) so Spark task retries are safe.
+  *  - [[chunks]]: every strategy, `Custom` included, through the one
+  *    chunk generator ([[ChunkGenerator]], also SQL's `chunk_text`).
+  *    Its rows are `(chunk_seq, chunk_id, chunk_text)`; the chunkers
+  *    are pure functions of (text, config), so Spark task retries are
+  *    safe.
+  *  - [[exactByCharsColumns]]: EXACT_BY_CHARACTERS windows (start,
+  *    text, no chunk id) in pure Catalyst (`sequence` + `substring` +
+  *    `explode`): whole-stage codegen, no serialization boundary.
+  *    Verified byte-identical to the Scala chunker by ChunkingSpec.
   */
 object Chunking {
 
-  /** Chunk array column via the pure-Scala chunkers (any strategy). */
-  def chunkUdf(strategy: ChunkStrategy, size: Int, overlap: Int,
-               tok: Tokenizer = Tokenizers.default): Column = {
-    val f = udf { (text: String) =>
-      if (text == null) Array.empty[Chunk]
-      else Chunkers.chunk(strategy, Seq(text), size, overlap, tok).toArray
-    }
-    f(col("text"))
-  }
-
-  /** documents(doc_id, text, ...) -> chunks(doc_id, chunk_seq, chunk_id,
-    * chunk_text) using the UDF path. */
-  def chunkDocuments(docs: DataFrame, strategy: ChunkStrategy,
-                     size: Int, overlap: Int): DataFrame =
-    docs
-      .select(col("doc_id"), posexplode(chunkUdf(strategy, size, overlap)))
-      .select(
-        col("doc_id"),
-        col("pos").as("chunk_seq"),
-        col("col.chunkId").as("chunk_id"),
-        col("col.text").as("chunk_text"))
+  /** One chunk row per chunk of `text`, for use in `select`:
+    * `docs.select(col("doc_id"), Chunking.chunks(col("text"), ...))`
+    * adds `chunk_seq`, `chunk_id` and `chunk_text`. */
+  def chunks(text: Column, strategy: ChunkStrategy, size: Int, overlap: Int): Column =
+    ColumnBridge.column(ChunkGenerator(ColumnBridge.expression(text), strategy, size, overlap))
 
   /** EXACT_BY_CHARACTERS in pure Catalyst: window starts are
     * `sequence(0, length-1, step)` (Python `range(0, len, step)`), the

@@ -56,10 +56,26 @@ object Dedup {
       col(idCol).as("id"),
       graft.functions.GraftFunctions.ngramStrings(col(textCol), n).as("shingles"))
 
-  /** Exact dedup, keep-first: one row per distinct text (minimum id
-    * wins). The shuffle key is the sha256 digest, not the document. */
+  /** The exact-dedup key: the SHA-256 digest of the text, so the
+    * shuffle carries 64 hex chars, not the document. */
+  private def textDigest(textCol: String): Column = sha2(col(textCol), 256)
+
+  /** Exact dedup, keep-first: of the rows with the same text, the one
+    * with the lowest `idCol` survives, whole. No window: the row_number
+    * form shuffles and then SORTS full text rows under the digest key;
+    * the min_by aggregation consumes `df` once (a second consumer would
+    * re-run an un-persisted upstream), partial-aggregates map-side (one
+    * winner candidate per digest per partition crosses the wire), and
+    * needs no per-group sort. */
+  def keepFirst(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.groupBy(textDigest(textCol).as("__dig"))
+      .agg(min_by(struct(df.columns.map(col).toIndexedSeq: _*), col(idCol)).as("__w"))
+      .select(df.columns.map(c => col("__w").getField(c).as(c)).toIndexedSeq: _*)
+
+  /** The [[keepFirst]] groups summarised: one row per distinct text with
+    * its kept (lowest) id and copy count. */
   def exactKeepFirst(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.groupBy(sha2(col(textCol), 256).as("text_hash"))
+    df.groupBy(textDigest(textCol).as("text_hash"))
       .agg(min(col(idCol)).as("kept_id"), count(lit(1)).as("n_copies"))
 
   /** All-pairs n-gram Jaccard ≥ threshold via inverted shingle index.

@@ -41,10 +41,7 @@ object CuratePipeline {
     val quality = docs.filter(TextAnalysis.qualityScore(col("text")) >= minQuality).persist()
     val nQuality = quality.count()
 
-    // exact dedup keep-first: survivors join back to their rows
-    val kept = Dedup.exactKeepFirst(quality, "doc_id", "text")
-      .select(col("kept_id").as("doc_id"))
-    val exact = quality.join(kept, "doc_id").persist()
+    val exact = Dedup.keepFirst(quality, "doc_id", "text").persist()
     val nExact = exact.count()
 
     // near-dup removal: drop the higher id of every ≥-threshold pair

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import scala.util.{Failure, Success}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.core.{ChunkStrategy, Uuid5}
@@ -36,13 +36,7 @@ object EmbedPipeline {
                  size: Int, overlap: Int): Dataset[ChunkRow] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs
-      .select(col("doc_id"), col("source"), posexplode(Chunking.chunkUdf(strategy, size, overlap)))
-      .select(
-        col("doc_id"), col("source"),
-        col("pos").as("chunk_seq"),
-        col("col.chunkId").as("chunk_id"),
-        col("col.text").as("chunk_text"))
+    docs.select(col("doc_id"), col("source"), Chunking.chunks(col("text"), strategy, size, overlap))
       .as[ChunkRow]
   }
 
@@ -101,18 +95,22 @@ object EmbedPipeline {
     })
   }
 
-  /** A1 ledger over status records: COMPLETED when every batch
-    * succeeded, FAILED when none did, else PARTIALLY_COMPLETED. */
+  /** A1 job status from a job's batch outcomes
+    * (update_job_with_batch, job_service.py:32-51): COMPLETED when every
+    * batch succeeded, FAILED when none did, else PARTIALLY_COMPLETED. */
+  def jobStatus(succeeded: Column, total: Column): Column =
+    when(succeeded === total, "COMPLETED")
+      .when(succeeded > 0, "PARTIALLY_COMPLETED")
+      .otherwise("FAILED")
+
+  /** A1 ledger over status records, one batch per chunk. */
   def statusLedger(records: Dataset[StatusRecord]): DataFrame =
     records.toDF()
       .groupBy(col("source_document").as("job_id"))
       .agg(
         count(lit(1)).as("total_chunks"),
         sum(when(col("ok"), 1L).otherwise(0L)).as("chunks_succeeded"))
-      .withColumn("job_status",
-        when(col("chunks_succeeded") === col("total_chunks"), "COMPLETED")
-          .when(col("chunks_succeeded") > 0, "PARTIALLY_COMPLETED")
-          .otherwise("FAILED"))
+      .withColumn("job_status", jobStatus(col("chunks_succeeded"), col("total_chunks")))
 
   /** Jobs ledger from the embedded output: per-source batch accounting
     * (A1 semantics — COMPLETED / PARTIALLY_COMPLETED / FAILED). `ok`

@@ -944,15 +944,10 @@ object CurationQueries {
     * COMPOSITION — stage order, survivor sets, and the packed offsets —
     * against an independent engine. */
   def curatePack(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val d = documentsParallel(spark, dir).select(col("doc_id"), col("text"))
     val planted = d.unionAll(d.withColumn("doc_id", col("doc_id") + 1000000L))
     val quality = planted.filter(TextAnalysis.qualityScore(col("text")) >= 0.3)
-    // keep-first: one shuffle on the 32-byte digest, not the text
-    val kept = quality
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(sha2(col("text"), 256)).orderBy(col("doc_id"))))
-      .filter(col("__rn") === 1).drop("__rn")
+    val kept = Dedup.keepFirst(quality, "doc_id", "text")
     val bench = d.filter(col("doc_id") % 25 === 0)
       .select(array_join(slice(split(col("text"), " "), 1, 60), " ").as("bench_text"))
     val bits = graft.operators.Bloom.ngramFilter(bench, "bench_text", n = 8)
@@ -1342,17 +1337,7 @@ object CurationQueries {
     val lm = TextAnalysis.bigramLmScore(cleaned, "doc_id", "text")
     val gated = cleaned.join(
       lm.filter(col("nll") <= 3.45).select(col("doc_id")), "doc_id")
-    // keep-first by content digest WITHOUT a window: the row_number form
-    // shuffles and then SORTS full text rows under the digest key; the
-    // min_by aggregation consumes `gated` once (a second consumer would
-    // re-run the un-persisted LM scoring pipeline), partial-aggregates
-    // map-side (one winner candidate per digest per partition crosses
-    // the wire), and needs no per-group sort
-    val kept = ckpt(gated
-      .groupBy(sha2(col("text"), 256).as("__dig"))
-      .agg(min_by(struct(col("doc_id"), col("text")), col("doc_id")).as("__w"))
-      .select(col("__w.doc_id").as("doc_id"), col("__w.text").as("text")),
-      "kept")
+    val kept = ckpt(Dedup.keepFirst(gated, "doc_id", "text"), "kept")
     graft.operators.Packing.vocabEncode(kept, "doc_id", "text", seqLen = 128)
       .orderBy(col("seq_id"))
   }

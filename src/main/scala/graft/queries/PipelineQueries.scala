@@ -29,7 +29,7 @@ object PipelineQueries {
       .withColumn("chunk_start", col("chunk_start").cast("long"))
       .orderBy(col("doc_id"), col("chunk_start"))
 
-  /** T2 EXACT token windows via the chunker UDF. Hash-checked: on this
+  /** T2 EXACT token windows via the chunk generator. Hash-checked: on this
     * corpus (single-space lowercase words, all under the 16-char
     * sub-piece bound) the stand-in tokenizer reduces to
     * `regexp_extract_all(text, ' ?[a-z]+')`, so DuckDB retokenizes and
@@ -37,8 +37,9 @@ object PipelineQueries {
     * chunk id is not SQL-recomputable (DuckDB has no sha1) and is
     * pinned by ChunkingSpec/golden tests instead. */
   def chunkExactTokens(spark: SparkSession, dir: String): DataFrame =
-    Chunking.chunkDocuments(documentsParallel(spark, dir), ChunkStrategy.Exact,
-        size = 32, overlap = 8)
+    documentsParallel(spark, dir)
+      .select(col("doc_id"),
+        Chunking.chunks(col("text"), ChunkStrategy.Exact, size = 32, overlap = 8))
       .select(col("doc_id"), col("chunk_seq").cast("long").as("chunk_seq"),
         col("chunk_text"))
       .orderBy(col("doc_id"), col("chunk_seq"))
@@ -49,8 +50,9 @@ object PipelineQueries {
     * exercise the EXACT fallback (24-token windows, step 20), short
     * ones the single-sentence branch. */
   def chunkSentences(spark: SparkSession, dir: String): DataFrame =
-    Chunking.chunkDocuments(documentsParallel(spark, dir), ChunkStrategy.Sentence,
-        size = 24, overlap = 4)
+    documentsParallel(spark, dir)
+      .select(col("doc_id"),
+        Chunking.chunks(col("text"), ChunkStrategy.Sentence, size = 24, overlap = 4))
       .select(col("doc_id"), col("chunk_seq").cast("long").as("chunk_seq"),
         col("chunk_text"))
       .orderBy(col("doc_id"), col("chunk_seq"))
@@ -65,8 +67,7 @@ object PipelineQueries {
 
   /** A1 `update_job_with_batch` ledger semantics: jobs = sources, batches
     * = documents; a batch deterministically "fails" when doc_id % 37 == 0.
-    * COMPLETED when all succeed, FAILED when none do, else
-    * PARTIALLY_COMPLETED (reference job_service.py:32-51). */
+    * Status by [[graft.pipeline.EmbedPipeline.jobStatus]]. */
   def jobLedger(spark: SparkSession, dir: String): DataFrame =
     documentsParallel(spark, dir)
       .withColumn("ok", when(col("doc_id") % 37 =!= 0, 1L).otherwise(0L))
@@ -75,9 +76,7 @@ object PipelineQueries {
         count(lit(1)).as("total_batches"),
         sum(col("ok")).as("batches_succeeded"))
       .withColumn("job_status",
-        when(col("batches_succeeded") === col("total_batches"), "COMPLETED")
-          .when(col("batches_succeeded") > 0, "PARTIALLY_COMPLETED")
-          .otherwise("FAILED"))
+        graft.pipeline.EmbedPipeline.jobStatus(col("batches_succeeded"), col("total_batches")))
       .orderBy(col("job_id"))
 
   /** A4 status lookup: the multi-job `POST /jobs/status` projection

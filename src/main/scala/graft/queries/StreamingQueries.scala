@@ -278,7 +278,7 @@ object StreamingQueries {
     * mean the stream must reproduce the batch result row for row. */
   def streamEmbedPipeline(spark: SparkSession, dir: String): DataFrame = {
     val docs = tableStream(spark, dir, "documents")
-    val vectors = graft.streaming.StreamingIngest.embedStream(
+    val vectors = graft.pipeline.EmbedPipeline.run(
       docs, embedder = new graft.pipeline.Md5Embedder(64)).toDF()
     awaitMemorySink(vectors, "append")
       .select(col("source_document"), md5(col("source_text")).as("chunk_md5"),

@@ -32,7 +32,8 @@ import graft.pipeline.VectorRecord
   *
   * Semantics:
   *  - every task buffers `batchSize` (default 128) rows per POST, the
-  *    reference's micro-batch size, each POST retried with backoff;
+  *    reference's micro-batch size, each POST tried up to 3 times with
+  *    backoff;
   *  - up to 4 batches are in flight per task, each encoded and POSTed
   *    off the task thread ([[InFlight]], the loop the embed stage also
   *    uses); `abort`/`close` drop only unsent rows and wait for the
@@ -87,8 +88,7 @@ private[sinks] class VectorDbTable extends Table with SupportsWrite {
       apiKey = opts.getOrDefault("apiKey", ""),
       shapeName = require(opts, "shape"),
       jobId = opts.getOrDefault("jobId", "job"),
-      batchSize = opts.getOrDefault("batchSize", Sinks.UpsertBatchSize.toString).toInt,
-      attempts = opts.getOrDefault("attempts", "3").toInt)
+      batchSize = opts.getOrDefault("batchSize", Sinks.UpsertBatchSize.toString).toInt)
     // fail fast on an unknown shape at planning time, not mid-task
     VectorDbSinks.formatShape(conf.shapeName)
     val schema = info.schema()
@@ -108,7 +108,7 @@ private[sinks] class VectorDbTable extends Table with SupportsWrite {
 
 private[sinks] final case class VdbWriteConf(url: String, apiKey: String,
                                              shapeName: String, jobId: String,
-                                             batchSize: Int, attempts: Int)
+                                             batchSize: Int)
   extends Serializable
 
 private[sinks] final case class VdbCommit(uploaded: Long, failed: Long)
@@ -181,7 +181,7 @@ private[sinks] class VdbDataWriter(conf: VdbWriteConf, schema: StructType,
     i += batch.length
     upserts.submit((VectorDbSinks.postWithRetry(client, url, headers,
       shape.body(batch, conf.jobId, partitionId.toLong, first),
-      conf.attempts, baseDelayMs = 200L).isRight, batch.length))
+      VdbDataWriter.Attempts, baseDelayMs = 200L).isRight, batch.length))
   }
 
   private def count(upsert: (Boolean, Int)): Unit =
@@ -205,4 +205,9 @@ private[sinks] class VdbDataWriter(conf: VdbWriteConf, schema: StructType,
   }
 
   override def close(): Unit = upserts.close()
+}
+
+private object VdbDataWriter {
+  /** Tries per POST, the first included. */
+  val Attempts = 3
 }

@@ -4,8 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
-import graft.core.ChunkStrategy
-import graft.pipeline.{EmbedPipeline, Embedder, HashEmbedder, VectorRecord}
+import graft.pipeline.{EmbedPipeline, VectorRecord}
 
 /** Streaming mode of the engine (SURVEY §2.8): the reference is a
   * queue-consumer pipeline with at-least-once delivery and independent
@@ -21,7 +20,9 @@ object StreamingIngest {
 
   /** Drop-directory ingestion: every file that lands becomes a document
     * row (path, content, ingest batch). `maxFilesPerTrigger` is the
-    * backpressure knob (the RabbitMQ prefetch analogue). */
+    * backpressure knob (the RabbitMQ prefetch analogue). The batch
+    * program, [[EmbedPipeline.run]], chunks and embeds the stream: only
+    * the source differs. */
   def readDocuments(spark: SparkSession, dropDir: String,
                     maxFilesPerTrigger: Int = 64): DataFrame =
     spark.readStream
@@ -32,14 +33,6 @@ object StreamingIngest {
         abs(xxhash64(input_file_name())).as("doc_id"),
         input_file_name().as("source"),
         col("value").as("text"))
-
-  /** Streaming chunk+embed: same stages as the batch pipeline — the
-    * DataFrame program is shared, only the source differs. */
-  def embedStream(docs: DataFrame, strategy: ChunkStrategy = ChunkStrategy.ExactByCharacters,
-                  size: Int = 256, overlap: Int = 128,
-                  embedder: Embedder = new HashEmbedder(64)): Dataset[VectorRecord] =
-    EmbedPipeline.embedStage(
-      EmbedPipeline.chunkStage(docs, strategy, size, overlap), embedder)
 
   /** Start the ingestion: vectors written to a parquet store laid out
     * as one `batch=N` partition directory per micro-batch (so a

@@ -38,8 +38,9 @@ class RobustnessSpec extends AnyFunSuite with graft.SharedSpark {
       (4L, "短 文"),
       (5L, "one"))
       .toDF("doc_id", "text")
-    // UDF chunker: null -> no chunks, empty -> no chunks
-    val chunks = Chunking.chunkDocuments(docs, ChunkStrategy.Exact, 8, 0).collect()
+    // chunk generator: null -> no chunks, empty -> no chunks
+    val chunks = docs.select(col("doc_id"), Chunking.chunks(col("text"), ChunkStrategy.Exact, 8, 0))
+      .collect()
     assert(!chunks.exists(r => r.getLong(0) == 3L))
     assert(chunks.exists(r => r.getLong(0) == 4L))
     // text profile: null text yields null stats, not a crash

@@ -45,6 +45,36 @@ class TokenOffsetsSpec extends AnyFunSuite {
     }
   }
 
+  /** PARAGRAPH as it was written before: decode each chunk's
+    * concatenated per-paragraph token lists. */
+  private def decodedParagraphs(text: String, size: Int, tok: Tokenizer): Vector[String] = {
+    val tokenized = text.split("\n\n", -1).map(p => tok.encode(p))
+    val out = Vector.newBuilder[String]
+    var i = 0
+    while (i < tokenized.length) {
+      val current = scala.collection.mutable.ArrayBuffer.empty[String]
+      while (current.length < math.max(1, (0.75 * size).toInt) && i < tokenized.length) {
+        current ++= tokenized(i); i += 1
+      }
+      val t = tok.decode(current.toSeq)
+      out ++= (if (current.length > size) Chunkers.exact(Seq(t), size, 0, tok).map(_.text) else Seq(t))
+    }
+    out.result()
+  }
+
+  for ((name, tok, lone) <- Seq(("GraftTokenizer", GraftTokenizer, true), ("BpeTokenizer", Bpe, false))) {
+    test(s"$name: PARAGRAPH chunk texts equal the decoded token lists") {
+      check(Prop.forAll(text(lone), Gen.choose(1, 40)) { (s, size) =>
+        Chunkers.paragraph(Seq(s), size, 0, tok = tok).map(_.text) == decodedParagraphs(s, size, tok)
+      }, cases = 300)
+    }
+  }
+
+  test("BpeTokenizer: PARAGRAPH chunks keep a lone surrogate") {
+    val chunks = Chunkers.paragraph(Seq("text \ud800 tex\n\ntest \udc00"), 100, 0, tok = Bpe)
+    assert(chunks.map(_.text) == Vector("text \ud800 textest \udc00"))
+  }
+
   test("uuid5 of streamed parts equals uuid5 of the joined name") {
     check(Prop.forAll(Gen.listOf(Gen.oneOf(text(loneSurrogates = true).map(t => t: Any), Gen.long.map(l => l: Any),
         Gen.choose(-5, 5000).map(i => i: Any)))) { parts =>

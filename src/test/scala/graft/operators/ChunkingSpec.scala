@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{ChunkStrategy, Chunkers}
@@ -24,9 +25,9 @@ class ChunkingSpec extends AnyFunSuite with graft.SharedSpark {
     fromScala.foreach { case (id, want) => assert(fromDf(id) == want, s"doc $id") }
   }
 
-  test("UDF chunker path == pure-Scala chunker, text and chunk ids") {
+  test("chunk generator == pure-Scala chunker, text and chunk ids") {
     val docs = graft.Tables.documents(spark, sfDir).select("doc_id", "text").limit(50)
-    val fromDf = Chunking.chunkDocuments(docs, ChunkStrategy.Exact, 32, 8)
+    val fromDf = docs.select(col("doc_id"), Chunking.chunks(col("text"), ChunkStrategy.Exact, 32, 8))
       .collect()
       .groupBy(_.getLong(0))
       .view.mapValues(_.sortBy(_.getInt(1)).map(r => (r.getString(2), r.getString(3))).toVector).toMap
@@ -42,7 +43,7 @@ class ChunkingSpec extends AnyFunSuite with graft.SharedSpark {
     // (windows of 32, step 24), so the full-corpus counts are pinned
     // without a DuckDB oracle
     val docs = graft.Tables.documents(spark, sfDir).select("doc_id", "text")
-    val actual = Chunking.chunkDocuments(docs, ChunkStrategy.Exact, 32, 8)
+    val actual = docs.select(col("doc_id"), Chunking.chunks(col("text"), ChunkStrategy.Exact, 32, 8))
       .groupBy("doc_id").count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val tok = graft.core.Tokenizers.default

@@ -1,9 +1,10 @@
 package graft.operators
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.ChunkStrategy
+import graft.core.{Chunk, ChunkStrategy, Chunkers}
 import graft.functions.GraftFunctions
 
 class SqlSurfaceSpec extends AnyFunSuite with graft.SharedSpark {
@@ -12,19 +13,33 @@ class SqlSurfaceSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("LATERAL VIEW chunk_text == DataFrame chunker path") {
     GraftFunctions.register(spark)
-    graft.Tables.documents(spark, dir).limit(50).createOrReplaceTempView("docs_v")
-    val viaSql = spark.sql(
-      """SELECT doc_id, c.chunk_seq, c.chunk_id, c.chunk_text
-        |FROM docs_v
-        |LATERAL VIEW chunk_text(text, 'EXACT', 32, 8) c AS chunk_seq, chunk_id, chunk_text
-        |ORDER BY doc_id, chunk_seq""".stripMargin).collect()
-    val viaDf = Chunking.chunkDocuments(
-        graft.Tables.documents(spark, dir).limit(50), ChunkStrategy.Exact, 32, 8)
-      .orderBy(col("doc_id"), col("chunk_seq")).collect()
-    assert(viaSql.length == viaDf.length && viaSql.nonEmpty)
-    viaSql.zip(viaDf).foreach { case (a, b) =>
-      assert(a.getLong(0) == b.getLong(0) && a.getInt(1) == b.getInt(1) &&
-        a.getString(2) == b.getString(2) && a.getString(3) == b.getString(3))
+    import spark.implicits._
+    // the sf0.001 texts have no paragraph or sentence breaks; two planted
+    // documents give the paragraph/sentence strategies something to split
+    val texts = graft.Tables.documents(spark, dir).limit(50).select("doc_id", "text")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toSeq ++ Seq(
+        -1L -> "First one. Second one!\n\nA new paragraph\u2026 and more.\n\n\n\nEnd.",
+        -2L -> ("word " * 300 + "\n\n" + "tail end. " * 40))
+    val docs = texts.toDF("doc_id", "text")
+    docs.createOrReplaceTempView("docs_v")
+    def byDoc(rows: Array[Row]) = rows.groupBy(_.getLong(0)).view
+      .mapValues(_.sortBy(_.getInt(1)).map(r => Chunk(r.getString(3), r.getString(2))).toVector).toMap
+    for ((name, size, overlap) <- Seq(("EXACT", 32, 8), ("EXACT_BY_CHARACTERS", 200, 0),
+        ("PARAGRAPH", 64, 8), ("PARAGRAPH_BY_CHARACTERS", 300, 20),
+        ("SENTENCE", 24, 4), ("SENTENCE_BY_CHARACTERS", 80, 0))) {
+      val viaSql = byDoc(spark.sql(
+        s"""SELECT doc_id, c.chunk_seq, c.chunk_id, c.chunk_text
+           |FROM docs_v
+           |LATERAL VIEW chunk_text(text, '$name', $size, $overlap) c AS chunk_seq, chunk_id, chunk_text
+           |""".stripMargin).collect())
+      val strategy = ChunkStrategy.fromString(name)
+      val viaDf = byDoc(docs.select(col("doc_id"),
+        Chunking.chunks(col("text"), strategy, size, overlap)).collect())
+      assert(viaSql.nonEmpty && viaSql == viaDf, name)
+      texts.foreach { case (id, text) =>
+        assert(viaSql.getOrElse(id, Vector.empty) == Chunkers.chunk(strategy, Seq(text), size, overlap),
+          s"$name doc $id")
+      }
     }
   }
 

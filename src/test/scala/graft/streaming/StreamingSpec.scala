@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.pipeline.EmbedPipeline
+
 class StreamingSpec extends AnyFunSuite with graft.SharedSpark {
 
   override protected def suiteConf = Seq(
@@ -19,7 +21,7 @@ class StreamingSpec extends AnyFunSuite with graft.SharedSpark {
     Files.writeString(Paths.get(drop, "doc_a.txt"), "spark table scan " * 40)
     Files.writeString(Paths.get(drop, "doc_b.txt"), "join filter merge " * 40)
 
-    val vectors = StreamingIngest.embedStream(
+    val vectors = EmbedPipeline.run(
       StreamingIngest.readDocuments(spark, drop))
     val q1 = StreamingIngest.start(vectors, out, ckpt, Some(ledger))
     q1.awaitTermination()
@@ -33,7 +35,7 @@ class StreamingSpec extends AnyFunSuite with graft.SharedSpark {
     // second file lands; restart from the same checkpoint -> only the new
     // file is processed (exactly-once over the drop dir)
     Files.writeString(Paths.get(drop, "doc_c.txt"), "stream window state " * 40)
-    val q2 = StreamingIngest.start(StreamingIngest.embedStream(
+    val q2 = StreamingIngest.start(EmbedPipeline.run(
       StreamingIngest.readDocuments(spark, drop)), out, ckpt, Some(ledger))
     q2.awaitTermination()
     val after = spark.read.parquet(out)
@@ -59,7 +61,7 @@ class StreamingSpec extends AnyFunSuite with graft.SharedSpark {
     try {
       def run(): Unit = {
         val q = StreamingIngest.startVectorDb(
-          StreamingIngest.embedStream(StreamingIngest.readDocuments(spark, drop)),
+          EmbedPipeline.run(StreamingIngest.readDocuments(spark, drop)),
           ckpt, s"http://127.0.0.1:${server.getAddress.getPort}", "key",
           graft.sinks.VectorDbSinks.Qdrant, jobId = "stream-job")
         q.awaitTermination()
